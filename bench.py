@@ -23,6 +23,25 @@ from end_end_data_pipeline__spark.plans.catalog import load_all
 from end_end_data_pipeline__spark.session import get_spark
 
 
+# Bench-only extras measured OUTSIDE the catalog: the engine-default
+# xxhash64 MinHash-LSH path.  The catalog/headline query runs the
+# md5 hash family so DuckDB can bit-replicate the whole pipeline
+# (the verifiability contract); users run the xxhash64 default, so
+# the bench reports that path too.  It is not a catalog query —
+# xxhash64 has no DuckDB twin, and a rows-only catalog entry would
+# weaken the 194/194 oracle-backed surface for a measurement we can
+# take directly.
+def _minhash_engine_default(spark, sfd):
+    from end_end_data_pipeline__spark.operators import dedup
+    from end_end_data_pipeline__spark.sources import lake
+
+    docs = lake.load_table(spark, "documents", sfd)
+    return dedup.minhash_lsh_pairs(
+        docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
+        verify_threshold=0.5, hash_family="xxhash64",
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -38,7 +57,9 @@ def main() -> None:
     # attributed: probe flat + headline up = code/plan regression;
     # probe up proportionally = context elevation (the r07-r09 drift
     # pattern).  Median of 3 after one untimed warm run; quiet-box
-    # reference ~0.6 s (measured at r10 calibration).
+    # reference ~0.6 s (measured at r10 calibration).  Read once before
+    # and once after the queries and reported as is: the run never
+    # waits on it.
     def _context_probe() -> float:
         job = lambda: spark.range(0, 4_000_000_000, 1, 64).selectExpr(
             "sum(bit_count(xxhash64(id))) as s"
@@ -51,77 +72,7 @@ def main() -> None:
             reps.append(time.perf_counter() - t0)
         return round(sorted(reps)[1], 3)
 
-    # Probe-FIRST admission (VERDICT r10 task 2): an elevated context
-    # must never again be the number of record.  Measure the probe
-    # BEFORE committing to the run; while it reads above the admission
-    # line, wait out the documented post-load decay and re-probe.  The
-    # wait is bounded (~6 min) so an unattended driver run still
-    # completes on a busy box — in that case probe_attempts in the
-    # output records that admission failed and the reading must be
-    # interpreted per the round-10 table.
-    #
-    # ADAPTIVE admission line (VERDICT r11 task 1): the original
-    # constant (1.25x a 0.60 s quiet reference measured at r10
-    # calibration) went vacuous when the box's ambient probe floor
-    # shifted to 0.75-1.34 s for all of r11 — a gate that can never
-    # admit discriminates nothing.  The line now tracks the box: 1.25x
-    # the rolling minimum of committed probe_attempts over the most
-    # recent bench artifacts (the box's demonstrated recent ambient
-    # floor), floored at the calibration constant so a genuinely quiet
-    # era restores the original line.  The reference used is reported
-    # in the output so every reading stays self-describing.
-    PROBE_ADMIT_FLOOR = 0.75  # 1.25 x the 0.60 s r10 quiet calibration
-
-    def _admit_line() -> tuple[float, float | None]:
-        """(admit_line_sec, rolling_min_or_None) from the 3 most recent
-        committed BENCH_r*.json probe_attempts histories."""
-        import glob
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        hist: list[tuple[int, list[float]]] = []
-        for f in glob.glob(os.path.join(here, "BENCH_r*.json")):
-            m_ = re.search(r"BENCH_r(\d+)\.json$", f)
-            if not m_:
-                continue
-            try:
-                with open(f) as fh:
-                    d = json.load(fh)
-            except Exception:
-                continue
-            # the driver wraps bench stdout: the JSON line lives inside
-            # a "tail" text field — unwrap it if present
-            if "probe_attempts" not in d and isinstance(d.get("tail"), str):
-                i = d["tail"].rfind('{"metric"')
-                if i >= 0:
-                    try:
-                        d = json.loads(d["tail"][i:])
-                    except Exception:
-                        continue
-            vals = [v for v in d.get("probe_attempts", [])
-                    if isinstance(v, (int, float))]
-            if vals:
-                hist.append((int(m_.group(1)), vals))
-        recent = sorted(hist, key=lambda t: -t[0])[:3]
-        if not recent:
-            return PROBE_ADMIT_FLOOR, None
-        rolling_min = min(v for _, vals in recent for v in vals)
-        return max(PROBE_ADMIT_FLOOR, round(1.25 * rolling_min, 3)), rolling_min
-
-    PROBE_ADMIT_SEC, probe_rolling_min = _admit_line()
-    probe_attempts = [_context_probe()]
-    while probe_attempts[-1] > PROBE_ADMIT_SEC and len(probe_attempts) < 6:
-        # plateau early-exit: post-load elevation DECAYS between
-        # probes (the documented r10 pattern); three consecutive
-        # readings within 10% mean the box's ambient baseline is
-        # simply above the admission line today, and more waiting
-        # cannot improve it — proceed, self-labelled unadmitted.
-        if (len(probe_attempts) >= 3
-                and max(probe_attempts[-3:])
-                <= 1.10 * min(probe_attempts[-3:])):
-            break
-        time.sleep(60)
-        probe_attempts.append(_context_probe())
-    context_probe_sec = probe_attempts[-1]
+    context_probe_sec = _context_probe()
     queries = {n: q for n, q in load_all().items() if q.bench}
 
     # Fixed measurement order (the BENCH_r01 sequence) so per-query
@@ -150,24 +101,6 @@ def main() -> None:
     # and do NOT move headline_total_sec
     pinned = [n for n in ordered if n in rank]
     extras = [n for n in ordered if n not in rank]
-
-    # Bench-only extras measured OUTSIDE the catalog: the engine-default
-    # xxhash64 MinHash-LSH path.  The catalog/headline query runs the
-    # md5 hash family so DuckDB can bit-replicate the whole pipeline
-    # (the verifiability contract); users run the xxhash64 default, so
-    # the bench reports that path too.  It is not a catalog query —
-    # xxhash64 has no DuckDB twin, and a rows-only catalog entry would
-    # weaken the 194/194 oracle-backed surface for a measurement we can
-    # take directly.
-    def _minhash_engine_default(spark, sfd):
-        from end_end_data_pipeline__spark.operators import dedup
-        from end_end_data_pipeline__spark.sources import lake
-
-        docs = lake.load_table(spark, "documents", sfd)
-        return dedup.minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
-            verify_threshold=0.5, hash_family="xxhash64",
-        )
 
     extra_fns = {"dedup_minhash_lsh_engine": _minhash_engine_default}
     extras = [*extras, *extra_fns]
@@ -198,10 +131,6 @@ def main() -> None:
         "extras_total_sec": round(sum(timings[n] for n in extras), 3),
         "context_probe_sec": context_probe_sec,
         "context_probe_end_sec": _context_probe(),
-        "probe_attempts": probe_attempts,
-        "probe_admit_line_sec": PROBE_ADMIT_SEC,
-        "probe_rolling_min_sec": probe_rolling_min,
-        "probe_admitted": context_probe_sec <= PROBE_ADMIT_SEC,
         "sf": sf,
     }
     print(json.dumps(out))

@@ -33,11 +33,15 @@ built entirely from boilerplate, the standard accepted trade
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from end_end_data_pipeline__spark.functions.arrays import explode_safe
 from end_end_data_pipeline__spark.operators.text import fingerprint, tokens
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -50,22 +54,26 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(tokens_col: Column, n: int = 3) -> Column:
+def shingles(tokens_col: str, n: int = 3) -> Column:
     """Distinct word n-grams (space-joined) over a **materialized** token
-    array column; empty array for documents shorter than ``n`` tokens.
+    array column, named by ``tokens_col``; empty array for documents
+    shorter than ``n`` tokens.
 
-    The argument must be a plain column reference, not the ``tokens(...)``
+    The argument is a plain column name, not the ``tokens(...)``
     expression inline: the lambda indexes the array with ``element_at``
     at every position, and Catalyst re-evaluates an inlined split per
     reference (higher-order lambdas run interpreted, outside codegen's
     common-subexpression elimination) — measured 13× slower inlined.
+    Anything but a plain identifier (a ``Column``, a dotted or
+    backticked name) raises ``ValueError``.
 
     r13: the expression is ONE ``F.expr`` parse (the py4j Column build
-    with its nested lambda cost ~0.2 s of driver wall per call); the
-    plain-reference contract above is what makes the name extraction
-    below sound."""
-    name = tokens_col._jc.toString()  # plain reference per the contract
-    c = f"`{name}`"
+    with its nested lambda cost ~0.2 s of driver wall per call)."""
+    if not isinstance(tokens_col, str) or not _IDENT.fullmatch(tokens_col):
+        raise ValueError(
+            f"shingles needs a plain column name, got {tokens_col!r}"
+        )
+    c = f"`{tokens_col}`"
     parts = ", ".join(f"element_at({c}, CAST(i + {j} AS INT))" for j in range(n))
     return F.expr(
         f"array_distinct(transform(CASE WHEN size({c}) >= {n}"
@@ -82,7 +90,7 @@ def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     every ``element_at`` (the 13× cliff again).  Short docs carry an
     empty array and vanish at the explode."""
     return df.select(F.col(id_col).alias("doc"), tokens(text_col).alias("__toks")).select(
-        "doc", shingles(F.col("__toks"), n).alias("sh")
+        "doc", shingles("__toks", n).alias("sh")
     )
 
 
@@ -276,7 +284,8 @@ def minhash_md5_constants(num_hashes: int) -> list[tuple[int, int]]:
     candidate excess for the two linear families).  XOR translation
     re-ranks the point set per i with no geometric structure; measured
     candidates match the xxhash64 family exactly (256 for 249 true
-    pairs at sf0.1 — scripts/minhash_retune.py).
+    pairs at sf0.1 — BASELINE.md, r07 band-retune follow-up under
+    "Headline set at derived sf1").
 
     Overflow: ``(2^32−1)·2^31 + (2^31−1) = 2^63 − 1`` — the maximum
     value EXACTLY fills signed 64-bit in both engines, never over.
@@ -321,7 +330,7 @@ def minhash_signatures(
     shingle agreed on whole bands.  Measured at sf0.1: 15,190 LSH
     candidates (K-M) / 7,890 (affine trial) for 249 true pairs vs 256
     with the XOR family — the candidate excess collapsed 61× → ~1×
-    (scripts/minhash_retune.py tracks it per round).
+    (BASELINE.md, r07 band-retune follow-up).
 
     ``doc_shingles`` (r12): pass a precomputed/materialized (doc, sh)
     frame to share the tokenize+shingle pass with another consumer

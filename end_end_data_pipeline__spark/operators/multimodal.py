@@ -934,7 +934,8 @@ def dhash256_bands(media: DataFrame, media_col: str, id_col: str) -> DataFrame:
     pigeonhole plan's saturation past 10^9 images — band-collision
     mass stays ~linear with corpus size (planted near-dups + content
     classes + a negligible birthday term; measured side-by-side in
-    BASELINE.md's band-saturation table, scripts/phash_band_saturation.py).
+    BASELINE.md's "Round-9: 64-bit vs 256-bit perceptual-hash band
+    saturation" table).
 
     Same decode path (real stdlib codecs), same bit rule
     ``bit(x, y) = gray(x+1, y) > gray(x, y)`` over the 17x16 grayscale
@@ -997,9 +998,9 @@ def phash_fixture_media(
     variant ``v = id MOD 3``; encoder round-robin PNG/BMP/PPM by v;
     variant 1 carries the planted one-pixel bump inside
     :func:`render_phash_image`).  Shared by ``multimodal_phash_neardup``
-    (9x8), ``multimodal_phash256_neardup`` (17x16), and
-    ``scripts/phash_band_saturation.py`` so the three can never drift;
-    both catalog oracles replay this closed form pixel-for-pixel."""
+    (9x8) and ``multimodal_phash256_neardup`` (17x16) so the two can
+    never drift; both catalog oracles replay this closed form
+    pixel-for-pixel."""
     import pandas as pd
 
     def gen(it):

@@ -2366,8 +2366,8 @@ def multimodal_phash256_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band-value space is 2^64 per band instead of 2^16 — the
     equi-join's collision mass stays ~linear in corpus size past the
     ~10^6-image cliff where the 64-bit plan's buckets saturate
-    (measured side-by-side: scripts/phash_band_saturation.py, table in
-    BASELINE.md).
+    (measured side-by-side in BASELINE.md's "Round-9: 64-bit vs
+    256-bit perceptual-hash band saturation" table).
 
     Identical contract otherwise: Hamming <= 3 across 256 bits forces
     >= 1 exact band match (recall 100% by construction); every band
@@ -2886,7 +2886,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = lake.load_table(spark, "documents", sf_dir)
     toked = docs.select("source", text.tokens("text").alias("t"))
     sh = toked.select(
-        "source", F.explode(dedup.shingles(F.col("t"), 3)).alias("s")
+        "source", F.explode(dedup.shingles("t", 3)).alias("s")
     ).distinct()
     hashed = sh.select("source", "s", _md5_u32(F.col("s")).alias("h"))
     wk = Window.partitionBy("source").orderBy("h", "s")
@@ -3012,7 +3012,7 @@ def corpus_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = lake.load_table(spark, "documents", sf_dir)
     toked = docs.select("doc_id", text.tokens("text").alias("t"))
     sh = toked.select(
-        "doc_id", F.explode(dedup.shingles(F.col("t"), 3)).alias("s")
+        "doc_id", F.explode(dedup.shingles("t", 3)).alias("s")
     )
     firsts = sh.groupBy("s").agg(
         F.min("doc_id").cast("long").alias("first_doc")

@@ -2235,8 +2235,8 @@ def interval_overlap_rollup(iv: DataFrame, salt_factor: int = 1) -> DataFrame:
     pairs.  Every pair still forms EXACTLY once (each B row keeps one
     salt; the A replica with the matching salt is unique), so the
     output is bit-identical to the unsalted plan for any s — asserted
-    by tests/test_stats.py and measured by
-    scripts/interval_skew_stress.py (BASELINE.md table).  The cost is
+    by tests/test_stats.py and measured in BASELINE.md's "Round-8
+    hot-bucket study" table.  The cost is
     replicating the (already multiplicity-compressed) A side s×; the
     default 1 keeps the catalog plan byte-stable.
 
@@ -2384,8 +2384,8 @@ def interval_overlap_concurrent_shipments(
     At 100 TB the per-(supplier, month) bucket bounds the quadratic
     fan-out; a hot supplier-month is salted via
     ``interval_overlap_rollup(iv, salt_factor=s)`` — an opt-in knob
-    measured in scripts/interval_skew_stress.py (BASELINE.md r08
-    table); the catalog entry runs unsalted (the fixture has no hot
+    measured in BASELINE.md's "Round-8 hot-bucket study" table; the
+    catalog entry runs unsalted (the fixture has no hot
     bucket, and salt_factor=1 keeps the locked plan byte-stable).
     """
     li = lake.load_table(spark, "lineitem", sf_dir)

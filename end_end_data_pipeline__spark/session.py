@@ -116,23 +116,6 @@ def get_spark(
             "changelogCheckpointing.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )
-    # Cluster-facing perf knobs (VERDICT r12 task 5): parameterized via
-    # env so CLUSTER_BENCH A/B arms can flip them per run; unset = the
-    # Spark defaults the driver's local bench has always measured.
-    # Production values belong in spark-submit conf informed by the
-    # committed CLUSTER_BENCH_r13 A/B, not pinned here.
-    for env, conf in (
-        ("SPARK_GRAFT_IO_CODEC", "spark.io.compression.codec"),
-        ("SPARK_GRAFT_PARQUET_CODEC", "spark.sql.parquet.compression.codec"),
-        ("SPARK_GRAFT_PREFER_SMJ", "spark.sql.join.preferSortMergeJoin"),
-        (
-            "SPARK_GRAFT_SHJ_LOCALMAP",
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        ),
-    ):
-        v = os.environ.get(env)
-        if v:
-            builder = builder.config(conf, v)
     if master.startswith("local"):
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")

@@ -19,6 +19,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import _minhash_engine_default  # noqa: E402
 from end_end_data_pipeline__spark.plans.catalog import load_all  # noqa: E402
 from end_end_data_pipeline__spark.session import get_spark  # noqa: E402
 
@@ -35,17 +36,7 @@ def main() -> int:
     spark = get_spark("plan_dump")
     queries = {n: q.fn for n, q in load_all().items() if q.bench}
 
-    # the bench-only engine-default minhash extra (mirrors bench.py)
-    def _minhash_engine_default(spark, sfd):
-        from end_end_data_pipeline__spark.operators import dedup
-        from end_end_data_pipeline__spark.sources import lake
-
-        docs = lake.load_table(spark, "documents", sfd)
-        return dedup.minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
-            verify_threshold=0.5, hash_family="xxhash64",
-        )
-
+    # the bench-only engine-default minhash extra
     queries["dedup_minhash_lsh_engine"] = _minhash_engine_default
 
     targets = names or sorted(queries)

@@ -22,6 +22,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import DataFrame  # noqa: E402
+
 LOCK_PATH = Path(__file__).resolve().parent.parent / "PLANS_LOCK.json"
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -112,16 +114,18 @@ def capture_checkpoint_children():
     return _cm()
 
 
-def plan_entry(fn, spark, sf_dir: str) -> dict:
+def plan_entry(fn, spark, sf_dir: str) -> tuple[dict, str, DataFrame]:
     """Lock entry for one query: the result plan digest plus (when the
     query materializes intermediates) the pre-checkpoint child plan
-    digests, in call order."""
+    digests, in call order.  Also returns the executed-plan string the
+    digest was taken from and the (unexecuted) DataFrame."""
     with capture_checkpoint_children() as kids:
         df = fn(spark, sf_dir)
-    entry: dict = digest(df._jdf.queryExecution().executedPlan().toString())
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    entry: dict = digest(plan)
     if kids:
         entry["ckpt_children"] = kids
-    return entry
+    return entry, plan, df
 
 
 def fixture_fingerprint() -> dict[str, int]:
@@ -149,16 +153,17 @@ def collect() -> dict[str, dict[str, int]]:
     for name, q in load_all().items():
         if name in SKIP:
             continue
-        out[name] = plan_entry(q.fn, spark, SF_DIR)
+        out[name] = plan_entry(q.fn, spark, SF_DIR)[0]
     return out
 
 
-def runtime_digests(spark, name: str) -> dict:
+def runtime_digests(spark, name: str) -> tuple[dict, DataFrame]:
     """Execute one SKIP-listed query and digest what the dry lock
     can't see: every started stream's final micro-batch plan
     (``StreamExecution.lastExecution`` — the IncrementalExecution
     holding watermark/StateStore/stream-join operators) and the
-    returned DataFrame's executed plan."""
+    returned DataFrame's executed plan.  Returns the digests and that
+    DataFrame."""
     import pyspark.sql.streaming.readwriter as srw
 
     from end_end_data_pipeline__spark.plans.catalog import load_all
@@ -185,7 +190,7 @@ def runtime_digests(spark, name: str) -> dict:
         "result": digest(
             df._jdf.queryExecution().executedPlan().toString()),
         "microbatches": micro,
-    }
+    }, df
 
 
 def runtime_collect() -> dict[str, dict]:
@@ -195,7 +200,7 @@ def runtime_collect() -> dict[str, dict]:
         "plan_lock_rt", extra_conf={"spark.sql.shuffle.partitions": "8"}
     )
     return {
-        name: {"reason": reason, **runtime_digests(spark, name)}
+        name: {"reason": reason, **runtime_digests(spark, name)[0]}
         for name, reason in sorted(SKIP.items())
     }
 

@@ -94,6 +94,16 @@ def test_simhash_chunking_validation(spark):
         )
 
 
+def test_shingles_takes_plain_column_name(spark):
+    """``shingles`` splices its argument into SQL text, so only a plain
+    identifier is accepted: a dotted name, a backticked name and a
+    Column expression are each rejected."""
+    assert "`toks`" in str(dedup.shingles("toks", 3))
+    for bad in ("doc.toks", "`toks`", F.col("toks")):
+        with pytest.raises(ValueError, match="plain column name"):
+            dedup.shingles(bad, 3)
+
+
 def test_minhash_lsh_recall_vs_exact(spark, docs):
     """Every exact-jaccard pair ≥ 0.7 must be found by the banded LSH
     (32/8 S-curve ⇒ ~99.9% collision at j=0.7; the fixture is fixed, so

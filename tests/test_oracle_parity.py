@@ -1,10 +1,8 @@
 """Every catalog query with an oracle must match DuckDB exactly —
 the local replica of the driver's correctness gate.
 
-Default fixture dir is sf0.001 (fast CI).  Set
-``SPARK_GRAFT_PARITY_SF_DIR=/root/testdata/sf0.01`` to run the suite
-at the driver's own scale factor — the same sweep
-``scripts/driver_gate.py --all`` performs as a standalone command.
+Runs at sf0.001; each query runs once, in the shared ``catalog_pass``
+(tests/conftest.py).  ``scripts/driver_gate.py --all`` sweeps sf0.01.
 """
 
 from __future__ import annotations
@@ -15,9 +13,7 @@ import pytest
 
 from end_end_data_pipeline__spark.plans.catalog import load_all
 from tests.conftest import SF_SMOKE
-from tests.oracle import compare, duck_run
-
-SF_PARITY = os.environ.get("SPARK_GRAFT_PARITY_SF_DIR", SF_SMOKE)
+from tests.oracle import duck_run
 
 QUERIES = load_all()
 WITH_ORACLE = [n for n, q in QUERIES.items() if q.oracle is not None]
@@ -25,19 +21,15 @@ ROWS_ONLY = [n for n, q in QUERIES.items() if q.oracle is None]
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_oracle_parity(spark, name):
-    q = QUERIES[name]
-    sdf = q.fn(spark, SF_PARITY)
-    ddf = duck_run(q.oracle, SF_PARITY)
-    problems = compare(sdf, ddf)
-    assert not problems, f"{name}: {problems}"
+def test_oracle_parity(catalog_pass, name):
+    run = catalog_pass[name]
+    run.check_ran(name)
+    assert not run.problems, f"{name}: {run.problems}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_runs(spark, name):
-    q = QUERIES[name]
-    df = q.fn(spark, SF_PARITY)
-    assert df.count() >= 0
+def test_rows_only_runs(catalog_pass, name):
+    catalog_pass[name].check_ran(name)
 
 
 def test_sf1_gate_rewrites_equal_brute_oracles():

@@ -4,6 +4,9 @@ match the committed PLANS_LOCK.json — so an accidental plan change (a
 broadcast silently flipping to a sort-merge join, a new shuffle from a
 refactor) fails CI instead of shipping as a 100 TB regression.
 
+The digests come from the shared ``catalog_pass`` (tests/conftest.py),
+which builds each query once with ``plan_lock.plan_entry`` /
+``plan_lock.runtime_digests`` — the functions the regenerator uses.
 Intentional plan changes and new queries are a one-command refresh:
 
     python scripts/plan_lock.py
@@ -16,15 +19,8 @@ from pathlib import Path
 
 import pytest
 
-from scripts.plan_lock import (
-    LOCK_PATH,
-    SKIP,
-    digest,
-    fixture_fingerprint,
-    plan_entry,
-)
+from scripts.plan_lock import LOCK_PATH, SKIP, fixture_fingerprint
 from end_end_data_pipeline__spark.plans.catalog import load_all
-from tests.conftest import SF_SMOKE
 
 LOCK = json.loads(Path(LOCK_PATH).read_text())
 NAMES = [n for n in load_all() if n not in SKIP]
@@ -38,16 +34,6 @@ if fixture_fingerprint() != LOCK.get("__fixtures__"):
         "with: python scripts/plan_lock.py",
         allow_module_level=True,
     )
-
-
-@pytest.fixture(autouse=True)
-def _uncached_plans(spark):
-    """Other modules cache fixture tables (module-scoped .cache()
-    fixtures); Spark substitutes InMemoryRelation into any matching
-    plan, which would change scan digests — the lock is defined over
-    UNCACHED plans."""
-    spark.catalog.clearCache()
-    yield
 
 
 def test_lock_covers_catalog():
@@ -70,9 +56,10 @@ def test_lock_covers_catalog():
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_plan_matches_lock(spark, name):
-    q = load_all()[name]
-    got = plan_entry(q.fn, spark, SF_SMOKE)
+def test_plan_matches_lock(catalog_pass, name):
+    run = catalog_pass[name]
+    run.check_built(name)
+    got = run.lock
     assert got == LOCK.get(name), (
         f"{name}: plan digest drifted from PLANS_LOCK.json "
         f"(got {got}, locked {LOCK.get(name)}) — if intentional, "
@@ -81,15 +68,15 @@ def test_plan_matches_lock(spark, name):
 
 
 @pytest.mark.parametrize("name", sorted(SKIP))
-def test_runtime_plan_matches_lock(spark, name):
+def test_runtime_plan_matches_lock(catalog_pass, name):
     """r08 (VERDICT r07 task 6): the streaming / side-effecting
     queries the dry lock skips are pinned at RUN time — each started
     stream's final micro-batch plan (IncrementalExecution: watermark,
     StateStore, stream-join operators) plus the returned DataFrame's
     executed plan must match the lock's __runtime__ section."""
-    from scripts.plan_lock import runtime_digests
-
-    got = runtime_digests(spark, name)
+    run = catalog_pass[name]
+    run.check_built(name)
+    got = run.lock
     locked = dict(LOCK["__runtime__"][name])
     locked.pop("reason", None)
     assert got == locked, (

@@ -18,20 +18,8 @@ import re
 import pytest
 
 from end_end_data_pipeline__spark.plans.catalog import load_all
+from scripts.plan_lock import SKIP
 from tests.conftest import SF_SMOKE
-
-# queries whose plan is only constructed at run time (streaming /
-# filesystem side effects) — they can't be dry-planned
-SKIP = {
-    "stream_daily_event_agg",
-    "stream_cdc_upsert_pipeline",
-    "stream_static_enrichment",
-    "stream_watermark_late_drop",
-    "stream_stateful_user_stats",
-    "gold_marts_build",
-    "maintenance_truncate_reset",
-    "banking_generator_fanout",
-}
 
 # deliberate broadcast nested-loop joins (tiny broadcast side)
 BNLJ_OK = {
@@ -46,6 +34,9 @@ BNLJ_OK = {
     "timeseries_acf_lags",
     "text_pmi_collocations",
     "corpus_vocab_growth_curve",
+    # ... and datagen's max_cust frame (the any-customer counterparty
+    # draw in sources/datagen.py)
+    "banking_generator_fanout",
     # sources x sources pair grid (s1 < s2): bounded at n_sources²,
     # joined against bottom-k SKETCHES only — by design
     "sketch_kmv_jaccard",
@@ -57,16 +48,15 @@ EXPENSIVE_IN_SCAN = re.compile(
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark):
-    """Dry-plan the whole catalog ONCE per module run — the four
-    whole-catalog audits below each consumed their own full planning
-    pass (~200 s apiece, half the suite's wall clock) before r13."""
+def all_plans(catalog_pass):
+    """(name, dry executed plan) for every dry-plannable query, read
+    from the shared catalog pass (tests/conftest.py)."""
     out = []
-    for name, q in load_all().items():
+    for name, run in catalog_pass.items():
         if name in SKIP:
             continue
-        df = q.fn(spark, SF_SMOKE)
-        out.append((name, df._jdf.queryExecution().executedPlan().toString()))
+        run.check_built(name)
+        out.append((name, run.plan))
     return out
 
 
