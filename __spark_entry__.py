@@ -2,10 +2,10 @@
 
 Thin adapter over the engine's query catalog
 (``end_end_data_pipeline__spark.plans.catalog``): every implemented
-operator from SURVEY.md §2 registers a named query (Spark callable) and,
-where ANSI-SQL-expressible, a DuckDB oracle.  The driver smoke-runs
-``entry(spark)`` at sf0.001 and compares each ``queries()`` entry
-against ``oracle_sql()`` at sf0.01.
+operator from SURVEY.md §2 registers a named query (Spark callable) and
+its DuckDB oracle.  The driver smoke-runs ``entry(spark)`` at sf0.001
+and compares each ``queries()`` entry against ``oracle_sql()`` at
+sf0.01.
 """
 
 from __future__ import annotations
@@ -33,6 +33,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query; entries
-    without an oracle get the driver's rows-only check."""
-    return {name: q.oracle for name, q in load_all().items() if q.oracle is not None}
+    """DuckDB-equivalent SQL for every query (the catalog requires one)."""
+    return {name: q.oracle for name, q in load_all().items()}

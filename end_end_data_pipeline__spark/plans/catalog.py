@@ -1,8 +1,9 @@
 """Query catalog — the single registry behind ``__spark_entry__.py``.
 
 Every implemented operator from SURVEY.md §2 registers one named query
-here: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus (when the
-semantics are ANSI-SQL-expressible) the equivalent DuckDB oracle SQL.
+here: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus the
+equivalent DuckDB oracle SQL, which registration requires (a query
+with no oracle would be checked for nothing but not crashing).
 The driver runs both sides at sf0.01 and compares row-count + schema +
 order-insensitive value hash, so:
 
@@ -27,7 +28,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL; None => driver does rows-only check
+    oracle: str  # DuckDB SQL the result must match
     survey_ids: tuple[str, ...] = ()  # SURVEY.md §2 operator ids covered
     bench: bool = False  # include in bench.py headline set
     doc: str = field(default="")
@@ -46,12 +47,14 @@ QUERIES: dict[str, Query] = {}
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str = "",
     survey_ids: tuple[str, ...] = (),
     bench: bool = False,
     single_jvm: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query to the registry."""
+    """Decorator: add a query to the registry.  ``oracle`` is required."""
+    if not oracle:
+        raise ValueError(f"catalog query {name!r} needs a DuckDB oracle")
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = Query(

@@ -1,9 +1,9 @@
 """Manifest-committed table (MCT): a minimal transactional layout for
-hash-bucketed parquet — the missing piece `streaming.upsert.merge_batch`
-documents (its plain-parquet dynamic overwrite has a non-atomic
-delete+rename window it can only DETECT; a table format is what
-actually closes it; this container ships no Delta/Iceberg, so this is
-the Spark-first ~150-line equivalent of their core commit protocol).
+hash-bucketed parquet — the lake's one CDC write path.  A plain-parquet
+dynamic overwrite has a non-atomic delete+rename window it can only
+detect; a table format is what actually closes it, and with no
+Delta/Iceberg available this is the Spark-first equivalent of their
+core commit protocol.
 
 Layout::
 
@@ -11,7 +11,11 @@ Layout::
       data/v{N}-{token}/p_bucket={b}/part-*.parquet  -- immutable once written
       manifest-v{N}.json   -- {"version": N, "schema": <json>,
                                "buckets": {b: [files]},
-                               "stats": {file: {col: [min, max]}}}
+                               "stats": {file: {col: [min, max]}},
+                               "committed_at": <epoch s>,
+                               "operation": <name>,
+                               "constraints": {name: <sql>},
+                               "n_buckets": n, "key_cols": [cols]}
 
 Per-file column [min, max] stats ride in the manifest (files are
 immutable, so stats are too — carried forward untouched for files a
@@ -41,8 +45,11 @@ anywhere before the rename leaves only orphan data files; the current
 manifest — and therefore every reader and the next merge — still sees
 the old committed state.  Object stores without atomic rename (S3)
 need a conditional-put catalog instead; that swap is isolated to
-``_commit_manifest``.  ``merge_versioned_retry`` is the bounded
-re-read/re-merge/re-commit loop a loser runs.
+``_commit_manifest``.  ``dml_retry(merge_versioned, ...)`` is the
+bounded re-read/re-merge/re-commit loop a loser runs.  Every
+version-producing operation opens its base version through ``_open``
+and commits through ``_commit_state`` (data-rewriting) or
+``_commit_manifest(_manifest(...))`` (metadata-only).
 
 Readers pin a manifest version → snapshot isolation and time travel
 for free (``read_snapshot(..., version=K)``).  ``vacuum`` drops data
@@ -82,6 +89,11 @@ BUCKET_COL = "p_bucket"
 _MANIFEST_RE = re.compile(r"manifest-v(\d+)\.json$")
 
 
+def _bucket_of(key_cols: list, n_buckets: int) -> Column:
+    """A row's bucket id — the immutable key→bucket mapping."""
+    return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+
+
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -113,11 +125,53 @@ def _read_manifest(spark: SparkSession, target: str, version: int) -> dict:
     return json.loads("\n".join(r[0] for r in lines))
 
 
-def _manifest_schema(manifest: dict) -> StructType | None:
+def _manifest_schema(manifest: dict | None) -> StructType | None:
     """The table schema persisted at commit time (None for pre-schema
-    manifests)."""
-    sj = manifest.get("schema")
+    manifests and for a table not created yet)."""
+    sj = (manifest or {}).get("schema")
     return StructType.fromJson(sj) if sj else None
+
+
+def _open(
+    spark: SparkSession,
+    target: str,
+    version: int | None = None,
+    as_of: "_dt.datetime | float | None" = None,
+    missing_ok: bool = False,
+) -> tuple[list[int], int, dict | None]:
+    """``(versions, v, manifest)`` for ``version`` (default: the latest)
+    — the one place an operation lists the committed versions and reads
+    the manifest it works from.  ``as_of`` (datetime or epoch seconds)
+    instead picks the newest version committed at-or-before that
+    wall-clock time (versions from before commit times were recorded
+    never match).  ``missing_ok`` lets a writer create the table:
+    ``([], 0, None)`` when nothing is committed yet."""
+    versions = list_versions(spark, target)
+    if not versions:
+        if missing_ok:
+            return [], 0, None
+        raise FileNotFoundError(f"no committed manifest under {target!r}")
+    if as_of is not None:
+        if version is not None:
+            raise ValueError("pass either version or as_of, not both")
+        cutoff = (
+            as_of.timestamp() if isinstance(as_of, _dt.datetime) else float(as_of)
+        )
+        manifests = {v: _read_manifest(spark, target, v) for v in versions}
+        eligible = [
+            v
+            for v, m in manifests.items()
+            if (ts := m.get("committed_at")) is not None and ts <= cutoff
+        ]
+        if not eligible:
+            raise FileNotFoundError(
+                f"no version of {target!r} committed at or before {as_of}"
+            )
+        return versions, eligible[-1], manifests[eligible[-1]]
+    v = version if version is not None else versions[-1]
+    if v not in versions:
+        raise FileNotFoundError(f"version {v} not in {versions}")
+    return versions, v, _read_manifest(spark, target, v)
 
 
 def read_snapshot(
@@ -131,33 +185,15 @@ def read_snapshot(
     unaffected by any concurrent commit or vacuum of other versions.
     ``as_of`` (datetime or epoch seconds) instead picks the newest
     version committed at-or-before that wall-clock time — TIMESTAMP AS
-    OF time travel (versions from before commit times were recorded
-    never match)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        cutoff = (
-            as_of.timestamp() if isinstance(as_of, _dt.datetime) else float(as_of)
-        )
-        eligible = [
-            v
-            for v in versions
-            if (ts := _read_manifest(spark, target, v).get("committed_at"))
-            is not None
-            and ts <= cutoff
-        ]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no version of {target!r} committed at or before {as_of}"
-            )
-        version = eligible[-1]
-    v = version if version is not None else versions[-1]
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions}")
-    manifest = _read_manifest(spark, target, v)
+    OF time travel."""
+    _, v, manifest = _open(spark, target, version, as_of)
+    return _snapshot(spark, target, v, manifest)
+
+
+def _snapshot(
+    spark: SparkSession, target: str, v: int, manifest: dict
+) -> DataFrame:
+    """Version ``v``'s state from its already-read ``manifest``."""
     files = [f for fl in manifest["buckets"].values() for f in fl]
     schema = _manifest_schema(manifest)
     if not files:
@@ -165,23 +201,26 @@ def read_snapshot(
         if schema is None:
             raise FileNotFoundError(f"version {v} of {target!r} is empty")
         return spark.createDataFrame([], schema)
-    out = _read_files(spark, target, files)
-    if schema is not None:
-        # pin the snapshot to ITS version's schema (column order, and
-        # nulls for columns newer files carry that this version's
-        # pre-evolution files lack)
-        out = _pin_schema(out, schema)
-    return out
+    # pinned to ITS version's schema (column order, and nulls for
+    # columns newer files carry that this version's pre-evolution
+    # files lack)
+    return _read_files(spark, target, files, schema)
 
 
-def _read_files(spark: SparkSession, target: str, rel_files: list[str]) -> DataFrame:
+def _read_files(
+    spark: SparkSession,
+    target: str,
+    rel_files: list[str],
+    schema: StructType | None = None,
+) -> DataFrame:
     """Read manifest-relative files spanning multiple ``data/v{N}``
     dirs.  Each version dir is its own partition-discovery base (one
     shared basePath would make Spark see conflicting ``v1``/``v2``
     levels); the bucket partition column is dropped — manifests, not
     directory layout, are the source of truth for bucket membership.
     ``allowMissingColumns`` handles schema evolution: files written
-    before a column was added read back with nulls for it."""
+    before a column was added read back with nulls for it.  A
+    ``schema`` pins the result to it (``_pin_schema``)."""
     by_vdir: dict[str, list[str]] = {}
     for f in rel_files:
         vdir = "/".join(f.split("/")[:2])  # data/vN
@@ -195,7 +234,7 @@ def _read_files(spark: SparkSession, target: str, rel_files: list[str]) -> DataF
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return out if schema is None else _pin_schema(out, schema)
 
 
 def read_keys(
@@ -211,11 +250,7 @@ def read_keys(
     files of the touched buckets — O(touched/n_buckets) of the table,
     the lakehouse stand-in for the reference's primary-key index.
     ``n_buckets`` must match the table's layout."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    v = version if version is not None else versions[-1]
-    manifest = _read_manifest(spark, target, v)
+    _, v, manifest = _open(spark, target, version)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     schema = _manifest_schema(manifest)
     key_df = spark.createDataFrame(keys, key_cols)
@@ -229,9 +264,7 @@ def read_keys(
         )
     wanted = {
         str(r[0])
-        for r in key_df.select(
-            F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).alias("b")
-        )
+        for r in key_df.select(_bucket_of(key_cols, n_buckets).alias("b"))
         .distinct()
         .collect()
     }
@@ -286,6 +319,32 @@ def _commit_manifest(
             f"commit of version {v} lost the race: {final} already exists "
             "(concurrent writer) — re-read the new state and retry"
         )
+
+
+def _manifest(
+    base: dict,
+    version: int,
+    buckets: dict[str, list[str]],
+    stats: dict[str, dict] | None,
+    operation: str,
+    **changed,
+) -> dict:
+    """The one manifest builder.  ``schema``, ``constraints``,
+    ``n_buckets`` and ``key_cols`` carry over from ``base`` (the
+    manifest the commit starts from; ``{}`` for a new table) unless
+    ``changed`` sets them."""
+    return {
+        "version": version,
+        "schema": base.get("schema"),
+        "buckets": buckets,
+        "stats": stats,
+        "committed_at": time.time(),
+        "operation": operation,
+        "constraints": _constraints(base),
+        "n_buckets": base.get("n_buckets"),
+        "key_cols": base.get("key_cols"),
+        **changed,
+    }
 
 
 def _bucket_files(spark: SparkSession, data_dir: str) -> dict[str, list[str]]:
@@ -500,14 +559,17 @@ def _conjunct_pred(conjuncts: list[tuple[str, str, object]]) -> Column:
     return reduce(lambda a, b: a & b, preds) if preds else F.lit(True)
 
 
-def _pin_schema(df: DataFrame, schema: StructType) -> DataFrame:
+def _pin_schema(df: DataFrame, schema: StructType, *keep: str) -> DataFrame:
+    """``df`` cast to ``schema`` in its column order (nulls for the
+    columns ``df`` lacks), followed by the ``keep`` columns unchanged."""
     return df.select(
         *[
             F.col(f.name).cast(f.dataType)
             if f.name in df.columns
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields
-        ]
+        ],
+        *keep,
     )
 
 
@@ -527,13 +589,7 @@ def read_where(
     together they cover both the reference's indexed lookups and its
     date-partitioned scans.  Skipping selectivity follows the physical
     layout — tightest after ``compact(cluster_by=[...])``."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    v = version if version is not None else versions[-1]
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions}")
-    manifest = _read_manifest(spark, target, v)
+    _, v, manifest = _open(spark, target, version)
     schema = _manifest_schema(manifest)
     kept = prune_files(manifest, conjuncts)
 
@@ -547,10 +603,7 @@ def read_where(
                 "cannot derive an empty result schema"
             )
         return residual(spark.createDataFrame([], schema))
-    out = _read_files(spark, target, kept)
-    if schema is not None:
-        out = _pin_schema(out, schema)
-    return residual(out)
+    return residual(_read_files(spark, target, kept, schema))
 
 
 def merge_versioned(
@@ -561,167 +614,155 @@ def merge_versioned(
     n_buckets: int | None = None,
 ) -> int:
     """Latest-wins merge with an ATOMIC commit; returns the committed
-    version.  Same change-row contract and per-bucket cost model as
-    ``streaming.upsert.merge_batch`` (reads back only the affected
-    buckets), but existing files are never modified — a crash at any
-    point leaves the previous version fully intact and visible.
-    ``n_buckets`` may be omitted on an existing table (the committed
-    layout is used); a mismatching value is refused (see
-    ``_resolve_n_buckets``)."""
+    version.  ``batch`` carries decoded change rows (key..., op,
+    ``version_col``, after) as ``sources.cdc.decode`` produces them.
+    Only the affected buckets are read back, as synthetic 'c' changes
+    at version −1 so one window pass resolves everything, and existing
+    files are never modified — a crash at any point leaves the previous
+    version fully intact and visible.  ``n_buckets`` may be omitted on
+    an existing table (the committed layout is used); a mismatching
+    value is refused (see ``_resolve_n_buckets``)."""
     spark = batch.sparkSession
-    versions = list_versions(spark, target)
-    current_v = versions[-1] if versions else 0
-    carried: dict[str, list[str]] = {}
-    manifest: dict | None = None
-    after_fields = None  # batch's after-struct fields (evolution target)
-    if versions:
-        manifest = _read_manifest(spark, target, current_v)
+    _, current_v, manifest = _open(spark, target, missing_ok=True)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     _check_key_cols(manifest, key_cols, target)
-    bucket_of = lambda cols: F.pmod(F.xxhash64(*cols), F.lit(n_buckets))  # noqa: E731
-    if manifest is not None:
-        schema = _manifest_schema(manifest)
-        if schema is not None:
-            # xxhash64 is type-sensitive: a batch whose key columns
-            # drifted (int vs long) would bucket to different ids than
-            # the committed layout — refuse loudly, never merge wrong
-            table_types = {f.name: f.dataType for f in schema.fields}
-            for k in key_cols:
-                bt = batch.schema[k].dataType
-                if bt != table_types[k]:
-                    raise TypeError(
-                        f"key column {k!r} is {bt.simpleString()} in the "
-                        f"batch but {table_types[k].simpleString()} in "
-                        f"{target!r} — cast the batch before merging "
-                        "(bucket hashing is type-sensitive)"
-                    )
-            # schema evolution: NEW after-struct columns are allowed
-            # (existing rows read back null for them); dropping or
-            # retyping existing columns is refused — a latest-wins
-            # merge with partial rows would silently null data
-            after_fields = batch.schema["after"].dataType.fields
-            batch_types = {f.name: f.dataType for f in after_fields}
-            missing = sorted(set(table_types) - set(batch_types))
-            if missing:
-                raise ValueError(
-                    f"batch after-struct lacks existing column(s) "
-                    f"{missing} of {target!r} — merges carry full rows; "
-                    "to drop a column, rewrite the table"
+    after_fields = None  # batch's after-struct fields (evolution target)
+    schema = _manifest_schema(manifest)
+    if schema is not None:
+        # xxhash64 is type-sensitive: a batch whose key columns
+        # drifted (int vs long) would bucket to different ids than
+        # the committed layout — refuse loudly, never merge wrong
+        table_types = {f.name: f.dataType for f in schema.fields}
+        for k in key_cols:
+            bt = batch.schema[k].dataType
+            if bt != table_types[k]:
+                raise TypeError(
+                    f"key column {k!r} is {bt.simpleString()} in the "
+                    f"batch but {table_types[k].simpleString()} in "
+                    f"{target!r} — cast the batch before merging "
+                    "(bucket hashing is type-sensitive)"
                 )
-            for name, bt in batch_types.items():
-                if name in table_types and bt != table_types[name]:
-                    raise TypeError(
-                        f"column {name!r} is {bt.simpleString()} in the "
-                        f"batch but {table_types[name].simpleString()} "
-                        f"in {target!r} — type changes need a rewrite"
-                    )
-    affected = sorted(
-        str(r[0])
-        for r in batch.select(
-            bucket_of([F.col(k) for k in key_cols]).alias(BUCKET_COL)
-        )
-        .distinct()
-        .collect()
-    )
-    if manifest is not None:
-        current_files = [
-            f for b in affected for f in manifest["buckets"].get(b, [])
-        ]
-        carried = {
-            b: fl
-            for b, fl in manifest["buckets"].items()
-            if b not in affected
-        }
-        if current_files:
-            current = _read_files(spark, target, current_files)
-            if after_fields is not None:
-                # mirror the BATCH's after-struct shape exactly (field
-                # order and any evolved new columns, null for rows
-                # that predate them) so the union is type-identical
-                struct_cols = [
-                    (
-                        F.col(f.name)
-                        if f.name in current.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in after_fields
-                ]
-            else:
-                struct_cols = [F.col(c) for c in current.columns]
-            as_changes = current.select(
-                *[F.col(k) for k in key_cols],
-                F.lit("c").alias("op"),
-                F.lit(-1).cast("long").alias(version_col),
-                F.struct(*struct_cols).alias("after"),
+        # schema evolution: NEW after-struct columns are allowed
+        # (existing rows read back null for them); dropping or
+        # retyping existing columns is refused — a latest-wins
+        # merge with partial rows would silently null data
+        after_fields = batch.schema["after"].dataType.fields
+        batch_types = {f.name: f.dataType for f in after_fields}
+        missing = sorted(set(table_types) - set(batch_types))
+        if missing:
+            raise ValueError(
+                f"batch after-struct lacks existing column(s) "
+                f"{missing} of {target!r} — merges carry full rows; "
+                "to drop a column, rewrite the table"
             )
-            all_changes = batch.unionByName(as_changes)
+        for name, bt in batch_types.items():
+            if name in table_types and bt != table_types[name]:
+                raise TypeError(
+                    f"column {name!r} is {bt.simpleString()} in the "
+                    f"batch but {table_types[name].simpleString()} "
+                    f"in {target!r} — type changes need a rewrite"
+                )
+    affected, current = _touched(spark, target, manifest, batch, key_cols, n_buckets)
+    all_changes = batch
+    if current is not None:
+        if after_fields is not None:
+            # mirror the BATCH's after-struct shape exactly (field
+            # order and any evolved new columns, null for rows that
+            # predate them) so the union is type-identical
+            struct_cols = [
+                (
+                    F.col(f.name)
+                    if f.name in current.columns
+                    else F.lit(None).cast(f.dataType)
+                ).alias(f.name)
+                for f in after_fields
+            ]
         else:
-            all_changes = batch
-    else:
-        all_changes = batch
+            struct_cols = [F.col(c) for c in current.columns]
+        as_changes = current.select(
+            *[F.col(k) for k in key_cols],
+            F.lit("c").alias("op"),
+            F.lit(-1).cast("long").alias(version_col),
+            F.struct(*struct_cols).alias("after"),
+        )
+        all_changes = batch.unionByName(as_changes)
     new_state = cdc.apply_latest_state(
         all_changes, key_cols, version_col=version_col
-    ).withColumn(BUCKET_COL, bucket_of(key_cols))
-    constraints = manifest.get("constraints", {}) if manifest else {}
-    if constraints:
-        _check_constraints(
-            new_state.drop(BUCKET_COL), constraints, "merge_versioned state"
-        )
-    return _commit_state(
-        spark, target, new_state, affected, carried,
-        manifest.get("stats", {}) if manifest else {}, current_v + 1,
-        operation="merge_versioned", constraints=constraints,
-        n_buckets=n_buckets, key_cols=key_cols,
+    ).withColumn(BUCKET_COL, _bucket_of(key_cols, n_buckets))
+    _check_constraints(
+        new_state.drop(BUCKET_COL), _constraints(manifest), "merge_versioned state"
     )
+    return _commit_state(
+        spark, target, manifest or {}, current_v + 1, new_state, affected,
+        "merge_versioned", n_buckets=n_buckets, key_cols=key_cols,
+    )
+
+
+def _touched(
+    spark: SparkSession,
+    target: str,
+    manifest: dict | None,
+    frame: DataFrame,
+    key_cols: list[str],
+    n_buckets: int,
+) -> tuple[list[str], DataFrame | None]:
+    """The buckets ``frame``'s keys hash into, and the committed rows of
+    those buckets (None when there are none) — what a merge rewrites."""
+    affected = sorted(
+        str(r[0])
+        for r in frame.select(_bucket_of(key_cols, n_buckets)).distinct().collect()
+    )
+    committed = manifest["buckets"] if manifest else {}
+    files = [f for b in affected for f in committed.get(b, [])]
+    return affected, (_read_files(spark, target, files) if files else None)
 
 
 def _commit_state(
     spark: SparkSession,
     target: str,
-    new_state: DataFrame,
-    affected: list[str],
-    carried: dict[str, list[str]],
-    prev_stats: dict[str, dict],
+    base: dict,
     new_v: int,
-    operation: str = "merge",
-    constraints: dict[str, str] | None = None,
-    n_buckets: int | None = None,
-    key_cols: list[str] | None = None,
+    new_state: DataFrame,
+    affected: list[str] | None,
+    operation: str,
+    max_records_per_file: int | None = None,
+    **changed,
 ) -> int:
-    """Shared commit tail for every state-rewriting operation: write
-    the affected buckets' new state to a writer-unique dir (racing
-    writers targeting the same version can never overwrite each
-    other's part files; the loser's dir becomes an unreferenced orphan
-    it deletes below), splice the manifest, collect file stats, and
-    atomically rename-commit."""
+    """The commit tail of every data-rewriting operation: write
+    ``new_state`` (bucket-id column included) to a writer-unique dir
+    (racing writers targeting the same version can never overwrite
+    each other's part files; the loser's dir becomes an unreferenced
+    orphan it deletes below), splice its buckets into ``base``'s —
+    ``affected`` buckets are replaced (dropped when they came out
+    empty), the rest carried by reference; ``None`` replaces every
+    bucket — collect the new files' stats, and atomically
+    rename-commit version ``new_v``.  The manifest's ``schema`` is the
+    new state's unless ``changed`` pins one; the other fields follow
+    ``_manifest``."""
     data_dir = f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
-    new_state.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
+    writer = new_state.write.mode("overwrite")
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer.partitionBy(BUCKET_COL).parquet(data_dir)
     new_files = _bucket_files(spark, data_dir)  # only non-empty buckets
-    buckets = dict(carried)
-    for b in affected:
-        buckets.pop(b, None)
-        if b in new_files:
-            buckets[b] = new_files[b]
-    schema_json = new_state.drop(BUCKET_COL).schema.jsonValue()
+    if affected is None:
+        buckets = new_files
+    else:
+        buckets = {
+            b: fl for b, fl in base.get("buckets", {}).items() if b not in affected
+        }
+        buckets.update({b: new_files[b] for b in affected if b in new_files})
     stats = _carry_stats(
-        prev_stats,
+        base.get("stats", {}),
         buckets,
         _collect_stats(spark, data_dir) if new_files else {},
     )
+    if "schema" not in changed:
+        changed["schema"] = new_state.drop(BUCKET_COL).schema.jsonValue()
     try:
         _commit_manifest(
             spark, target,
-            {
-                "version": new_v,
-                "schema": schema_json,
-                "buckets": buckets,
-                "stats": stats,
-                "committed_at": time.time(),
-                "operation": operation,
-                "constraints": constraints or {},
-                "n_buckets": n_buckets,
-                "key_cols": key_cols,
-            },
+            _manifest(base, new_v, buckets, stats, operation, **changed),
         )
     except RuntimeError:
         fs, jvm = _fs(spark, target)
@@ -772,6 +813,11 @@ def _check_key_cols(
         )
 
 
+def _constraints(manifest: dict | None) -> dict[str, str]:
+    """The CHECK constraints a manifest records (``{}`` for none)."""
+    return (manifest or {}).get("constraints") or {}
+
+
 def _check_constraints(
     state: DataFrame, constraints: dict[str, str], context: str
 ) -> None:
@@ -797,31 +843,19 @@ def set_check_constraint(
     post-merge state before committing.  Commits a data-identical new
     version carrying the updated constraint set (NULL results count as
     violations — constraints are strict)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    current_v = versions[-1]
-    manifest = _read_manifest(spark, target, current_v)
-    constraints = dict(manifest.get("constraints", {}))
-    constraints[name] = expr
+    _, current_v, manifest = _open(spark, target)
+    constraints = {**_constraints(manifest), name: expr}
     _check_constraints(
-        read_snapshot(spark, target, current_v),
+        _snapshot(spark, target, current_v, manifest),
         {name: expr},
         f"existing state of {target!r}",
     )
     _commit_manifest(
         spark, target,
-        {
-            **{
-                k: manifest.get(k)
-                for k in ("schema", "stats", "n_buckets", "key_cols")
-            },
-            "version": current_v + 1,
-            "buckets": manifest["buckets"],
-            "committed_at": time.time(),
-            "operation": f"set_constraint:{name}",
-            "constraints": constraints,
-        },
+        _manifest(
+            manifest, current_v + 1, manifest["buckets"], manifest.get("stats"),
+            f"set_constraint:{name}", constraints=constraints,
+        ),
     )
     return current_v + 1
 
@@ -830,12 +864,10 @@ def history(spark: SparkSession, target: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per live manifest version — commit
     time, operation, file/bucket counts, constraint count.  Metadata
     only (reads manifests, never data files)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
+    versions, _, latest = _open(spark, target)
     rows = []
     for v in versions:
-        m = _read_manifest(spark, target, v)
+        m = latest if v == versions[-1] else _read_manifest(spark, target, v)
         ts = m.get("committed_at")
         rows.append(
             (
@@ -844,7 +876,7 @@ def history(spark: SparkSession, target: str) -> DataFrame:
                 m.get("operation"),
                 sum(len(fl) for fl in m["buckets"].values()),
                 len(m["buckets"]),
-                len(m.get("constraints", {})),
+                len(_constraints(m)),
             )
         )
     return spark.createDataFrame(
@@ -852,33 +884,6 @@ def history(spark: SparkSession, target: str) -> DataFrame:
         "version int, committed_at timestamp, operation string,"
         " n_files int, n_buckets int, n_constraints int",
     )
-
-
-def merge_versioned_retry(
-    batch: DataFrame,
-    target: str,
-    key_cols: list[str],
-    version_col: str = "ts_ms",
-    n_buckets: int | None = None,
-    max_attempts: int = 4,
-) -> int:
-    """Bounded optimistic-concurrency loop around
-    :func:`merge_versioned`: on a lost commit race, re-read the (now
-    newer) manifest, re-merge against it, re-commit.  Each retry reads
-    only the affected buckets again, so the cost is O(retries × touched
-    data), and the batch DataFrame is a logical plan — recomputing it
-    is safe.  Raises the final :class:`RuntimeError` if every attempt
-    loses (pathological contention)."""
-    last: RuntimeError | None = None
-    for _ in range(max_attempts):
-        try:
-            return merge_versioned(
-                batch, target, key_cols,
-                version_col=version_col, n_buckets=n_buckets,
-            )
-        except RuntimeError as e:  # lost the commit race; state moved on
-            last = e
-    raise last  # type: ignore[misc]
 
 
 def merge_into(
@@ -919,13 +924,10 @@ def merge_into(
     for k in key_cols:
         if isinstance(when_matched_update, dict) and k in when_matched_update:
             raise ValueError(f"key column {k!r} cannot be updated by MERGE")
-    versions = list_versions(spark, target)
-    current_v = versions[-1] if versions else 0
-    manifest = _read_manifest(spark, target, current_v) if versions else None
+    _, current_v, manifest = _open(spark, target, missing_ok=True)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     _check_key_cols(manifest, key_cols, target)
-    bucket_of = lambda cols: F.pmod(F.xxhash64(*cols), F.lit(n_buckets))  # noqa: E731
-    schema = _manifest_schema(manifest) if manifest else None
+    schema = _manifest_schema(manifest)
     if schema is not None:
         table_types = {f.name: f.dataType for f in schema.fields}
         src_types = {f.name: f.dataType for f in source.schema.fields}
@@ -956,29 +958,9 @@ def merge_into(
             "matched-clause outcome would be row-order-dependent; "
             "collapse the source to one row per key first"
         )
-    affected = sorted(
-        str(r[0])
-        for r in source.select(
-            bucket_of([F.col(k) for k in key_cols]).alias(BUCKET_COL)
-        )
-        .distinct()
-        .collect()
-    )
-    carried: dict[str, list[str]] = {}
-    current = None
-    if manifest is not None:
-        current_files = [
-            f for b in affected for f in manifest["buckets"].get(b, [])
-        ]
-        carried = {
-            b: fl
-            for b, fl in manifest["buckets"].items()
-            if b not in affected
-        }
-        if current_files:
-            current = _read_files(spark, target, current_files)
-            if schema is not None:
-                current = _pin_schema(current, schema)
+    affected, current = _touched(spark, target, manifest, source, key_cols, n_buckets)
+    if current is not None and schema is not None:
+        current = _pin_schema(current, schema)
 
     s_side = source.select(
         *key_cols, F.struct(*non_keys).alias("s"), F.lit(True).alias("__s")
@@ -1049,17 +1031,13 @@ def merge_into(
     # restore the table's declared column order
     new_state = merged.select(
         *[F.col(f.name) for f in out_fields]
-    ).withColumn(BUCKET_COL, bucket_of(key_cols))
-    constraints = manifest.get("constraints", {}) if manifest else {}
-    if constraints:
-        _check_constraints(
-            new_state.drop(BUCKET_COL), constraints, "merge_into state"
-        )
+    ).withColumn(BUCKET_COL, _bucket_of(key_cols, n_buckets))
+    _check_constraints(
+        new_state.drop(BUCKET_COL), _constraints(manifest), "merge_into state"
+    )
     return _commit_state(
-        spark, target, new_state, affected, carried,
-        manifest.get("stats", {}) if manifest else {}, current_v + 1,
-        operation="merge_into", constraints=constraints,
-        n_buckets=n_buckets, key_cols=key_cols,
+        spark, target, manifest or {}, current_v + 1, new_state, affected,
+        "merge_into", n_buckets=n_buckets, key_cols=key_cols,
     )
 
 
@@ -1090,79 +1068,43 @@ def compact(
 
     Returns the new committed version, or None when nothing needed
     compacting (no empty commits)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    current_v = versions[-1]
-    manifest = _read_manifest(spark, target, current_v)
-    over = {
-        b: fl
+    _, current_v, manifest = _open(spark, target)
+    over = sorted(
+        b
         for b, fl in manifest["buckets"].items()
         if cluster_by or len(fl) > max_files_per_bucket
-    }
+    )
     if not over:
         return None
-    parts = [
-        _read_files(spark, target, fl).withColumn(BUCKET_COL, F.lit(int(b)))
-        for b, fl in sorted(over.items())
-    ]
-    df = parts[0]
-    for p2 in parts[1:]:
-        # buckets may carry different column sets after add-column
-        # schema evolution; pre-evolution buckets read back nulls and
-        # the rewrite pins every compacted file to the table schema
-        df = df.unionByName(p2, allowMissingColumns=True)
-    schema = _manifest_schema(manifest)
-    if schema is not None:
-        df = df.select(
-            *[
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ],
-            F.col(BUCKET_COL),
-        )
-    new_v = current_v + 1
-    data_dir = f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
-    df = df.repartition(len(over), F.col(BUCKET_COL))
+    # buckets may carry different column sets after add-column schema
+    # evolution; pre-evolution buckets read back nulls and the rewrite
+    # pins every compacted file to the table schema
+    df = _read_buckets(spark, target, manifest, over).repartition(
+        len(over), F.col(BUCKET_COL)
+    )
     if cluster_by:
         df = df.sortWithinPartitions(BUCKET_COL, *cluster_by)
-    writer = df.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(BUCKET_COL).parquet(data_dir)
-    new_files = _bucket_files(spark, data_dir)
-    buckets = {
-        b: (new_files[b] if b in over else fl)
-        for b, fl in manifest["buckets"].items()
-        if b in new_files or b not in over
-    }
-    stats = _carry_stats(
-        manifest.get("stats", {}),
-        buckets,
-        _collect_stats(spark, data_dir) if new_files else {},
+    return _commit_state(
+        spark, target, manifest, current_v + 1, df, over, "compact",
+        max_records_per_file, schema=manifest.get("schema"),
     )
-    try:
-        _commit_manifest(
-            spark, target,
-            {
-                "version": new_v,
-                "schema": manifest.get("schema"),
-                "buckets": buckets,
-                "stats": stats,
-                "committed_at": time.time(),
-                "operation": "compact",
-                "constraints": manifest.get("constraints", {}),
-                "n_buckets": manifest.get("n_buckets"),
-                "key_cols": manifest.get("key_cols"),
-            },
+
+
+def _read_buckets(
+    spark: SparkSession, target: str, manifest: dict, buckets: list[str]
+) -> DataFrame:
+    """The committed rows of ``buckets`` with the bucket id pinned back
+    on as ``BUCKET_COL`` (a rewrite that keeps the keys keeps every row
+    in its bucket), pinned to the manifest's schema when it has one."""
+    parts = [
+        _read_files(spark, target, manifest["buckets"][b]).withColumn(
+            BUCKET_COL, F.lit(int(b))
         )
-    except RuntimeError:
-        fs, jvm = _fs(spark, target)
-        fs.delete(_jpath(jvm, data_dir), True)
-        raise
-    return new_v
+        for b in buckets
+    ]
+    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    schema = _manifest_schema(manifest)
+    return df if schema is None else _pin_schema(df, schema, BUCKET_COL)
 
 
 def table_changes(
@@ -1183,20 +1125,15 @@ def table_changes(
     appear twice, pre and post, Delta-style).  Feed a downstream
     incremental mart refresh with this instead of re-scanning the
     table."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    to_v = to_version if to_version is not None else versions[-1]
-    for v in (from_version, to_v):
-        if v not in versions:
-            raise FileNotFoundError(f"version {v} not in {versions}")
+    versions, to_v, m_to = _open(spark, target, to_version)
+    if from_version not in versions:
+        raise FileNotFoundError(f"version {from_version} not in {versions}")
     if from_version >= to_v:
         raise ValueError(
             f"change feed needs from_version < to_version, got "
             f"{from_version} >= {to_v}"
         )
     m_from = _read_manifest(spark, target, from_version)
-    m_to = _read_manifest(spark, target, to_v)
     schema = _manifest_schema(m_to)
     changed = sorted(
         set(m_from["buckets"]) | set(m_to["buckets"]),
@@ -1209,10 +1146,7 @@ def table_changes(
 
     def side(manifest) -> DataFrame | None:
         files = [f for b in changed for f in manifest["buckets"].get(b, [])]
-        if not files:
-            return None
-        out = _read_files(spark, target, files)
-        return _pin_schema(out, schema) if schema is not None else out
+        return _read_files(spark, target, files, schema) if files else None
 
     old, new = side(m_from), side(m_to)
     ct = "_change_type"
@@ -1268,44 +1202,16 @@ def rebucket(
     is per-manifest, not per-directory).  The ONLY sanctioned way to
     change the bucket count; merges and lookups refuse a mismatching
     explicit count (``_resolve_n_buckets``)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    current_v = versions[-1]
-    manifest = _read_manifest(spark, target, current_v)
-    state = read_snapshot(spark, target, current_v).withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(*key_cols), F.lit(new_n_buckets))
+    _, current_v, manifest = _open(spark, target)
+    state = _snapshot(spark, target, current_v, manifest).withColumn(
+        BUCKET_COL, _bucket_of(key_cols, new_n_buckets)
     )
-    new_v = current_v + 1
-    data_dir = f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
-    (
-        state.repartition(new_n_buckets, F.col(BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(data_dir)
+    return _commit_state(
+        spark, target, manifest, current_v + 1,
+        state.repartition(new_n_buckets, F.col(BUCKET_COL)), None,
+        f"rebucket:{new_n_buckets}", schema=manifest.get("schema"),
+        n_buckets=new_n_buckets, key_cols=key_cols,
     )
-    new_files = _bucket_files(spark, data_dir)
-    stats = _collect_stats(spark, data_dir) if new_files else {}
-    try:
-        _commit_manifest(
-            spark, target,
-            {
-                "version": new_v,
-                "schema": manifest.get("schema"),
-                "buckets": new_files,
-                "stats": stats,
-                "committed_at": time.time(),
-                "operation": f"rebucket:{new_n_buckets}",
-                "constraints": manifest.get("constraints", {}),
-                "n_buckets": new_n_buckets,
-                "key_cols": key_cols,
-            },
-        )
-    except RuntimeError:
-        fs, jvm = _fs(spark, target)
-        fs.delete(_jpath(jvm, data_dir), True)
-        raise
-    return new_v
 
 
 def vacuum(spark: SparkSession, target: str, keep_last: int = 2) -> list[int]:
@@ -1342,14 +1248,27 @@ def vacuum(spark: SparkSession, target: str, keep_last: int = 2) -> list[int]:
     return drop
 
 
+def _dml_schema(manifest: dict, target: str) -> StructType:
+    schema = _manifest_schema(manifest)
+    if schema is None:
+        raise ValueError(
+            f"{target!r} pre-dates manifest schemas — DML needs the "
+            "committed schema to pin the rewrite"
+        )
+    return schema
+
+
 def _dml_rewrite(
     spark: SparkSession,
     target: str,
+    current_v: int,
+    manifest: dict,
     conjuncts: list[tuple[str, str, object]],
     transform,
     operation: str,
 ) -> int:
-    """Shared engine for declarative DML (DELETE/UPDATE ... WHERE):
+    """Shared engine for declarative DML (DELETE/UPDATE ... WHERE) on
+    version ``current_v`` (whose ``manifest`` the caller opened):
     manifest stats pick the buckets that can possibly hold matching
     rows (same skipping as ``read_where`` — a time-banded DELETE on a
     clustered table rewrites only the touched band), those buckets
@@ -1357,17 +1276,7 @@ def _dml_rewrite(
     everything else is carried by reference.  A conjunction no file
     can satisfy is a metadata no-op: the current version is returned
     and NOTHING is committed."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    current_v = versions[-1]
-    manifest = _read_manifest(spark, target, current_v)
-    schema = _manifest_schema(manifest)
-    if schema is None:
-        raise ValueError(
-            f"{target!r} pre-dates manifest schemas — DML needs the "
-            "committed schema to pin the rewrite"
-        )
+    _dml_schema(manifest, target)
     kept = set(prune_files(manifest, conjuncts))
     affected = sorted(
         b
@@ -1376,35 +1285,14 @@ def _dml_rewrite(
     )
     if not affected:
         return current_v
-    carried = {
-        b: fl for b, fl in manifest["buckets"].items() if b not in affected
-    }
-
-    pred = _conjunct_pred(conjuncts)
-
-    # per-bucket read with the bucket id pinned back on (keys are
-    # unchanged by DML, so rows stay in their committed buckets)
-    parts = [
-        _pin_schema(
-            _read_files(spark, target, manifest["buckets"][b]), schema
-        ).withColumn(BUCKET_COL, F.lit(int(b)))
-        for b in affected
-    ]
-    current = parts[0]
-    for p in parts[1:]:
-        current = current.unionByName(p)
-    new_state = transform(current, pred)
-    constraints = manifest.get("constraints", {})
-    if constraints:
-        _check_constraints(
-            new_state.drop(BUCKET_COL), constraints, f"{operation} state"
-        )
+    # keys are unchanged by DML, so rows stay in their committed buckets
+    current = _read_buckets(spark, target, manifest, affected)
+    new_state = transform(current, _conjunct_pred(conjuncts))
+    _check_constraints(
+        new_state.drop(BUCKET_COL), _constraints(manifest), f"{operation} state"
+    )
     return _commit_state(
-        spark, target, new_state, affected, carried,
-        manifest.get("stats", {}), current_v + 1,
-        operation=operation, constraints=constraints,
-        n_buckets=manifest.get("n_buckets"),
-        key_cols=manifest.get("key_cols"),
+        spark, target, manifest, current_v + 1, new_state, affected, operation
     )
 
 
@@ -1421,7 +1309,10 @@ def delete_where(
     def do_delete(df: DataFrame, pred: Column) -> DataFrame:
         return df.filter(~F.coalesce(pred, F.lit(False)))
 
-    return _dml_rewrite(spark, target, conjuncts, do_delete, "delete_where")
+    _, current_v, manifest = _open(spark, target)
+    return _dml_rewrite(
+        spark, target, current_v, manifest, conjuncts, do_delete, "delete_where"
+    )
 
 
 def update_where(
@@ -1437,17 +1328,8 @@ def update_where(
     Key columns are refused (their hash IS the bucket layout); columns
     not in the schema are refused.  Returns the new version (current
     version for a stats-proven no-op)."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    manifest = _read_manifest(spark, target, versions[-1])
-    schema = _manifest_schema(manifest)
-    if schema is None:
-        raise ValueError(
-            f"{target!r} pre-dates manifest schemas — DML needs the "
-            "committed schema to pin the rewrite"
-        )
-    types = {f.name: f.dataType for f in schema.fields}
+    _, current_v, manifest = _open(spark, target)
+    types = {f.name: f.dataType for f in _dml_schema(manifest, target).fields}
     recorded_keys = set(manifest.get("key_cols") or ())
     for c in set_exprs:
         if c not in types:
@@ -1478,7 +1360,9 @@ def update_where(
             ]
         )
 
-    return _dml_rewrite(spark, target, conjuncts, do_update, "update_where")
+    return _dml_rewrite(
+        spark, target, current_v, manifest, conjuncts, do_update, "update_where"
+    )
 
 
 def restore(spark: SparkSession, target: str, version: int) -> int:
@@ -1488,40 +1372,27 @@ def restore(spark: SparkSession, target: str, version: int) -> int:
     rewrite, full history preserved (the bad versions stay readable).
     Safe with :func:`vacuum`: vacuum keeps files referenced by kept
     manifests, and the restore commit is the newest manifest."""
-    versions = list_versions(spark, target)
-    if not versions:
-        raise FileNotFoundError(f"no committed manifest under {target!r}")
-    if version not in versions:
-        raise FileNotFoundError(f"version {version} not in {versions}")
-    old = _read_manifest(spark, target, version)
+    versions, _, old = _open(spark, target, version)
+    new_v = versions[-1] + 1
     _commit_manifest(
         spark, target,
-        {
-            **{
-                k: old.get(k)
-                for k in (
-                    "schema", "stats", "n_buckets", "key_cols", "constraints"
-                )
-            },
-            "version": versions[-1] + 1,
-            "buckets": old["buckets"],
-            "committed_at": time.time(),
-            "operation": f"restore:{version}",
-        },
+        _manifest(old, new_v, old["buckets"], old.get("stats"), f"restore:{version}"),
     )
-    return versions[-1] + 1
+    return new_v
 
 
 def dml_retry(fn, *args, max_attempts: int = 4, **kwargs) -> int:
-    """Bounded optimistic-concurrency loop for the DML surface —
+    """Bounded optimistic-concurrency loop for every writer —
+    ``dml_retry(merge_versioned, batch, target, key_cols)`` /
     ``dml_retry(delete_where, spark, target, conjuncts)`` /
     ``dml_retry(update_where, spark, target, conjuncts, set_exprs)`` /
-    ``dml_retry(restore, spark, target, v)``.  Same contract as
-    :func:`merge_versioned_retry`: each attempt re-reads the (now
-    newer) manifest and re-derives its rewrite against it, so a lost
-    commit race is re-applied on fresh state, never blindly
-    re-committed.  Raises the final :class:`RuntimeError` when every
-    attempt loses."""
+    ``dml_retry(restore, spark, target, v)``.  On a lost commit race
+    each attempt re-reads the (now newer) manifest and re-derives its
+    rewrite against it, so the change is re-applied on fresh state,
+    never blindly re-committed; a merge re-reads only the affected
+    buckets, so the cost is O(retries × touched data), and its batch
+    DataFrame is a logical plan — recomputing it is safe.  Raises the
+    final :class:`RuntimeError` when every attempt loses."""
     last: RuntimeError | None = None
     for _ in range(max_attempts):
         try:

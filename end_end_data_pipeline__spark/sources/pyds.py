@@ -237,8 +237,8 @@ class JsonlAtomicWriter(DataSourceWriter):
     ``os.replace`` — correct only when driver and executors share one
     local filesystem (local mode, NFS).  On a multi-node cluster or an
     object-store path the staged files would not exist where the
-    driver looks (the ``_hadoop_fs`` pitfall ``streaming/upsert.py``
-    documents), so non-local paths are REFUSED up front rather than
+    driver looks (the pitfall ``sources.manifest_table._fs`` avoids
+    by going through the Hadoop FileSystem API), so non-local paths are REFUSED up front rather than
     failing after the job's tasks all succeeded — the cluster-grade
     path for this protocol is the manifest table's Hadoop-FS commit."""
 

@@ -1,57 +1,29 @@
-"""ST5/ST6: checkpointed stream-to-lake with latest-wins upsert — the
-engine's flagship custom streaming operator (SURVEY.md §7 step 4).
+"""ST5/ST6: checkpointed CDC streams into a table — the engine's
+flagship custom streaming operator (SURVEY.md §7 step 4).
 
 The reference is append-only with at-least-once delivery: replays and
 updates become duplicate lake rows, deletes are lost, and a crash
 between upload and offset auto-commit re-emits whole batches
-(reference ``consumer/consumer.py:21,41-51,66-75``).  Here:
+(reference ``consumer/consumer.py:21,41-51,66-75``).  Here a JSONL
+directory of Debezium envelopes (the test/replay stand-in for Kafka
+topics; ``sources.connectors.open_kafka_cdc_stream`` is the Kafka
+wiring) decodes through ``sources.cdc`` and each micro-batch lands in
+one of two sinks:
 
-- the stream is a file source in tests (JSONL CDC envelopes) and a
-  Kafka source in production — both decode through ``sources.cdc``;
-- ``foreachBatch`` applies MERGE semantics per micro-batch:
-  batch-internal latest-wins, then reconcile against the existing
-  lake state, then dynamically overwrite only the affected
-  key-hash partitions;
-- the checkpoint gives exactly-once-per-sink on top of a replayed
-  source (ST6/ST8) because the merge is idempotent: re-applying a
-  batch yields the same state.
+- the manifest-committed lake table
+  (:func:`stream_cdc_file_source_versioned`): one atomic table version
+  per micro-batch through ``sources.manifest_table.merge_versioned``;
+- a live JDBC (OLTP) table (:func:`stream_cdc_file_source_jdbc`): one
+  database transaction per micro-batch with a batch-id ledger.
 
-The target is laid out as ``p_bucket=<pmod(xxhash64(key), N)>``
-partitions.  Bucketing on the *key hash* (not an event date) makes the
-key→partition mapping immutable, so updates never migrate rows between
-partitions and a delete's partition is computable from the tombstone's
-key alone — no key→partition index needed.  Per micro-batch the merge
-reads back and rewrites only the buckets the batch's keys hash into:
-cost is ``O(table_size × touched_buckets / n_buckets)``, never
-``O(table_size)``.
-
-Crash model (plain parquet — no table format): the overwrite uses
-Spark's dynamic partition overwrite, which stages every new file and
-replaces partition directories only at job commit; a crash before
-commit leaves the old state fully intact.  The non-atomic window is
-the per-partition delete+rename inside commit itself — closing that
-needs a transactional table format (Delta/Iceberg), which this
-container doesn't ship.  The policy here is to *detect* that window
-and refuse to guess: the merge removes the root ``_SUCCESS`` marker
-AFTER materializing its output but BEFORE the overwrite begins, and
-re-creates it only after the overwrite AND dead-bucket cleanup have
-fully applied.  Any crash inside the unprotected span therefore
-leaves data-without-marker, which ``_target_state`` turns into a
-RuntimeError refusal on the next merge — never a silent re-seed that
-would drop previously merged keys.  (Deleting the marker up front is
-what makes detection sound: dynamic partition overwrite never removes
-the *previous* root marker on its own, so without the explicit delete
-a mid-commit crash would masquerade as a committed table.)
-
-For targets that need TRUE atomicity (no refusal window at all) plus
-snapshot isolation and time travel, use the manifest-committed table
-(``sources.manifest_table.merge_versioned``) — same change-row
-contract and per-bucket cost model, immutable data files, commit =
-one manifest rename.
+The checkpoint gives exactly-once-per-sink on top of a replayed
+source (ST6/ST8): both sinks are idempotent, so re-applying a batch
+yields the same state.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,183 +32,27 @@ from pyspark.sql import types as T
 
 from end_end_data_pipeline__spark.sources import cdc
 
-BUCKET_COL = "p_bucket"
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop FS API — works
-    on local paths, HDFS, and s3a alike (unlike ``os.path``, which
-    silently reports False for any remote filesystem)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
-
-
-def _target_state(spark: SparkSession, target_path: str) -> str:
-    """'absent' | 'committed' | error.
-
-    - no directory, or a directory holding only hidden/temporary
-      entries (debris from a job that crashed before any commit) →
-      'absent';
-    - directory with data and a root ``_SUCCESS`` → 'committed';
-    - data WITHOUT ``_SUCCESS`` → RuntimeError: the table is in an
-      ambiguous half-committed state and merging on top of it could
-      lose rows; an operator must repair/restore first.
-    """
-    fs, jpath = _hadoop_fs(spark, target_path)
-    if not fs.exists(jpath):
-        return "absent"
-    entries = [s.getPath().getName() for s in fs.listStatus(jpath)]
-    data = [e for e in entries if not e.startswith(("_", "."))]
-    if not data:
-        return "absent"
-    if "_SUCCESS" in entries:
-        return "committed"
-    raise RuntimeError(
-        f"CDC merge target {target_path!r} contains data but no _SUCCESS "
-        "marker: a previous overwrite was interrupted mid-commit. Refusing "
-        "to merge (treating this as absent state would silently drop all "
-        "previously merged rows). Restore the partition directories or "
-        "remove the target to re-seed."
-    )
-
-
-def merge_batch(
-    batch: DataFrame,
-    target_path: str,
-    key_cols: list[str],
-    version_col: str = "ts_ms",
-    n_buckets: int = 64,
-) -> None:
-    """Idempotent latest-wins merge of decoded change rows into a
-    hash-bucket-partitioned parquet target.
-
-    ``batch`` must carry (key..., op, ``version_col``, after) as
-    produced by ``cdc.decode`` (whose version column is ``ts_ms``; a
-    non-default ``version_col`` means the batch carries that column
-    instead, with the same newest-wins long semantics).  Existing
-    state *of the affected buckets only* is read back as synthetic 'c'
-    changes at version −∞ so one window pass resolves everything; the
-    write dynamically overwrites only those buckets.  ``n_buckets``
-    must stay constant for the lifetime of a target path (it defines
-    the layout).
-    """
-    spark = batch.sparkSession
-    bucket_of = lambda cols: F.pmod(F.xxhash64(*cols), F.lit(n_buckets))  # noqa: E731
-    state = _target_state(spark, target_path)
-    if state == "committed":
-        # buckets this batch touches — ≤ n_buckets scalar values
-        affected = sorted(
-            r[0]
-            for r in batch.select(
-                bucket_of([F.col(k) for k in key_cols]).alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
-        )
-        current = (
-            spark.read.parquet(target_path)
-            .where(F.col(BUCKET_COL).isin(affected))  # partition pruning
-            .drop(BUCKET_COL)
-        )
-        as_changes = current.select(
-            *[F.col(k) for k in key_cols],
-            F.lit("c").alias("op"),
-            F.lit(-1).cast("long").alias(version_col),
-            F.struct(*[F.col(c) for c in current.columns]).alias("after"),
-        )
-        all_changes = batch.unionByName(as_changes)
-    else:
-        affected = None  # first write: every emitted bucket is new
-        all_changes = batch
-    new_state = cdc.apply_latest_state(
-        all_changes, key_cols, version_col=version_col
-    ).withColumn(BUCKET_COL, bucket_of(key_cols))
-    # reading and overwriting the same partitions needs a materialization
-    # barrier → localCheckpoint (bounded by the affected buckets' size).
-    materialized = new_state.localCheckpoint(eager=True)
-    # COMMIT PROTOCOL — the marker delete below is load-bearing.  The
-    # output is now materialized (the target will not be read again), so
-    # drop the root _SUCCESS before any file is touched: from here until
-    # the marker is re-created at the end, a crash leaves
-    # data-without-marker and the next merge's _target_state refuses
-    # with a RuntimeError instead of reading a half-replaced bucket back
-    # as committed state (which would silently drop every key of that
-    # bucket absent from the replayed batch).
-    fs, _ = _hadoop_fs(spark, target_path)
-    marker = spark._jvm.org.apache.hadoop.fs.Path(f"{target_path}/_SUCCESS")
-    fs.delete(marker, False)
-    _overwrite_buckets(materialized, target_path)
-    if affected:
-        # dynamic overwrite only replaces buckets present in the OUTPUT;
-        # a bucket whose every key was deleted emits no rows and would
-        # keep its stale files — drop those directories explicitly.
-        surviving = {
-            r[0] for r in materialized.select(BUCKET_COL).distinct().collect()
-        }
-        for b in affected:
-            if b not in surviving:
-                fs.delete(
-                    spark._jvm.org.apache.hadoop.fs.Path(
-                        f"{target_path}/{BUCKET_COL}={b}"
-                    ),
-                    True,
-                )
-    # marker LAST: its presence certifies "merge fully applied,
-    # including dead-bucket cleanup".
-    fs.create(marker, True).close()
-
-
-def _overwrite_buckets(materialized: DataFrame, target_path: str) -> None:
-    """The dynamic-partition overwrite itself — a seam so crash-injection
-    tests can fail it mid-commit and prove the refusal path fires.
-
-    ``marksuccessfuljobs=false`` is load-bearing: FileOutputCommitter
-    otherwise re-creates the root ``_SUCCESS`` during commitJob, which
-    Spark's commit protocol runs BEFORE the dynamic-partition
-    delete+rename swap — a crash inside that window would leave marker
-    present with a bucket's data gone, and the next merge would read
-    the half-replaced bucket back as committed state (the exact silent
-    re-seed the marker protocol exists to refuse).  With it disabled,
-    the ONLY ``_SUCCESS`` creator is ``merge_batch``'s explicit create
-    after overwrite AND dead-bucket cleanup."""
-    (
-        materialized.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy(BUCKET_COL)
-        .parquet(target_path)
-    )
-
-
-def stream_cdc_file_source(
+def _stream_cdc_batches(
     spark: SparkSession,
     source_dir: str,
     row_schema: T.StructType,
     key_cols: list[str],
-    target_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int,
+    apply: Callable[[DataFrame, int], None],
 ) -> "object":
-    """Wire a JSONL CDC directory (envelope per line — the test/replay
-    stand-in for Kafka topics) through decode → merge.  Returns the
-    started StreamingQuery; callers ``processAllAvailable()`` in tests.
-    """
+    """JSONL CDC directory → ``cdc.decode`` → checkpointed
+    ``foreachBatch(apply)``, run to the end of the available files
+    (``availableNow``).  Returns the started StreamingQuery."""
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(source_dir)
     )
-    changes = cdc.decode(
-        cdc.parse_envelope(raw, row_schema), key_cols
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        merge_batch(batch, target_path, key_cols)
-
+    changes = cdc.decode(cdc.parse_envelope(raw, row_schema), key_cols)
     return (
-        changes.writeStream.foreachBatch(_apply)
+        changes.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -253,73 +69,22 @@ def stream_cdc_file_source_versioned(
     max_files_per_trigger: int = 10,
     n_buckets: int = 64,
 ) -> "object":
-    """:func:`stream_cdc_file_source` on the manifest-committed table
-    backend (``sources.manifest_table``): each micro-batch commits one
-    atomic table version.  Crash semantics compose with the checkpoint:
-    crash before the manifest rename → no version, the replayed batch
-    commits it; crash after the rename but before the checkpoint
-    advances → the replay commits one more version with identical
-    content (converges; versions are cheap — vacuum reclaims).  Unlike
-    the plain-parquet path there is NO operator-repair refusal state.
-    """
+    """CDC stream into the manifest-committed table
+    (``sources.manifest_table``): each micro-batch commits one atomic
+    table version.  Crash semantics compose with the checkpoint: crash
+    before the manifest rename → no version, the replayed batch commits
+    it; crash after the rename but before the checkpoint advances → the
+    replay commits one more version with identical content (converges;
+    versions are cheap — vacuum reclaims)."""
     from end_end_data_pipeline__spark.sources import manifest_table as mt
-
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(source_dir)
-    )
-    changes = cdc.decode(cdc.parse_envelope(raw, row_schema), key_cols)
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         mt.merge_versioned(batch, target_path, key_cols, n_buckets=n_buckets)
 
-    return (
-        changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_cdc_batches(
+        spark, source_dir, row_schema, key_cols, checkpoint_dir,
+        max_files_per_trigger, _apply,
     )
-
-
-def kafka_cdc_source(
-    spark: SparkSession,
-    bootstrap: str,
-    topics: list[str],
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Production source (S2/S3): the reference's three Debezium topics
-    (``banking_server.public.*``, reference
-    ``Connector_post_and_generate.py:23-24``) as one Kafka stream.
-    Untestable in this container (no Kafka); wiring only."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", ",".join(topics))
-        .option("startingOffsets", starting_offsets)
-        .load()
-        .select(
-            F.col("topic"),
-            F.col("value").cast("string").alias("value"),
-        )
-    )
-
-
-def upsert_pipeline_for_table(
-    table: str,
-) -> Callable[[DataFrame], DataFrame]:
-    """Decode+merge closure for one banking table: topic record frame →
-    current silver state (used by ``route_topics`` consumers)."""
-    from end_end_data_pipeline__spark import schemas
-
-    row_schema = schemas.cdc_row_schema(table)
-
-    def run(records: DataFrame) -> DataFrame:
-        changes = cdc.decode(cdc.parse_envelope(records, row_schema), ["id"])
-        state = cdc.apply_latest_state(changes, ["id"])
-        return cdc.silver_banking(state, table)
-
-    return run
 
 
 # ---------------------------------------------------------------------------
@@ -327,9 +92,7 @@ def upsert_pipeline_for_table(
 # ---------------------------------------------------------------------------
 
 
-import re as _re
-
-_SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_SQL_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _check_ident(name: str) -> str:
@@ -496,23 +259,15 @@ def stream_cdc_file_source_jdbc(
     driver: str = "org.apache.derby.jdbc.EmbeddedDriver",
     max_files_per_trigger: int = 10,
 ) -> "object":
-    """:func:`stream_cdc_file_source` with a LIVE JDBC (OLTP) sink:
-    each micro-batch lands as one database transaction via
-    :func:`jdbc_upsert_batch`; the batch-id ledger makes checkpoint
-    replays no-ops, so content is exactly-once end to end."""
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(source_dir)
-    )
-    changes = cdc.decode(cdc.parse_envelope(raw, row_schema), key_cols)
+    """CDC stream into a LIVE JDBC (OLTP) table: each micro-batch lands
+    as one database transaction via :func:`jdbc_upsert_batch`; the
+    batch-id ledger makes checkpoint replays no-ops, so content is
+    exactly-once end to end."""
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         jdbc_upsert_batch(batch, epoch_id, url, table, key_cols, driver)
 
-    return (
-        changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_cdc_batches(
+        spark, source_dir, row_schema, key_cols, checkpoint_dir,
+        max_files_per_trigger, _apply,
     )

@@ -83,7 +83,11 @@ def capture_checkpoint_children():
     ``Scan ExistingRDD`` — file_scans drop to 0 in the consumer digest
     and scan-count / join-shape regressions hidden *inside* the barrier
     became invisible to the lock.  Fingerprinting the checkpointed
-    child plans restores that guard."""
+    child plans restores that guard.
+
+    The patch is process-global, so the capture is for single-threaded
+    tooling: entering it while it is already active raises
+    ``RuntimeError`` instead of stacking a second patch."""
     from contextlib import contextmanager
 
     # Spark 4: concrete sessions build pyspark.sql.classic.dataframe.
@@ -98,6 +102,11 @@ def capture_checkpoint_children():
     def _cm():
         children: list[dict[str, int]] = []
         orig = pdf.DataFrame.localCheckpoint
+        if getattr(orig, "_captures_checkpoint_children", False):
+            raise RuntimeError(
+                "capture_checkpoint_children() is already active; "
+                "nested or concurrent captures are not supported"
+            )
 
         def patched(self, *a, **k):
             children.append(
@@ -105,6 +114,7 @@ def capture_checkpoint_children():
             )
             return orig(self, *a, **k)
 
+        patched._captures_checkpoint_children = True
         pdf.DataFrame.localCheckpoint = patched
         try:
             yield children

@@ -46,10 +46,10 @@ def catalog_pass(spark) -> dict[str, CatalogRun]:
     (test_plans), the plan lock (test_plan_lock) and oracle parity
     (test_oracle_parity).  A dry-plannable query is built under the
     checkpoint-child capture, its plan string and lock entry kept, then
-    the same DataFrame runs against its DuckDB oracle (``count()`` when
-    it has none).  A runtime-locked query (``plan_lock.SKIP``) takes its
-    micro-batch and result digests from one ``runtime_digests`` call,
-    whose DataFrame then runs the same way."""
+    the same DataFrame runs against its DuckDB oracle.  A runtime-locked
+    query (``plan_lock.SKIP``) takes its micro-batch and result digests
+    from one ``runtime_digests`` call, whose DataFrame then runs the
+    same way."""
     from end_end_data_pipeline__spark.plans.catalog import load_all
     from scripts.plan_lock import SKIP, plan_entry, runtime_digests
     from tests.oracle import compare, duck_run
@@ -70,10 +70,7 @@ def catalog_pass(spark) -> dict[str, CatalogRun]:
             run.build_error = traceback.format_exc()
             continue
         try:
-            if q.oracle is None:
-                df.count()
-            else:
-                run.problems = compare(df, duck_run(q.oracle, SF_SMOKE))
+            run.problems = compare(df, duck_run(q.oracle, SF_SMOKE))
         except Exception:
             run.run_error = traceback.format_exc()
         del df

@@ -1,8 +1,8 @@
-"""Manifest-committed table (sources/manifest_table.py): atomic commit
-via manifest rename — crash at ANY point leaves the previous version
-fully visible (no refusal window, unlike the plain-parquet merge's
-detection protocol), plus snapshot isolation / time travel / vacuum /
-optimistic concurrency."""
+"""Manifest-committed table (sources/manifest_table.py), the lake's CDC
+write path: atomic commit via manifest rename — crash at ANY point
+leaves the previous version fully visible — plus latest-wins merge
+semantics, snapshot isolation / time travel / vacuum / optimistic
+concurrency, and the checkpointed CDC stream into it (ST6/ST8)."""
 
 from __future__ import annotations
 
@@ -53,8 +53,8 @@ def test_merge_versioned_roundtrip_and_time_travel(spark, tmp_path):
 def test_merge_versioned_crash_is_atomic(spark, tmp_path, monkeypatch):
     """Kill the writer between data write and manifest rename: the
     table stays at the OLD version with no ambiguity — readers and the
-    next merge proceed normally (the plain-parquet merge can only
-    refuse here; the manifest commit makes the crash invisible)."""
+    next merge proceed normally (no refusal state: the manifest commit
+    makes the crash invisible)."""
     target = str(tmp_path / "t")
     mt.merge_versioned(
         _batch(spark, [(1, 10.0, "c", 1), (2, 20.0, "c", 1)]), target, ["id"],
@@ -125,8 +125,8 @@ def test_vacuum_keeps_recent_versions_readable(spark, tmp_path):
 
 
 def test_merge_versioned_cdc_envelope_end_to_end(spark, tmp_path):
-    """The same banking CDC envelopes the streaming upsert consumes
-    merge through the versioned table identically."""
+    """The banking CDC envelopes the streaming upsert consumes merge
+    through the versioned table: update and delete applied."""
     import json as _json
 
     target = str(tmp_path / "t")
@@ -192,19 +192,103 @@ def test_stream_cdc_versioned_restart_resumes(spark, tmp_path):
     assert s1 == {1: 100.0, 2: 200.0, 3: 300.0}
     v_after_first = mt.list_versions(spark, target)[-1]
 
+    # wave 2: update id=2, delete id=3, insert id=6
     envelopes([(2, 1, "SAVINGS", 999.0, "USD", 1_700_000_000_000_000, "u", 10),
-               (3, 1, "SAVINGS", 300.0, "USD", 1_700_000_000_000_000, "d", 11)])
+               (3, 1, "SAVINGS", 300.0, "USD", 1_700_000_000_000_000, "d", 11),
+               (6, 1, "SAVINGS", 600.0, "USD", 1_700_000_000_000_000, "c", 12)])
     q2 = stream_cdc_file_source_versioned(
         spark, src, schema, ["id"], target, ckpt, n_buckets=4
     )
     q2.awaitTermination()
+    # the restart processed only the new file: one more version
+    assert mt.list_versions(spark, target)[-1] == v_after_first + 1
     s2 = {r["id"]: r["balance"]
           for r in mt.read_snapshot(spark, target).collect()}
-    assert s2 == {1: 100.0, 2: 999.0}
+    assert s2 == {1: 100.0, 2: 999.0, 6: 600.0}
     # and version-pinned history still shows the pre-update state
     old = {r["id"]: r["balance"]
            for r in mt.read_snapshot(spark, target, v_after_first).collect()}
     assert old == s1
+
+
+def test_merge_versioned_idempotent_replay(spark, tmp_path):
+    """ST6/ST8: re-applying the same batch (at-least-once replay) leaves
+    the content unchanged — latest-wins makes the merge idempotent —
+    and a later update still applies on top of the replayed state."""
+    target = str(tmp_path / "t")
+    snap = lambda: sorted(  # noqa: E731
+        (r["id"], r["amount"]) for r in mt.read_snapshot(spark, target).collect())
+    batch = _batch(spark, [(1, 10.0, "c", 100), (2, 5.0, "c", 100)])
+    mt.merge_versioned(batch, target, ["id"], n_buckets=4)
+    first = snap()
+    mt.merge_versioned(batch, target, ["id"])  # replay
+    assert first == snap() == [(1, 10.0), (2, 5.0)]
+
+    mt.merge_versioned(_batch(spark, [(1, 99.0, "u", 500)]), target, ["id"])
+    assert snap() == [(1, 99.0), (2, 5.0)]
+
+
+def test_merge_versioned_rewrites_only_affected_buckets(spark, tmp_path):
+    """The merge is bucket-scoped: a batch touching one key replaces
+    only that key's bucket in the manifest — every other bucket keeps
+    its exact file list."""
+    target = str(tmp_path / "t")
+    n_buckets = 8
+    rows = [(i, float(i), "c", 100) for i in range(1, 33)]
+    mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=n_buckets)
+    before = mt._read_manifest(spark, target, 1)["buckets"]
+    assert len(before) > 1  # 32 keys spread over 8 buckets
+
+    batch2 = _batch(spark, [(1, 999.0, "u", 500)])
+    touched = str(
+        batch2.selectExpr(f"pmod(xxhash64(id), {n_buckets}) b").first()["b"]
+    )
+    mt.merge_versioned(batch2, target, ["id"])
+    after = mt._read_manifest(spark, target, 2)["buckets"]
+    assert set(after) == set(before)
+    assert after[touched] != before[touched]  # rewritten
+    for b in before:
+        if b != touched:
+            assert after[b] == before[b], f"untouched bucket rewritten: {b}"
+    state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+    assert state[1] == 999.0 and len(state) == 32
+
+
+def test_merge_versioned_drops_fully_deleted_bucket(spark, tmp_path):
+    """A bucket whose only key is tombstoned drops out of the manifest,
+    and a later insert re-seeds the emptied table."""
+    target = str(tmp_path / "t")
+    mt.merge_versioned(_batch(spark, [(7, 7.0, "c", 100)]), target, ["id"],
+                       n_buckets=4)
+    assert len(mt._read_manifest(spark, target, 1)["buckets"]) == 1
+
+    mt.merge_versioned(_batch(spark, [(7, None, "d", 200)]), target, ["id"])
+    assert mt._read_manifest(spark, target, 2)["buckets"] == {}
+    mt.merge_versioned(_batch(spark, [(8, 8.0, "c", 300)]), target, ["id"])
+    assert len(mt._read_manifest(spark, target, 3)["buckets"]) == 1
+    assert {r["id"] for r in mt.read_snapshot(spark, target).collect()} == {8}
+
+
+def test_merge_versioned_custom_version_col(spark, tmp_path):
+    """A non-default ``version_col`` threads through decode-shaped
+    batches end to end: within-batch ordering follows it, not arrival
+    order, and a replay is a content no-op."""
+    target = str(tmp_path / "t")
+
+    def to_batch(rows):
+        df = spark.createDataFrame(rows, "id long, amount double, op string, seq long")
+        return df.select(
+            "id", "op", "seq",
+            F.when(F.col("op") != "d", F.struct("id", "amount")).alias("after"),
+        )
+
+    mt.merge_versioned(to_batch([(1, 10.0, "c", 5), (2, 20.0, "c", 5)]),
+                       target, ["id"], version_col="seq", n_buckets=4)
+    batch2 = to_batch([(1, 99.0, "u", 9), (1, 55.0, "u", 7)])
+    mt.merge_versioned(batch2, target, ["id"], version_col="seq")
+    mt.merge_versioned(batch2, target, ["id"], version_col="seq")  # replay
+    state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+    assert state == {1: 99.0, 2: 20.0}
 
 
 def test_read_keys_prunes_buckets(spark, tmp_path):
@@ -246,8 +330,8 @@ def test_two_writer_race_preserves_winner_data(spark, tmp_path, monkeypatch):
     """The full ADVICE-r04 race: A and B both read v1 and both target
     v2.  Writer-unique data dirs mean B's overwrite can never delete
     A's committed part files, B's lost commit deletes only B's own
-    orphan dir, and merge_versioned_retry converges with BOTH batches
-    applied."""
+    orphan dir, and dml_retry(merge_versioned, ...) converges with BOTH
+    batches applied."""
     target = str(tmp_path / "t")
     mt.merge_versioned(_batch(spark, [(1, 1.0, "c", 1)]), target, ["id"], n_buckets=2)
 
@@ -263,8 +347,9 @@ def test_two_writer_race_preserves_winner_data(spark, tmp_path, monkeypatch):
         return [1] if calls["n"] == 1 else real_list(s, t)
 
     monkeypatch.setattr(mt, "list_versions", stale_once)
-    v = mt.merge_versioned_retry(
-        _batch(spark, [(3, 3.0, "c", 3)]), target, ["id"], n_buckets=2
+    v = mt.dml_retry(
+        mt.merge_versioned,
+        _batch(spark, [(3, 3.0, "c", 3)]), target, ["id"], n_buckets=2,
     )
     monkeypatch.undo()
     assert v == 3
@@ -285,7 +370,8 @@ def test_retry_exhaustion_raises_last_race_error(spark, tmp_path, monkeypatch):
     mt.merge_versioned(_batch(spark, [(2, 2.0, "c", 2)]), target, ["id"], n_buckets=2)
     monkeypatch.setattr(mt, "list_versions", lambda s, t: [1])  # forever stale
     with pytest.raises(RuntimeError, match="race"):
-        mt.merge_versioned_retry(
+        mt.dml_retry(
+            mt.merge_versioned,
             _batch(spark, [(3, 3.0, "c", 3)]), target, ["id"],
             n_buckets=2, max_attempts=2,
         )
@@ -1382,3 +1468,62 @@ def test_dml_datetime_predicates_match_read_where(spark, tmp_path):
     mt.delete_where(spark, target, [("created", "<", dt.datetime(2024, 1, 11))])
     left = {r["id"] for r in mt.read_snapshot(spark, target).collect()}
     assert left == set(range(10, 21))  # ids 1..9 (before Jan 11 UTC) gone
+
+
+# ------------------------------------------------ manifest contract
+
+MANIFEST_KEYS = {
+    "version", "schema", "buckets", "stats", "committed_at", "operation",
+    "constraints", "n_buckets", "key_cols",
+}
+
+
+def test_manifest_contract_across_every_commit(spark, tmp_path):
+    """Every version-producing operation commits the same manifest
+    shape: exactly the nine keys, ``stats`` covering exactly the live
+    files, and ``schema`` / ``constraints`` / ``key_cols`` carried over
+    wherever the operation does not change them."""
+    target = str(tmp_path / "t")
+    rows = [(i, float(i), "c", 1) for i in range(1, 17)]
+    assert mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=4) == 1
+    src = spark.createDataFrame([(2, 22.0), (40, 40.0)], "id long, amount double")
+    assert mt.merge_into(src, target, ["id"]) == 2
+    assert mt.set_check_constraint(spark, target, "nonneg", "amount >= 0") == 3
+    assert mt.delete_where(spark, target, [("amount", ">", 30.0)]) == 4
+    assert mt.update_where(spark, target, [("id", "<=", 3)],
+                           {"amount": "amount + 100"}) == 5
+    assert mt.compact(spark, target, cluster_by=["amount"]) == 6
+    assert mt.rebucket(spark, target, ["id"], 2) == 7
+    assert mt.restore(spark, target, 5) == 8
+
+    ms = {v: mt._read_manifest(spark, target, v) for v in range(1, 9)}
+    for v, m in ms.items():
+        assert set(m) == MANIFEST_KEYS, (v, sorted(m))
+        assert m["version"] == v
+        live = {f for fl in m["buckets"].values() for f in fl}
+        assert set(m["stats"]) == live, v
+        assert m["key_cols"] == ["id"], v
+        assert m["schema"] == ms[1]["schema"], v
+        assert isinstance(m["committed_at"], float), v
+    assert [ms[v]["operation"] for v in range(1, 9)] == [
+        "merge_versioned", "merge_into", "set_constraint:nonneg",
+        "delete_where", "update_where", "compact", "rebucket:2", "restore:5",
+    ]
+    assert [ms[v]["committed_at"] for v in range(1, 9)] == sorted(
+        ms[v]["committed_at"] for v in range(1, 9))
+    nonneg = {"nonneg": "amount >= 0"}
+    assert [ms[v]["constraints"] for v in range(1, 9)] == [{}, {}] + [nonneg] * 6
+    assert [ms[v]["n_buckets"] for v in range(1, 9)] == [4] * 6 + [2, 4]
+    # a metadata-only commit re-references its source version's files
+    assert ms[3]["buckets"] == ms[2]["buckets"]
+    assert ms[3]["stats"] == ms[2]["stats"]
+    assert ms[8]["buckets"] == ms[5]["buckets"]
+    assert ms[8]["stats"] == ms[5]["stats"]
+    # the data-rewriting maintenance commits keep the content
+    snap = lambda v: sorted(  # noqa: E731
+        tuple(r) for r in mt.read_snapshot(spark, target, v).collect())
+    assert snap(5) == snap(6) == snap(7) == snap(8)
+    assert snap(8) == sorted(
+        [(i, float(i) + 100.0) for i in (1, 3)] + [(2, 122.0)]
+        + [(i, float(i)) for i in range(4, 17)]
+    )

@@ -16,20 +16,24 @@ from tests.conftest import SF_SMOKE
 from tests.oracle import duck_run
 
 QUERIES = load_all()
-WITH_ORACLE = [n for n, q in QUERIES.items() if q.oracle is not None]
-ROWS_ONLY = [n for n, q in QUERIES.items() if q.oracle is None]
 
 
-@pytest.mark.parametrize("name", WITH_ORACLE)
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_oracle_parity(catalog_pass, name):
     run = catalog_pass[name]
     run.check_ran(name)
     assert not run.problems, f"{name}: {run.problems}"
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_runs(catalog_pass, name):
-    catalog_pass[name].check_ran(name)
+def test_register_requires_an_oracle():
+    """A query with no oracle is refused when it registers, so every
+    catalog query is checked against DuckDB."""
+    from end_end_data_pipeline__spark.plans.catalog import register
+
+    with pytest.raises(ValueError, match="oracle"):
+        register("x")
+    with pytest.raises(ValueError, match="oracle"):
+        register("x", oracle="")
 
 
 def test_sf1_gate_rewrites_equal_brute_oracles():

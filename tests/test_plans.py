@@ -379,3 +379,25 @@ def test_dynamic_partition_pruning(spark, tmp_path):
         F.date_format("o_orderdate", "yyyy-MM") == "1995-06"
     ).count()
     assert joined.count() == want
+
+
+def test_checkpoint_capture_refuses_nesting():
+    """``plan_lock.capture_checkpoint_children`` patches
+    ``DataFrame.localCheckpoint`` process-wide: a second entry while
+    the patch is active raises instead of stacking patches, and the
+    original method is back after both exits."""
+    from scripts.plan_lock import capture_checkpoint_children
+
+    try:
+        import pyspark.sql.classic.dataframe as pdf
+    except ImportError:  # pre-4.0 layout
+        import pyspark.sql.dataframe as pdf
+
+    orig = pdf.DataFrame.localCheckpoint
+    with capture_checkpoint_children():
+        assert pdf.DataFrame.localCheckpoint is not orig
+        with pytest.raises(RuntimeError, match="already active"):
+            with capture_checkpoint_children():
+                pass
+        assert pdf.DataFrame.localCheckpoint is not orig
+    assert pdf.DataFrame.localCheckpoint is orig

@@ -1,5 +1,8 @@
 """Streaming-core tests: CDC decode/apply semantics, watermark
-late-data drops (ST3), checkpointed upsert idempotency (ST6/ST8)."""
+late-data drops (ST3), stateful operators, and the checkpointed CDC
+upsert stream (ST6/ST8) end to end into its manifest-table sink.  The
+sink's merge and crash semantics are tested in
+tests/test_manifest_table.py."""
 
 from __future__ import annotations
 
@@ -12,7 +15,10 @@ from pyspark.sql import functions as F
 
 from end_end_data_pipeline__spark import schemas
 from end_end_data_pipeline__spark.sources import cdc
-from end_end_data_pipeline__spark.streaming.upsert import merge_batch, stream_cdc_file_source
+from end_end_data_pipeline__spark.sources import manifest_table as mt
+from end_end_data_pipeline__spark.streaming.upsert import (
+    stream_cdc_file_source_versioned,
+)
 
 
 def _tx_envelope(id, amount, op, ts_ms, account_id=1):
@@ -114,182 +120,6 @@ def test_watermark_drops_late_rows(spark):
     assert out.get(10) == 1, out
 
 
-def test_upsert_merge_idempotent_replay(spark):
-    """ST6/ST8: re-applying the same batch (at-least-once replay) leaves
-    the lake state unchanged — the merge is idempotent."""
-    tmp = tempfile.mkdtemp(prefix="merge_")
-    target = os.path.join(tmp, "target")
-    lines = [
-        _tx_envelope(1, 10.0, "c", 100),
-        _tx_envelope(2, 5.0, "c", 100),
-    ]
-    raw = spark.createDataFrame([(l,) for l in lines], ["value"])
-    batch = cdc.decode(
-        cdc.parse_envelope(raw, schemas.cdc_row_schema("transactions")), ["id"]
-    )
-    merge_batch(batch, target, ["id"])
-    first = sorted((r["id"], r["amount"]) for r in spark.read.parquet(target).collect())
-    merge_batch(batch, target, ["id"])  # replay
-    second = sorted((r["id"], r["amount"]) for r in spark.read.parquet(target).collect())
-    assert first == second == [(1, 10.0), (2, 5.0)]
-
-    # later update arrives; earlier replay of the old batch must not regress it
-    upd = spark.createDataFrame([(_tx_envelope(1, 99.0, "u", 500),)], ["value"])
-    merge_batch(
-        cdc.decode(cdc.parse_envelope(upd, schemas.cdc_row_schema("transactions")), ["id"]),
-        target, ["id"],
-    )
-    state = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert state[1] == 99.0
-
-
-def test_merge_batch_rewrites_only_affected_buckets(spark, tmp_path):
-    """The merge must be partition-scoped: a micro-batch touching one
-    key rewrites only that key's hash bucket — every other bucket's
-    files are bit-for-bit untouched (same paths, same mtimes)."""
-    import glob
-
-    target = str(tmp_path / "target")
-    n_buckets = 8
-    base = [_tx_envelope(i, float(i), "c", 100) for i in range(1, 33)]
-    raw = spark.createDataFrame([(l,) for l in base], ["value"])
-    merge_batch(
-        cdc.decode(cdc.parse_envelope(raw, schemas.cdc_row_schema("transactions")), ["id"]),
-        target, ["id"], n_buckets=n_buckets,
-    )
-    bucket_dirs = sorted(glob.glob(os.path.join(target, "p_bucket=*")))
-    assert len(bucket_dirs) > 1  # 32 keys spread over 8 buckets
-
-    def listing(d):
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d)
-            if not f.startswith((".", "_"))
-        }
-
-    before = {d: listing(d) for d in bucket_dirs}
-
-    upd = spark.createDataFrame([(_tx_envelope(1, 999.0, "u", 500),)], ["value"])
-    batch2 = cdc.decode(
-        cdc.parse_envelope(upd, schemas.cdc_row_schema("transactions")), ["id"]
-    )
-    touched = batch2.selectExpr(f"pmod(xxhash64(id), {n_buckets}) b").first()["b"]
-    merge_batch(batch2, target, ["id"], n_buckets=n_buckets)
-
-    for d in bucket_dirs:
-        if d.endswith(f"p_bucket={touched}"):
-            assert listing(d) != before[d]  # rewritten
-        else:
-            assert listing(d) == before[d], f"untouched bucket rewritten: {d}"
-    state = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert state[1] == 999.0 and len(state) == 32
-
-
-def test_merge_batch_drops_fully_deleted_bucket(spark, tmp_path):
-    """A bucket whose only key is tombstoned must lose its partition
-    dir (dynamic overwrite alone would leave the stale files)."""
-    import glob
-
-    target = str(tmp_path / "target")
-    raw = spark.createDataFrame([(_tx_envelope(7, 7.0, "c", 100),)], ["value"])
-    dec = lambda df: cdc.decode(  # noqa: E731
-        cdc.parse_envelope(df, schemas.cdc_row_schema("transactions")), ["id"]
-    )
-    merge_batch(dec(raw), target, ["id"], n_buckets=4)
-    assert len(glob.glob(os.path.join(target, "p_bucket=*"))) == 1
-
-    tomb = spark.createDataFrame([(_tx_envelope(7, None, "d", 200),)], ["value"])
-    merge_batch(dec(tomb), target, ["id"], n_buckets=4)
-    assert glob.glob(os.path.join(target, "p_bucket=*")) == []
-    # and a later insert re-seeds cleanly on the emptied table
-    re_ins = spark.createDataFrame([(_tx_envelope(8, 8.0, "c", 300),)], ["value"])
-    merge_batch(dec(re_ins), target, ["id"], n_buckets=4)
-    assert {r["id"] for r in spark.read.parquet(target).collect()} == {8}
-
-
-def test_merge_batch_refuses_ambiguous_target(spark, tmp_path):
-    """Data present without a root _SUCCESS marker = interrupted
-    commit; merging on top could lose rows, so it must raise."""
-    import pytest
-
-    target = str(tmp_path / "target")
-    raw = spark.createDataFrame([(_tx_envelope(1, 1.0, "c", 100),)], ["value"])
-    batch = cdc.decode(
-        cdc.parse_envelope(raw, schemas.cdc_row_schema("transactions")), ["id"]
-    )
-    merge_batch(batch, target, ["id"])
-    os.remove(os.path.join(target, "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="_SUCCESS"):
-        merge_batch(batch, target, ["id"])
-
-
-def test_merge_batch_crash_mid_commit_detected(spark, tmp_path, monkeypatch):
-    """Crash-injection for the _SUCCESS commit protocol: kill the
-    dynamic overwrite mid-commit, AFTER a bucket directory was already
-    destroyed (the non-atomic delete+rename window inside commit).
-    Because the merge drops the root marker before the overwrite
-    starts, the next merge must hit the RuntimeError refusal path —
-    never read the half-replaced bucket back as committed empty state
-    and silently drop its keys."""
-    import glob
-    import shutil
-
-    from end_end_data_pipeline__spark.streaming import upsert
-
-    target = str(tmp_path / "target")
-    dec = lambda df: cdc.decode(  # noqa: E731
-        cdc.parse_envelope(df, schemas.cdc_row_schema("transactions")), ["id"]
-    )
-    base = spark.createDataFrame(
-        [(_tx_envelope(i, float(i), "c", 100),) for i in range(1, 9)], ["value"]
-    )
-    merge_batch(dec(base), target, ["id"], n_buckets=2)
-    assert os.path.exists(os.path.join(target, "_SUCCESS"))
-
-    def crashing(materialized, path):
-        victim = sorted(glob.glob(os.path.join(target, "p_bucket=*")))[0]
-        shutil.rmtree(victim)  # commit half-applied: bucket gone
-        raise RuntimeError("simulated executor loss mid-commit")
-
-    monkeypatch.setattr(upsert, "_overwrite_buckets", crashing)
-    upd = spark.createDataFrame([(_tx_envelope(1, 999.0, "u", 500),)], ["value"])
-    with pytest.raises(RuntimeError, match="simulated"):
-        merge_batch(dec(upd), target, ["id"], n_buckets=2)
-    # the crash window must leave data WITHOUT a marker (= detectable)
-    assert not os.path.exists(os.path.join(target, "_SUCCESS"))
-
-    monkeypatch.undo()
-    with pytest.raises(RuntimeError, match="_SUCCESS"):
-        merge_batch(dec(upd), target, ["id"], n_buckets=2)
-
-
-def test_merge_batch_custom_version_col(spark, tmp_path):
-    """A non-default ``version_col`` threads through decode-shaped
-    batches end-to-end (regression: the synthetic-baseline alias used
-    to collide with the hardcoded ts_ms ordering and throw on union)."""
-    target = str(tmp_path / "target")
-
-    def to_batch(rows):
-        df = spark.createDataFrame(rows, "id long, amount double, op string, seq long")
-        return df.select(
-            "id",
-            "op",
-            "seq",
-            F.when(
-                F.col("op") != "d", F.struct("id", "amount")
-            ).alias("after"),
-        )
-
-    merge_batch(to_batch([(1, 10.0, "c", 5), (2, 20.0, "c", 5)]),
-                target, ["id"], version_col="seq")
-    # within-batch ordering must follow seq, not arrival order
-    batch2 = to_batch([(1, 99.0, "u", 9), (1, 55.0, "u", 7)])
-    merge_batch(batch2, target, ["id"], version_col="seq")
-    merge_batch(batch2, target, ["id"], version_col="seq")  # replay
-    state = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert state == {1: 99.0, 2: 20.0}
-
-
 def test_sessionize_out_of_order_batches_match_batch(spark, tmp_path):
     """Out-of-order arrival across micro-batches: with allowed
     lateness, stragglers merge into the right session (even bridging
@@ -368,33 +198,78 @@ def test_sessionize_drops_beyond_lateness(spark, tmp_path):
     assert got == [(50_000_000, 50_000_000, 1)]
 
 
-def test_stream_cdc_file_source_end_to_end(spark):
+def _snapshot(spark, target, col):
+    return {r["id"]: r[col] for r in mt.read_snapshot(spark, target).collect()}
+
+
+def test_stream_cdc_file_source_end_to_end(spark, tmp_path):
     """File-source CDC stream → checkpointed foreachBatch merge →
     restart with new data resumes from the checkpoint (no reprocess)."""
-    tmp = tempfile.mkdtemp(prefix="stream_cdc_")
-    src, target, ckpt = (os.path.join(tmp, d) for d in ("src", "target", "ckpt"))
+    src, target, ckpt = (str(tmp_path / d) for d in ("src", "target", "ckpt"))
     os.makedirs(src)
 
     def write_lines(name, lines):
         with open(os.path.join(src, name), "w") as f:
             f.write("\n".join(lines))
 
+    schema = schemas.cdc_row_schema("transactions")
     write_lines("b1.jsonl", [_tx_envelope(1, 10.0, "c", 100),
                              _tx_envelope(2, 5.0, "c", 100)])
-    q = stream_cdc_file_source(
-        spark, src, schemas.cdc_row_schema("transactions"), ["id"], target, ckpt
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(target).count() == 2
+    stream_cdc_file_source_versioned(
+        spark, src, schema, ["id"], target, ckpt, n_buckets=4
+    ).awaitTermination()
+    assert _snapshot(spark, target, "amount") == {1: 10.0, 2: 5.0}
 
     write_lines("b2.jsonl", [_tx_envelope(1, 42.0, "u", 900),
                              _tx_envelope(2, None, "d", 900)])
-    q2 = stream_cdc_file_source(
-        spark, src, schemas.cdc_row_schema("transactions"), ["id"], target, ckpt
-    )
-    q2.awaitTermination()
-    state = {r["id"]: r["amount"] for r in spark.read.parquet(target).collect()}
-    assert state == {1: 42.0}
+    stream_cdc_file_source_versioned(
+        spark, src, schema, ["id"], target, ckpt, n_buckets=4
+    ).awaitTermination()
+    assert _snapshot(spark, target, "amount") == {1: 42.0}
+
+
+def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
+    """Exactly-once across restarts (ST6/ST8): run the checkpointed
+    upsert stream, stop, deliver more CDC files (updates + a delete),
+    start a NEW query on the SAME checkpoint — the second run must
+    process only the new files and converge to the merged state."""
+    src, target, ckpt = (str(tmp_path / d) for d in ("src", "target", "ckpt"))
+    os.makedirs(src)
+    schema = schemas.cdc_row_schema("accounts")
+
+    def envelopes(rows):
+        df = spark.createDataFrame(
+            rows,
+            "id long, customer_id long, account_type string, balance double,"
+            " currency string, created_at long, op string, ts_ms long",
+        )
+        cdc.encode_envelope(df, "op", "ts_ms", "accounts").coalesce(
+            1
+        ).write.mode("append").text(src)
+
+    envelopes([(i, 1, "SAVINGS", 100.0 * i, "USD", 1_700_000_000_000_000, "c", i)
+               for i in range(1, 6)])
+    stream_cdc_file_source_versioned(
+        spark, src, schema, ["id"], target, ckpt, n_buckets=4
+    ).awaitTermination()
+    assert _snapshot(spark, target, "balance") == {
+        i: 100.0 * i for i in range(1, 6)}
+    versions_after_first = mt.list_versions(spark, target)
+
+    # batch 2: update id=2, delete id=3, insert id=6
+    envelopes([
+        (2, 1, "SAVINGS", 999.0, "USD", 1_700_000_000_000_000, "u", 100),
+        (3, 1, "SAVINGS", 300.0, "USD", 1_700_000_000_000_000, "d", 101),
+        (6, 1, "SAVINGS", 600.0, "USD", 1_700_000_000_000_000, "c", 102),
+    ])
+    stream_cdc_file_source_versioned(
+        spark, src, schema, ["id"], target, ckpt, n_buckets=4
+    ).awaitTermination()
+    # the restart processed only the new file: exactly one more version
+    assert mt.list_versions(spark, target) == (
+        versions_after_first + [versions_after_first[-1] + 1])
+    assert _snapshot(spark, target, "balance") == {
+        1: 100.0, 2: 999.0, 4: 400.0, 5: 500.0, 6: 600.0}
 
 
 def test_stateful_user_stats_matches_batch(spark, tmp_path):
@@ -433,52 +308,6 @@ def test_stateful_user_stats_matches_batch(spark, tmp_path):
         .collect()
     }
     assert final == {1: (3, 300), 2: (2, 75), 3: (1, 10)}
-
-
-def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
-    """Exactly-once across restarts (ST6/ST8): run the checkpointed
-    upsert stream, stop, deliver more CDC files (updates + a delete),
-    start a NEW query on the SAME checkpoint — the second run must
-    process only the new files and converge to the merged state."""
-    import os
-
-    from end_end_data_pipeline__spark import schemas
-    from end_end_data_pipeline__spark.sources import cdc as cdc_mod
-    from end_end_data_pipeline__spark.streaming.upsert import stream_cdc_file_source
-
-    src, target, ckpt = (str(tmp_path / d) for d in ("src", "target", "ckpt"))
-    os.makedirs(src)
-    schema = schemas.cdc_row_schema("accounts")
-
-    def envelopes(rows, fname):
-        df = spark.createDataFrame(
-            rows,
-            "id long, customer_id long, account_type string, balance double,"
-            " currency string, created_at long, op string, ts_ms long",
-        )
-        cdc_mod.encode_envelope(df, "op", "ts_ms", "accounts").coalesce(
-            1
-        ).write.mode("append").text(src)
-
-    base = [(i, 1, "SAVINGS", 100.0 * i, "USD", 1_700_000_000_000_000, "c", i)
-            for i in range(1, 6)]
-    envelopes(base, "b1")
-    q1 = stream_cdc_file_source(spark, src, schema, ["id"], target, ckpt)
-    q1.awaitTermination()
-    state1 = {r["id"]: r["balance"] for r in spark.read.parquet(target).collect()}
-    assert state1 == {i: 100.0 * i for i in range(1, 6)}
-
-    # batch 2: update id=2, delete id=3, insert id=6
-    later = [
-        (2, 1, "SAVINGS", 999.0, "USD", 1_700_000_000_000_000, "u", 100),
-        (3, 1, "SAVINGS", 300.0, "USD", 1_700_000_000_000_000, "d", 101),
-        (6, 1, "SAVINGS", 600.0, "USD", 1_700_000_000_000_000, "c", 102),
-    ]
-    envelopes(later, "b2")
-    q2 = stream_cdc_file_source(spark, src, schema, ["id"], target, ckpt)
-    q2.awaitTermination()
-    state2 = {r["id"]: r["balance"] for r in spark.read.parquet(target).collect()}
-    assert state2 == {1: 100.0, 2: 999.0, 4: 400.0, 5: 500.0, 6: 600.0}
 
 
 def test_tws_backend_guarded_without_protobuf(spark):
@@ -577,33 +406,3 @@ def test_stream_hll_incremental_equals_batch_sketch(spark):
     ).collect()[0]
     assert row["hll_estimate"] == direct["hll_estimate"]
     assert row["n_zero_registers"] == direct["n_zero_registers"]
-
-
-def test_overwrite_never_creates_success_marker(spark, tmp_path):
-    """r07 review: Spark's commit protocol writes the committer's
-    _SUCCESS BEFORE the dynamic-partition delete+rename swap, so the
-    auto-marker must be suppressed — otherwise a crash inside that
-    window leaves marker-present with a bucket's data gone and the next
-    merge silently re-seeds from the half-replaced state.  The ONLY
-    _SUCCESS creator must be merge_batch's explicit create after
-    overwrite AND cleanup."""
-    import os
-
-    from end_end_data_pipeline__spark.streaming import upsert as U
-
-    target = str(tmp_path / "t")
-    df = spark.range(10).select(
-        "id", F.pmod(F.xxhash64("id"), F.lit(4)).alias(U.BUCKET_COL)
-    )
-    U._overwrite_buckets(df, target)
-    assert not os.path.exists(os.path.join(target, "_SUCCESS"))
-    # the full merge DOES end committed (explicit marker)
-    batch = spark.createDataFrame(
-        [(1, "c", 1)], "id long, op string, ts_ms long"
-    ).select(
-        "id", "op", "ts_ms",
-        F.when(F.col("op") != "d", F.struct("id")).alias("after"),
-    )
-    target2 = str(tmp_path / "t2")
-    U.merge_batch(batch, target2, ["id"], n_buckets=2)
-    assert os.path.exists(os.path.join(target2, "_SUCCESS"))
