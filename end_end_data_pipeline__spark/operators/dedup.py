@@ -17,18 +17,10 @@ Scale design: every variant avoids the O(n²) cross join —
   (see ``operators.similarity``).
 
 Shuffle-key skew: MinHash band hashes and SimHash chunk values are
-uniformly distributed by construction (hashes).  Raw shingles are NOT —
-natural-language n-grams are Zipfian, and a shingle occurring in m
-documents emits O(m²) candidate pairs from the inverted-index self-join.
-``ngram_jaccard_pairs`` therefore takes a ``max_shingle_df`` cap: the
-index drops shingles whose document frequency exceeds it *for candidate
-generation only*, and candidates are then verified against the FULL
-shingle sets, so reported Jaccard values stay exact.  The cap bounds
-worst-case pair fan-out at ``max_shingle_df²`` per shingle; a pair is
-missed only if every shingle it shares is hotter than the cap — for
-near-dups (≥ 0.5 Jaccard over 3-grams) that requires the pair to be
-built entirely from boilerplate, the standard accepted trade
-(df-capping as in common LLM-dedup pipelines).
+uniformly distributed by construction (hashes).  Raw shingles are NOT
+(natural-language n-grams are Zipfian): the exact n-gram self-join
+emits Σ df² rows over the index, which stays small while the max
+shingle df does — at most 77 on every corpus this repo runs.
 """
 
 from __future__ import annotations
@@ -109,7 +101,7 @@ def _verify_exact_jaccard(
     candidates: DataFrame, doc_shingle_sets: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact Jaccard over full shingle sets for candidate (doc_a, doc_b)
-    pairs — shared verification tail of the LSH and df-capped paths.
+    pairs — the shared verification tail of the LSH paths.
     Joins key on doc ids (uniform), cost ∝ candidates, never n²."""
     ds = doc_shingle_sets
     return (
@@ -133,116 +125,18 @@ def ngram_jaccard_pairs(
     id_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over word n-gram sets for every pair
     sharing ≥ 1 shingle (inverted-index join — never a cross join).
 
-    ``max_shingle_df`` bounds the Zipf-skew tail: shingles appearing in
-    more than that many documents are dropped from the index *before*
-    the self-join (each contributes O(df²) pairs), and the surviving
-    candidates are verified against full shingle sets so the Jaccard
-    values are still exact.  ``None`` keeps every shingle (exact
-    recall, unbounded hot-key fan-out — small corpora only).
-
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥ threshold.
     """
-    # the index carries ONLY (doc, shingle): tacking size("sh") onto the
-    # explode re-evaluates the shingle expression per exploded row (the
-    # Generate's child projection gets collapsed) — set sizes are instead
-    # recovered from the index itself, since shingles are distinct per doc
-    ds = _doc_shingles(df, text_col, id_col, n)
-    if max_shingle_df is not None:
-        # the capped path reads the shingle sets five ways (sizes,
-        # df-count, anti-join both sides, hot-sets) — materialize the
-        # (doc, sh) ARRAYS once (r13; r12 materialized the exploded
-        # index) so set sizes come from ``size(sh)`` with NO
-        # full-index groupBy shuffle, and every exploded consumer
-        # re-reads materialized arrays instead of re-running the
-        # tokenizer.  This is the classic "build the inverted index"
-        # stage of a dedup pipeline: linear in corpus size, spills to
-        # local disk.
-        ds = ds.localCheckpoint(eager=False)
+    # the (doc, sh) ARRAYS are read twice (the exploded index and the
+    # set sizes) — materialize them once so the tokenizer runs once, not
+    # once per consumer (the dry plan scans the source 4× without it),
+    # and set sizes come from ``size(sh)`` with no per-doc groupBy
+    ds = _doc_shingles(df, text_col, id_col, n).localCheckpoint(eager=False)
     inv = explode_safe(ds, ["doc"], F.col("sh"), "shingle")
-    if max_shingle_df is not None:
-        # df per shingle via groupBy (map-side combinable, so hot shingles
-        # cost one partial count per mapper, not a single giant partition);
-        # the anti-join dropping them is linear and AQE-skew-splittable.
-        hot = (
-            inv.groupBy("shingle")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
-            .select("shingle")
-            # consumed twice (anti-join + hot-set join) and tiny by
-            # construction (shingles hotter than the cap) — materialize
-            # so the full-index df-count shuffle runs ONCE, not once
-            # per consumer subtree (r13; the r12 dry plan built it 4×)
-            .localCheckpoint(eager=False)
-        )
-        capped = inv.join(hot, "shingle", "left_anti")
-        a, b = capped.alias("a"), capped.alias("b")
-        # per-pair count of shared RARE shingles — the only self-join,
-        # and its worst key fans out ≤ max_shingle_df² pairs
-        rare_common = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count("*").alias("rare_common"))
-        )
-        # ONE per-doc info row — set size (free from the materialized
-        # arrays) plus the doc's (small) set of hot shingles, so the
-        # reported jaccard still counts hot shingles and values stay
-        # EXACT; only pairs sharing no rare shingle are skipped.  The
-        # pair verify then joins info twice (r12 joined sizes AND
-        # hotsets per side — 4 pair-sized joins; r13: 2).
-        no_hot = F.array().cast("array<string>")
-        doc_hot = (
-            inv.join(hot, "shingle")
-            .groupBy("doc")
-            .agg(F.collect_set("shingle").alias("hotset"))
-        )
-        info = (
-            ds.select("doc", F.size("sh").alias("n_sh"))
-            .join(doc_hot, "doc", "left")
-            .select(
-                "doc", "n_sh", F.coalesce("hotset", no_hot).alias("hotset")
-            )
-            # one row per doc, consumed by both pair sides
-            .localCheckpoint(eager=False)
-        )
-        paired = (
-            rare_common.join(
-                info.select(
-                    F.col("doc").alias("doc_a"),
-                    F.col("n_sh").alias("na"),
-                    F.col("hotset").alias("hot_a"),
-                ),
-                "doc_a",
-            )
-            .join(
-                info.select(
-                    F.col("doc").alias("doc_b"),
-                    F.col("n_sh").alias("nb"),
-                    F.col("hotset").alias("hot_b"),
-                ),
-                "doc_b",
-            )
-            .withColumn(
-                "common",
-                F.col("rare_common")
-                + F.size(F.array_intersect(F.col("hot_a"), F.col("hot_b"))),
-            )
-        )
-        jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-        return (
-            paired.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-    sizes = inv.groupBy("doc").agg(F.count("*").alias("n_sh"))
     a, b = inv.alias("a"), inv.alias("b")
     common = (
         a.join(
@@ -253,6 +147,7 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count("*").alias("common"))
     )
+    sizes = ds.select("doc", F.size("sh").alias("n_sh"))
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     return (
         common.join(

@@ -494,16 +494,9 @@ def corpus_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard pairs ≥ 0.5 via inverted-index
     self-join (only documents sharing a shingle are paired — never a
-    cross join; the oracle brute-forces the same arithmetic).
-
-    The index is df-capped at 128 docs/shingle to bound Zipf-skew pair
-    fan-out; verification runs on full shingle sets so values stay
-    exact, and the fixture's max df is 25 (sf0.1), so the cap provably
-    leaves this output identical to the uncapped form."""
+    cross join; the oracle brute-forces the same arithmetic)."""
     docs = lake.load_table(spark, "documents", sf_dir)
-    return dedup.ngram_jaccard_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, max_shingle_df=128
-    )
+    return dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
 
 
 _SHINGLE_CTE = """

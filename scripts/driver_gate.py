@@ -17,10 +17,6 @@ instead of a session claim:
     python scripts/driver_gate.py --sf /root/testdata/sf0.001
     python scripts/driver_gate.py --out GATE.json # write a report
 
-Rows-only queries (no oracle) get the driver's weaker check: the query
-must run AND its result must survive the driver's pandas sort
-(``toPandas().sort_values(list(cols))`` — no array/struct cells).
-
 Exit code 0 iff every checked query passes.
 """
 
@@ -137,27 +133,21 @@ def main() -> int:
             continue
         try:
             sdf = queries[name](spark, args.sf)
-            if name in oracles:
-                facets = compare_structured(
-                    sdf.toPandas(), duck_run(oracles[name], args.sf)
-                )
-                row["rows_match"] = facets["rows_match"]
-                row["schema_match"] = facets["schema_match"]
-                row["hash_match"] = facets["hash_match"]
-                if facets["err"]:
-                    row["err"] = facets["err"][:300]
-                    n_fail += 1
-            else:
-                pdf = sdf.toPandas()
-                pdf.sort_values(list(pdf.columns))  # the driver's sort probe
-                row["rows_match"] = len(pdf) >= 0
-                row["err"] = "no_oracle"
+            facets = compare_structured(
+                sdf.toPandas(), duck_run(oracles[name], args.sf)
+            )
+            row["rows_match"] = facets["rows_match"]
+            row["schema_match"] = facets["schema_match"]
+            row["hash_match"] = facets["hash_match"]
+            if facets["err"]:
+                row["err"] = facets["err"][:300]
+                n_fail += 1
         except Exception as exc:  # noqa: BLE001 — record and keep sweeping
             row["err"] = f"ERR {type(exc).__name__}: {exc}"[:300]
             n_fail += 1
         row["sec"] = round(time.time() - t0, 2)
         report[name] = row
-        status = "MATCH" if row["hash_match"] else (row["err"] or "rows-only")
+        status = "MATCH" if row["hash_match"] else row["err"]
         print(f"[{i + 1}/{len(picked)}] {name}: {status} ({row['sec']}s)",
               flush=True)
 

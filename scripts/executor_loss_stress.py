@@ -17,7 +17,7 @@ corruption and fails this script.  This is the failure mode that
 matters at 1000 executors, where executor churn is routine: wrong
 answers are unacceptable; loud retry-or-fail is the contract.
 
-Two subjects per trial batch:
+Four subjects, taken in turn:
 
 * ``lineage`` — a pure-DataFrame catalog-shaped aggregation (no
   checkpoint): Spark must ALWAYS recover this one (shuffle files died
@@ -27,6 +27,10 @@ Two subjects per trial batch:
   partition contents via eager localCheckpoint): expected outcome is
   ``identical`` when the killed executor held no still-needed blocks,
   ``failed_loudly`` when it did.
+* ``lazy_ckpt_dedup`` / ``ngram_jaccard_pairs`` — the MinHash LSH and
+  exact n-gram dedup operators over sf0.1 ``documents``; each holds a
+  lazy ``localCheckpoint`` of its shingle sets, so either outcome is
+  allowed.
 
 Usage:  python scripts/executor_loss_stress.py [n_trials] [out.json]
 
@@ -80,6 +84,7 @@ def subjects(spark):
     no cached partitions survive from the previous one."""
     from pyspark.sql import functions as F
 
+    from end_end_data_pipeline__spark.operators import dedup
     from end_end_data_pipeline__spark.operators.scale import (
         ordered_prefix_sums,
     )
@@ -107,25 +112,27 @@ def subjects(spark):
             F.sum("__cum_q").alias("s"), F.count(F.lit(1)).alias("n")
         )
 
+    # the dedup operators hold LAZY executor-local localCheckpoints of
+    # their shingle sets — exercise them end-to-end under executor loss.
+    # Expected outcomes: identical (blocks survived / recomputed before
+    # materialization) or failed_loudly (lost materialized blocks cannot
+    # recompute) — never a silent wrong answer.
     def lazy_ckpt_dedup():
-        # r13 (ADVICE r12): the dedup/interval queries now hold LAZY
-        # executor-local localCheckpoints (shingle sets, hot frame,
-        # per-doc info) — exercise one end-to-end under executor loss.
-        # Expected outcomes: identical (blocks survived / recomputed
-        # before materialization) or failed_loudly (lost materialized
-        # blocks cannot recompute) — never a silent wrong answer.
-        from end_end_data_pipeline__spark.operators import dedup
-
         docs = lake.load_table(spark, "documents", SF_DIR)
         return dedup.minhash_lsh_pairs(
             docs, "text", "doc_id", n=3, num_hashes=32, bands=8,
             verify_threshold=0.5, hash_family="xxhash64",
         )
 
+    def ngram_jaccard_pairs():
+        docs = lake.load_table(spark, "documents", SF_DIR)
+        return dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
+
     return {
         "lineage": lineage,
         "checkpointed": checkpointed,
         "lazy_ckpt_dedup": lazy_ckpt_dedup,
+        "ngram_jaccard_pairs": ngram_jaccard_pairs,
     }
 
 

@@ -15,11 +15,7 @@ machine-checked first:
   exact support cover); |intersection| via group-count over shared
   distinct shingles; the jaccard expression keeps the catalog oracle's
   exact operand types (``CAST(inter AS DOUBLE) / (na + nb - inter)``,
-  BIGINT denominator) so the division is bit-identical.  Structurally
-  this still differs from the engine (no df cap, no hot-set split, a
-  different join/aggregation shape); the gate additionally asserts the
-  corpus' max shingle df stays <= the engine's 128 cap so the capped
-  engine path is provably inert.
+  BIGINT denominator) so the division is bit-identical.
 - **fuzzy**: candidates from a two-key pigeonhole block cover.  For
   equal-length strings, one substitution at position p leaves either
   the first 15 chars (p >= 15) or the last 3 chars (p <= 14) intact,
@@ -81,13 +77,6 @@ NGRAM_FAST = """
     WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.5
 """
 
-NGRAM_MAXDF = """
-    WITH {shingle_cte},
-    inv AS (SELECT doc_id, unnest(sh) AS s FROM ds)
-    SELECT coalesce(max(df), 0) AS max_df
-    FROM (SELECT s, count(*) AS df FROM inv GROUP BY s)
-"""
-
 FUZZY_LEN_CHECK = """
     SELECT count(*) AS bad FROM customer WHERE length(c_name) != 18
 """
@@ -113,32 +102,19 @@ def _ngram_fast_sql() -> str:
     return NGRAM_FAST.format(shingle_cte=_SHINGLE_CTE.strip())
 
 
-def _ngram_maxdf_sql() -> str:
-    from end_end_data_pipeline__spark.plans.queries_llm import _SHINGLE_CTE
-
-    return NGRAM_MAXDF.format(shingle_cte=_SHINGLE_CTE.strip())
-
-
 def _preconditions(sf_dir: str) -> dict:
     """Assert the fixture properties the accelerated forms rely on."""
     from tests.oracle import duck_run
 
     bad_len = int(duck_run(FUZZY_LEN_CHECK, sf_dir)["bad"][0])
-    max_df = int(duck_run(_ngram_maxdf_sql(), sf_dir)["max_df"][0])
-    # hard RuntimeErrors, not asserts: these guards carry the whole
-    # evidence chain (pigeonhole cover / inert df cap) and must survive
-    # `python -O` (ADVICE r09)
+    # a hard RuntimeError, not an assert: the pigeonhole cover carries
+    # the fuzzy evidence chain and must survive `python -O` (ADVICE r09)
     if bad_len != 0:
         raise RuntimeError(
             f"fuzzy pigeonhole cover needs every c_name exactly 18 chars; "
             f"{bad_len} rows violate that in {sf_dir}"
         )
-    if max_df > 128:
-        raise RuntimeError(
-            f"engine df cap (128) would drop candidates: max shingle df "
-            f"{max_df} in {sf_dir}"
-        )
-    return {"c_name_len_violations": bad_len, "max_shingle_df": max_df}
+    return {"c_name_len_violations": bad_len}
 
 
 def equiv(sf_dir: str) -> dict:

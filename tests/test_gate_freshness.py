@@ -53,18 +53,14 @@ def test_gate_covers_catalog():
 
 def test_gate_all_green():
     newest, gate = _newest_gate()
-    oracled = {n for n, q in load_all().items() if q.oracle}
-    def green(name: str, row: dict) -> bool:
-        if not (row.get("rows_match") and row.get("schema_match")):
-            return False
-        if name in oracled:
-            # an oracle-backed query must have a VERIFIED hash —
-            # hash_match=None would mean the hash was never computed,
-            # not that it verified
-            return row.get("err") is None and row.get("hash_match") is True
-        # genuinely rows-only (no oracle in the catalog): the gate
-        # records err="no_oracle" and no hash
-        return row.get("err") in (None, "no_oracle")
+    # every catalog query has an oracle, so every row must carry a
+    # VERIFIED hash — hash_match=None would mean the hash was never
+    # computed, not that it verified
+    def green(row: dict) -> bool:
+        return bool(
+            row.get("rows_match") and row.get("schema_match")
+            and row.get("err") is None and row.get("hash_match") is True
+        )
 
-    red = sorted(name for name, row in gate.items() if not green(name, row))
+    red = sorted(name for name, row in gate.items() if not green(row))
     assert not red, f"{os.path.basename(newest)} has red rows: {red}"

@@ -22,26 +22,10 @@ def emb(spark):
     return lake.load_table(spark, "embeddings", SF_SMOKE).cache()
 
 
-def test_ngram_df_cap_preserves_output_above_max_df(spark, docs):
-    """With the cap above the corpus's max shingle df, the df-capped
-    path must emit exactly the uncapped pairs AND exact values."""
-    uncapped = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, "text", "doc_id").collect()
-    }
-    capped = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "text", "doc_id", max_shingle_df=10_000
-        ).collect()
-    }
-    assert uncapped and capped == uncapped
-
-
-def test_ngram_df_cap_drops_boilerplate_only_pairs(spark):
-    """A hot shingle above the cap generates no candidates; pairs whose
-    similarity rests on a rare shingle survive with EXACT jaccard
-    (verification uses full sets, including the hot shingle)."""
+def test_ngram_jaccard_exact_over_hot_shingles(spark):
+    """Ten identical boilerplate docs make every boilerplate shingle
+    hot (df 12); the exact path must still emit every pair at or above
+    the threshold, each with its exact jaccard."""
     boiler = "terms of service apply here"
     rows = [(i, boiler) for i in range(10)]  # identical boilerplate docs
     rows += [(100, boiler + " unique alpha beta"),
@@ -50,14 +34,15 @@ def test_ngram_df_cap_drops_boilerplate_only_pairs(spark):
     out = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.3, max_shingle_df=5
+            df, "text", "doc_id", threshold=0.3
         ).collect()
     }
-    # every pure-boilerplate pair shares only shingles with df >= 12 -> dropped
-    assert all(a >= 100 for a, _ in out), out
-    # 100/101 share rare shingles ('apply here unique', ...) -> kept, and
-    # the jaccard counts the hot shingles too: |A∩B|=5 of |A∪B|=7
-    assert out.get((100, 101)) == pytest.approx(5 / 7)
+    # boilerplate has 3 shingles; docs 100/101 have 6 each, sharing 5
+    expected = {(a, b): 1.0 for a in range(10) for b in range(a + 1, 10)}
+    expected.update({(a, d): 0.5 for a in range(10) for d in (100, 101)})
+    expected[(100, 101)] = 5 / 7
+    assert len(expected) == 66
+    assert out == pytest.approx(expected)
 
 
 def test_simhash_chunk_candidates_near_linear(spark):

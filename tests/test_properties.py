@@ -97,31 +97,34 @@ def _model_jaccard_pairs(texts, n=3, threshold=0.5):
         return {
             " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
         }
-    out = set()
+    out = {}
     for a in range(len(texts)):
         for b in range(a + 1, len(texts)):
             sa, sb = sh(texts[a]), sh(texts[b])
             if not sa or not sb:
                 continue
             inter = len(sa & sb)
-            if inter and inter / (len(sa) + len(sb) - inter) >= threshold:
-                out.add((a, b))
+            jac = inter / (len(sa) + len(sb) - inter)
+            if inter and jac >= threshold:
+                out[(a, b)] = jac
     return out
 
 
 @PROP
-@given(st.lists(doc, min_size=2, max_size=6))
-def test_ngram_jaccard_matches_model(spark, texts):
+@given(st.lists(doc, min_size=2, max_size=6), st.sampled_from([0.3, 0.5, 0.7]))
+def test_ngram_jaccard_matches_model(spark, texts, threshold):
+    """Pair set AND per-pair jaccard against a brute-force model; the
+    5-word vocabulary makes hot shingles shared by most documents."""
     from end_end_data_pipeline__spark.operators import dedup as dd
 
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
     got = {
-        (r["doc_a"], r["doc_b"])
-        for r in dd.ngram_jaccard_pairs(df, "text", "doc_id", 3, 0.5).collect()
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dd.ngram_jaccard_pairs(df, "text", "doc_id", 3, threshold).collect()
     }
-    assert got == _model_jaccard_pairs(texts)
+    assert got == _model_jaccard_pairs(texts, threshold=threshold)
 
 
 # --------------------------------------------------------------------------
