@@ -6,9 +6,9 @@ fixture tables.
 Oracle strategy: the scoring constants (stopword profiles, shingle
 width, thresholds) live in the operator modules; this file *generates*
 the DuckDB SQL from the same constants, so both engines execute the
-same arithmetic.  Probabilistic operators (LSH variants) are rows-only
-here and recall-tested against the exact baselines in
-``tests/test_llm_ops.py``.
+same arithmetic.  Probabilistic operators (LSH variants) get oracles
+that replicate their hashing, banding and verification in SQL, and are
+recall-tested against the exact baselines in ``tests/test_llm_ops.py``.
 """
 
 from __future__ import annotations

@@ -6,8 +6,8 @@ Three flavors:
 - event-time windowing (tumbling / sliding / session) in batch mode —
   same operators Structured Streaming uses, oracle-checkable;
 - true Structured Streaming runs (file source → memory sink) proving
-  the streaming wiring; the daily agg one is deterministic enough to
-  oracle-check, the upsert pipeline is rows-only.
+  the streaming wiring.  Every entry, the upsert pipeline included,
+  carries a DuckDB oracle (``catalog.register`` refuses one without).
 """
 
 from __future__ import annotations

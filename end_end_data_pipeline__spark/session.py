@@ -44,9 +44,18 @@ def bounded_stream_shuffle(spark: SparkSession, n: int = 32):
     the fixed per-store cost amortizes once micro-batches carry real
     data volume.
     """
-    key = "spark.sql.shuffle.partitions"
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", str(n)):
+        yield
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the duration of a block, then restore
+    the caller's value.  Blocks that overlap on one session from
+    several threads are not supported: the later exit would restore
+    the value the other block set."""
     old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, value)
     try:
         yield
     finally:

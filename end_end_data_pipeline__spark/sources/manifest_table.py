@@ -22,7 +22,24 @@ immutable, so stats are too — carried forward untouched for files a
 commit keeps), giving ``read_where`` Delta-style data skipping on
 range/point predicates without opening a single pruned file; see
 ``compact(cluster_by=...)`` for the layout that makes skipping
-selective on an upsert table.
+selective on an upsert table.  The stats come from the parquet footers
+the commit's write produced (one pyarrow pass, no Spark job, no data
+read), so table files store timestamps as INT64 epoch micros: Spark's
+INT96 default carries no footer min/max (older INT96 files read as
+before and are simply never pruned on those columns).  Footers hold
+less than a scan would: nested columns get no ``__nulls`` count (the
+footer counts leaf nulls, not the column's own), and a string column
+chunk whose min plus max exceed parquet-mr's 4 KiB stats limit gets
+neither [min, max] nor a null count.  Such files are kept, never
+pruned, on those columns.
+
+A commit's Spark work is its data work: the manifest is read on the
+driver, every read of committed files takes the manifest's schema
+(no inference job) and lists them on the driver (no listing job), and
+the affected bucket set is one job.  Supported stores are the local
+filesystem and HDFS-like ones — what both the Hadoop FS (manifests,
+commit) and ``pyarrow.fs`` (new-file listing, footers, at the URI the
+Hadoop FS qualifies) open.
 
 Commit protocol (optimistic, multi-writer safe):
 
@@ -72,17 +89,21 @@ import datetime as _dt
 import time
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     AtomicType,
     BinaryType,
     BooleanType,
     DecimalType,
+    IntegerType,
+    StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
+from end_end_data_pipeline__spark.session import pinned_conf
 from end_end_data_pipeline__spark.sources import cdc
 
 BUCKET_COL = "p_bucket"
@@ -118,11 +139,15 @@ def list_versions(spark: SparkSession, target: str) -> list[int]:
 
 
 def _read_manifest(spark: SparkSession, target: str, version: int) -> dict:
-    # read through Spark's text source — filesystem-agnostic, and py4j
-    # cannot surface JVM-side byte[] mutations (FSDataInputStream
-    # readFully into a gateway array reads back zeros)
-    lines = spark.read.text(f"{target}/manifest-v{version}.json").collect()
-    return json.loads("\n".join(r[0] for r in lines))
+    # read on the driver through the Hadoop FS, no Spark job: a Java
+    # String crosses py4j intact (only a byte[] filled in place on the
+    # JVM side does not — readFully into a gateway array reads zeros)
+    fs, jvm = _fs(spark, target)
+    stream = fs.open(_jpath(jvm, f"{target}/manifest-v{version}.json"))
+    try:
+        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+    finally:
+        stream.close()
 
 
 def _manifest_schema(manifest: dict | None) -> StructType | None:
@@ -218,23 +243,39 @@ def _read_files(
     shared basePath would make Spark see conflicting ``v1``/``v2``
     levels); the bucket partition column is dropped — manifests, not
     directory layout, are the source of truth for bucket membership.
-    ``allowMissingColumns`` handles schema evolution: files written
-    before a column was added read back with nulls for it.  A
-    ``schema`` pins the result to it (``_pin_schema``)."""
+    A ``schema`` (the committed one) is handed to the reader, so no job
+    infers it from the footers, and files written before a column was
+    added read back with nulls for it.  Without one (pre-schema
+    manifests) the reader infers, and ``allowMissingColumns`` fills
+    the columns older version dirs lack."""
     by_vdir: dict[str, list[str]] = {}
     for f in rel_files:
         vdir = "/".join(f.split("/")[:2])  # data/vN
         by_vdir.setdefault(vdir, []).append(f"{target}/{f}")
-    parts = [
-        spark.read.option("basePath", f"{target}/{vdir}")
-        .parquet(*fl)
-        .drop(BUCKET_COL)
-        for vdir, fl in sorted(by_vdir.items())
-    ]
+    file_schema = (
+        None
+        if schema is None
+        else StructType([*schema.fields, StructField(BUCKET_COL, IntegerType())])
+    )
+
+    def read(vdir: str, fl: list[str]) -> DataFrame:
+        reader = spark.read.option("basePath", f"{target}/{vdir}")
+        if file_schema is not None:
+            reader = reader.schema(file_schema)
+        return reader.parquet(*fl).drop(BUCKET_COL)
+
+    # the manifest names every file, so Spark's listing is one status
+    # call per file: cheaper on the driver than the listing job (a task
+    # per path) it launches past 32 paths
+    with pinned_conf(
+        spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        str(len(rel_files)),
+    ):
+        parts = [read(vdir, fl) for vdir, fl in sorted(by_vdir.items())]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
-    return out if schema is None else _pin_schema(out, schema)
+    return out
 
 
 def read_keys(
@@ -262,12 +303,7 @@ def read_keys(
         key_df = key_df.select(
             *[F.col(k).cast(table_types[k]).alias(k) for k in key_cols]
         )
-    wanted = {
-        str(r[0])
-        for r in key_df.select(_bucket_of(key_cols, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    }
+    wanted = _bucket_set(key_df, key_cols, n_buckets)
     files = [
         f for b, fl in manifest["buckets"].items() if b in wanted for f in fl
     ]
@@ -288,9 +324,20 @@ def read_keys(
             .limit(0)
             .join(key_df, key_cols, "inner")
         )
-    return _read_files(spark, target, files).join(
+    return _read_files(spark, target, files, schema).join(
         F.broadcast(key_df), key_cols, "inner"
     )
+
+
+def _bucket_set(frame: DataFrame, key_cols: list[str], n_buckets: int) -> set[str]:
+    """The bucket ids ``frame``'s keys hash into, in ONE Spark job: an
+    observed ``collect_set`` rides a no-op write, so there is no
+    shuffle stage and only the distinct ids reach the driver."""
+    obs = Observation()
+    frame.observe(
+        obs, F.collect_set(_bucket_of(key_cols, n_buckets)).alias("b")
+    ).write.format("noop").mode("overwrite").save()
+    return {str(b) for b in obs.get["b"]}
 
 
 def _commit_manifest(
@@ -347,29 +394,6 @@ def _manifest(
     }
 
 
-def _bucket_files(spark: SparkSession, data_dir: str) -> dict[str, list[str]]:
-    """bucket id → files actually produced under data/v{N}/ (relative
-    to the table root)."""
-    fs, jvm = _fs(spark, data_dir)
-    root = _jpath(jvm, data_dir)
-    out: dict[str, list[str]] = {}
-    if not fs.exists(root):
-        return out
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith(f"{BUCKET_COL}="):
-            continue
-        b = name.split("=", 1)[1]
-        files = [
-            f2.getPath().getName()
-            for f2 in fs.listStatus(st.getPath())
-            if not f2.getPath().getName().startswith(("_", "."))
-        ]
-        rel_dir = "/".join(data_dir.rstrip("/").split("/")[-2:])
-        out[b] = [f"{rel_dir}/{name}/{f2}" for f2 in sorted(files)]
-    return out
-
-
 def _stats_eligible(dtype) -> bool:
     """Columns worth min/max stats: atomic, orderable, and losslessly
     JSON-encodable.  Decimals are excluded (a float round-trip could
@@ -401,62 +425,101 @@ def _enc_stat(v):
     return v
 
 
-def _rel_file(path: str) -> str:
-    """input_file_name() URI → manifest-relative ``data/v{N}-{token}/
-    p_bucket={b}/part-*`` (the last three path segments under data/)."""
-    return "data/" + "/".join(path.rstrip("/").split("/")[-3:])
+def _written_files(
+    spark: SparkSession, data_dir: str, schema: StructType
+) -> tuple[dict[str, list[str]], dict[str, dict]]:
+    """One pyarrow pass over a freshly written version dir: bucket id →
+    its files (relative to the table root; only non-empty buckets get
+    a ``p_bucket=`` dir), and each file's stats from the parquet
+    footer the write produced — no Spark job, no data read.  The dir
+    is opened at the URI the Hadoop FS that wrote it resolves it to
+    (``fs.defaultFS`` and the JVM's working dir decide a scheme-less
+    path), so the listing cannot disagree with the write."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    hfs, jvm = _fs(spark, data_dir)
+    uri = hfs.makeQualified(_jpath(jvm, data_dir)).toUri().toASCIIString()
+    fs, root = pafs.FileSystem.from_uri(uri)
+    rel_dir = "/".join(data_dir.rstrip("/").split("/")[-2:])  # data/vN-token
+    files: dict[str, list[str]] = {}
+    stats: dict[str, dict] = {}
+    # a successful write always creates the dir: a missing one raises
+    for info in fs.get_file_info(pafs.FileSelector(root, recursive=True)):
+        bdir, _, name = info.path[len(root):].strip("/").rpartition("/")
+        if (
+            info.type != pafs.FileType.File
+            or not bdir.startswith(f"{BUCKET_COL}=")
+            or name.startswith(("_", "."))
+        ):
+            continue
+        rel = f"{rel_dir}/{bdir}/{name}"
+        files.setdefault(bdir.split("=", 1)[1], []).append(rel)
+        stats[rel] = _footer_stats(pq.read_metadata(info.path, filesystem=fs), schema)
+    return {b: sorted(files[b]) for b in sorted(files, key=int)}, stats
 
 
-def _collect_stats(
-    spark: SparkSession, data_dir: str
-) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for every stats-eligible column of a freshly
-    written version dir — one bounded O(new data) scan grouped by
-    ``input_file_name()``.  (At production scale these numbers already
-    sit in the parquet footers the write produced; lifting them from
-    there is a zero-scan swap isolated to this function.  min/max skip
-    nulls, so an all-null file stores [null, null] and is kept by every
-    prune — conservative, never wrong.)"""
-    df = spark.read.parquet(data_dir).drop(BUCKET_COL)
-    cols = [f.name for f in df.schema.fields if _stats_eligible(f.dataType)]
-    null_cols = [f.name for f in df.schema.fields]  # null counts: ALL cols
-    # timestamp bounds leave the JVM as epoch-micros (unix_micros), never
-    # as Python datetimes: a ``.collect()`` of TimestampType converts
-    # through the PROCESS-LOCAL zone, so the ISO string it encodes to
-    # would shift with TZ — the manifest must store the absolute instant
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-
-    def _bound(c: str, fn) -> Column:
-        a = fn(c)
-        return F.unix_micros(a) if isinstance(dtypes[c], TimestampType) else a
-
-    aggs = [
-        a
-        for c in cols
-        for a in (
-            _bound(c, F.min).alias(f"mn__{c}"),
-            _bound(c, F.max).alias(f"mx__{c}"),
-        )
-    ]
-    aggs += [F.count(F.lit(1)).alias("rows__")]
-    aggs += [
-        F.count(F.when(F.col(c).isNull(), 1)).alias(f"nl__{c}")
-        for c in null_cols
-    ]
-    rows = df.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
-    return {
-        _rel_file(r["__f"]): {
-            **{
-                c: [_enc_stat(r[f"mn__{c}"]), _enc_stat(r[f"mx__{c}"])]
-                for c in cols
-            },
-            # reserved keys (not valid column names in practice): row
-            # and per-column null counts power isnull/notnull pruning
-            "__rows": r["rows__"],
-            "__nulls": {c: r[f"nl__{c}"] for c in null_cols},
-        }
-        for r in rows
+def _footer_stats(md, schema: StructType) -> dict:
+    """A file's manifest stats from its footer ``md``: [min, max] per
+    stats-eligible column (combined across row groups, ``_enc_stat``
+    encoded, [null, null] for an all-null column), ``__rows``, and
+    ``__nulls`` per top-level column.  A column whose footer carries
+    no min/max for some non-null values (INT96 timestamps, values too
+    long for parquet stats) gets no [min, max] entry, and one without
+    a null count (nested columns, those over-long strings) no
+    ``__nulls`` entry — ``_file_matches`` then keeps the file.  Timestamps are read raw:
+    INT64 epoch micros, the absolute instant whatever the process TZ."""
+    leaves = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path == col.name:  # top-level primitive, not a nested leaf
+            leaves[col.name] = (i, col)
+    chunks = {
+        name: [md.row_group(r).column(i).statistics for r in range(md.num_row_groups)]
+        for name, (i, _) in leaves.items()
     }
+
+    def nan_last(v):
+        # Spark ranks NaN above every value: a file's max is NaN if any
+        # row group's is, its min only if every row group's is
+        return (v != v, v)
+
+    out: dict = {}
+    for f in schema.fields:
+        if f.name not in leaves or not _stats_eligible(f.dataType):
+            continue
+        col = leaves[f.name][1]
+        raw = isinstance(f.dataType, (TimestampType, TimestampNTZType))
+        if raw and not (
+            col.physical_type == "INT64" and "micro" in str(col.logical_type).lower()
+        ):
+            continue
+        sts = chunks[f.name]
+        if any(
+            st is None
+            or not (st.has_min_max or (st.has_null_count and st.num_values == 0))
+            for st in sts
+        ):
+            continue
+        bounds = [
+            (st.min_raw, st.max_raw) if raw else (st.min, st.max)
+            for st in sts
+            if st.has_min_max
+        ]
+        if not bounds:
+            out[f.name] = [None, None]
+            continue
+        lo = min((b[0] for b in bounds), key=nan_last)
+        hi = max((b[1] for b in bounds), key=nan_last)
+        out[f.name] = [_enc_stat(lo), _enc_stat(hi)]
+    out["__rows"] = md.num_rows
+    out["__nulls"] = {
+        f.name: sum(st.null_count for st in chunks[f.name])
+        for f in schema.fields
+        if f.name in chunks
+        and all(st is not None and st.has_null_count for st in chunks[f.name])
+    }
+    return out
 
 
 def _carry_stats(
@@ -557,20 +620,6 @@ def _conjunct_pred(conjuncts: list[tuple[str, str, object]]) -> Column:
             }[op]
         )
     return reduce(lambda a, b: a & b, preds) if preds else F.lit(True)
-
-
-def _pin_schema(df: DataFrame, schema: StructType, *keep: str) -> DataFrame:
-    """``df`` cast to ``schema`` in its column order (nulls for the
-    columns ``df`` lacks), followed by the ``keep`` columns unchanged."""
-    return df.select(
-        *[
-            F.col(f.name).cast(f.dataType)
-            if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ],
-        *keep,
-    )
 
 
 def read_where(
@@ -708,13 +757,11 @@ def _touched(
 ) -> tuple[list[str], DataFrame | None]:
     """The buckets ``frame``'s keys hash into, and the committed rows of
     those buckets (None when there are none) — what a merge rewrites."""
-    affected = sorted(
-        str(r[0])
-        for r in frame.select(_bucket_of(key_cols, n_buckets)).distinct().collect()
-    )
+    affected = sorted(_bucket_set(frame, key_cols, n_buckets))
     committed = manifest["buckets"] if manifest else {}
     files = [f for b in affected for f in committed.get(b, [])]
-    return affected, (_read_files(spark, target, files) if files else None)
+    schema = _manifest_schema(manifest)
+    return affected, (_read_files(spark, target, files, schema) if files else None)
 
 
 def _commit_state(
@@ -735,16 +782,21 @@ def _commit_state(
     orphan it deletes below), splice its buckets into ``base``'s —
     ``affected`` buckets are replaced (dropped when they came out
     empty), the rest carried by reference; ``None`` replaces every
-    bucket — collect the new files' stats, and atomically
-    rename-commit version ``new_v``.  The manifest's ``schema`` is the
-    new state's unless ``changed`` pins one; the other fields follow
-    ``_manifest``."""
+    bucket — take the new files' stats from their footers, and
+    atomically rename-commit version ``new_v``.  The manifest's
+    ``schema`` is the new state's unless ``changed`` pins one; the
+    other fields follow ``_manifest``."""
     data_dir = f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
     writer = new_state.write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(BUCKET_COL).parquet(data_dir)
-    new_files = _bucket_files(spark, data_dir)  # only non-empty buckets
+    # INT64 micros, not Spark's INT96 default: INT96 footers carry no
+    # min/max.  Spark takes the type from the session conf only (a
+    # writer option is ignored)
+    with pinned_conf(spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"):
+        writer.partitionBy(BUCKET_COL).parquet(data_dir)
+    data_schema = new_state.drop(BUCKET_COL).schema
+    new_files, new_stats = _written_files(spark, data_dir, data_schema)
     if affected is None:
         buckets = new_files
     else:
@@ -752,13 +804,9 @@ def _commit_state(
             b: fl for b, fl in base.get("buckets", {}).items() if b not in affected
         }
         buckets.update({b: new_files[b] for b in affected if b in new_files})
-    stats = _carry_stats(
-        base.get("stats", {}),
-        buckets,
-        _collect_stats(spark, data_dir) if new_files else {},
-    )
+    stats = _carry_stats(base.get("stats", {}), buckets, new_stats)
     if "schema" not in changed:
-        changed["schema"] = new_state.drop(BUCKET_COL).schema.jsonValue()
+        changed["schema"] = data_schema.jsonValue()
     try:
         _commit_manifest(
             spark, target,
@@ -959,8 +1007,6 @@ def merge_into(
             "collapse the source to one row per key first"
         )
     affected, current = _touched(spark, target, manifest, source, key_cols, n_buckets)
-    if current is not None and schema is not None:
-        current = _pin_schema(current, schema)
 
     s_side = source.select(
         *key_cols, F.struct(*non_keys).alias("s"), F.lit(True).alias("__s")
@@ -1095,16 +1141,15 @@ def _read_buckets(
 ) -> DataFrame:
     """The committed rows of ``buckets`` with the bucket id pinned back
     on as ``BUCKET_COL`` (a rewrite that keeps the keys keeps every row
-    in its bucket), pinned to the manifest's schema when it has one."""
+    in its bucket), read with the manifest's schema when it has one."""
+    schema = _manifest_schema(manifest)
     parts = [
-        _read_files(spark, target, manifest["buckets"][b]).withColumn(
+        _read_files(spark, target, manifest["buckets"][b], schema).withColumn(
             BUCKET_COL, F.lit(int(b))
         )
         for b in buckets
     ]
-    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-    schema = _manifest_schema(manifest)
-    return df if schema is None else _pin_schema(df, schema, BUCKET_COL)
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
 def table_changes(

@@ -12,7 +12,12 @@ exactly two states:
   lineage on purpose and Spark cannot recompute lost blocks, see the
   r07-advice trade note in ``grouped_global_rank``).
 
-Any third state — a job that SUCCEEDS with a different hash — is
+A trial whose kill came only after the job had returned reads
+``kill_after_job`` (``no_kill`` if no executor was found to kill); its
+hash is still checked, but it shows no recovery, so it never counts as
+one.
+
+Any other state — a job that SUCCEEDS with a different hash — is
 corruption and fails this script.  This is the failure mode that
 matters at 1000 executors, where executor churn is routine: wrong
 answers are unacceptable; loud retry-or-fail is the contract.
@@ -152,16 +157,28 @@ def main() -> int:
     app_id = spark.sparkContext.applicationId
     subs = subjects(spark)
 
-    clean = {name: df_hash(mk()) for name, mk in subs.items()}
-    print(f"clean hashes: {clean}", flush=True)
+    # each subject's clean run is timed WARM (its second run), as the
+    # trials run: a cold first run is slower and would aim kills past
+    # the end of the job
+    clean, clean_s = {}, {}
+    for name, mk in subs.items():
+        df_hash(mk())
+        t0 = time.time()
+        clean[name] = df_hash(mk())
+        clean_s[name] = time.time() - t0
+    print(f"clean hashes: {clean}  clean_s: {clean_s}", flush=True)
 
     trials = []
     corrupt = 0
+    names = list(subs)
+    per_subject = -(-N_TRIALS // len(names))
     for t in range(N_TRIALS):
-        names = list(subs)
         name = names[t % len(names)]
-        # stagger the kill through the job's life: 0.2s..1.6s after start
-        delay = 0.2 + 0.2 * t
+        # stagger each subject's kills evenly through ITS clean-run time
+        # (8 trials: at 1/4 and 3/4), so the late kill of a dedup subject
+        # lands after its lazy localCheckpoint has materialized
+        frac = (t // len(names) + 0.5) / per_subject
+        delay = frac * clean_s[name]
         killed: dict = {}
 
         def killer():
@@ -172,12 +189,14 @@ def main() -> int:
                 try:
                     os.kill(victim, signal.SIGKILL)
                     killed["pid"] = victim
+                    killed["at"] = time.time()
                 except ProcessLookupError:
                     killed["pid"] = None
 
         th = threading.Thread(target=killer)
         th.start()
-        outcome: dict = {"subject": name, "kill_delay_s": round(delay, 1)}
+        outcome: dict = {"subject": name, "kill_delay_s": round(delay, 1),
+                         "kill_frac": round(frac, 2)}
         t0 = time.time()
         try:
             h = df_hash(subs[name]())
@@ -190,24 +209,30 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — loud failure is a PASS
             outcome["outcome"] = "failed_loudly"
             outcome["err"] = f"{type(exc).__name__}: {exc}"[:200]
+        done = time.time()
         th.join()
+        mid_job = killed.get("at", done) < done
+        if outcome["outcome"] == "identical" and not mid_job:
+            outcome["outcome"] = "kill_after_job" if "at" in killed else "no_kill"
         outcome["killed_pid"] = killed.get("pid")
-        outcome["sec"] = round(time.time() - t0, 2)
+        outcome["sec"] = round(done - t0, 2)
         trials.append(outcome)
         print(f"[{t + 1}/{N_TRIALS}] {outcome}", flush=True)
         # give the worker a moment to relaunch the executor
         time.sleep(3)
 
     # the lineage subject must additionally have RECOVERED at least once
-    # (a suite where every trial failed loudly would prove nothing about
-    # recompute correctness)
+    # from a kill that landed mid-job (a suite where every trial failed
+    # loudly, or was killed only after it returned, would prove nothing
+    # about recompute correctness)
     recovered = sum(
         1 for x in trials
         if x["subject"] == "lineage" and x["outcome"] == "identical"
     )
     ok = corrupt == 0 and recovered > 0
     result = {
-        "master": MASTER, "sf": SF_DIR, "clean": clean, "trials": trials,
+        "master": MASTER, "sf": SF_DIR, "clean": clean,
+        "clean_s": {k: round(v, 2) for k, v in clean_s.items()}, "trials": trials,
         "corrupt": corrupt, "lineage_recoveries": recovered, "ok": ok,
     }
     print(json.dumps(result))

@@ -179,7 +179,10 @@ def run(sf_dir: str, master: str) -> dict:
         # substring-matching of human-readable messages, and no second
         # implementation that could drift from the driver gate's)
         t0s = time.time()
-        facets = compare_structured(sdf.toPandas(), duck)
+        got = sdf.toPandas()
+        t_spark = time.time() - t0s
+        t0s = time.time()
+        facets = compare_structured(got, duck)
         t_cmp = time.time() - t0s
         out[name] = {
             "rows_match": facets["rows_match"],
@@ -189,6 +192,7 @@ def run(sf_dir: str, master: str) -> dict:
             "rows_oracle": len(duck),
             "sec_total": round(time.time() - t0, 2),
             "sec_oracle": round(t_duck, 2),
+            "sec_spark": round(t_spark, 2),
             "sec_compare": round(t_cmp, 2),
         }
         print(f"{name}: {'MATCH' if facets['hash_match'] else facets['err']} "

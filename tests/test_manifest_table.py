@@ -1527,3 +1527,231 @@ def test_manifest_contract_across_every_commit(spark, tmp_path):
         [(i, float(i) + 100.0) for i in (1, 3)] + [(2, 122.0)]
         + [(i, float(i)) for i in range(4, 17)]
     )
+
+
+# ---------------------------------------------------- footer stats, jobs
+
+
+def _scan_stats(spark, target, files):
+    """Reference model for the manifest's per-file stats: one scan of
+    ``files`` grouped by ``input_file_name()`` (the query commits ran
+    before stats came from the footers).  Timestamp bounds leave the
+    JVM as epoch micros, so the reference is TZ-immune too."""
+    from pyspark.sql.types import TimestampType
+
+    df = spark.read.parquet(*[f"{target}/{f}" for f in files]).drop(mt.BUCKET_COL)
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    cols = [c for c, t in dtypes.items() if mt._stats_eligible(t)]
+
+    def bound(c, fn):
+        a = fn(c)
+        return F.unix_micros(a) if isinstance(dtypes[c], TimestampType) else a
+
+    aggs = [a for c in cols
+            for a in (bound(c, F.min).alias(f"mn__{c}"), bound(c, F.max).alias(f"mx__{c}"))]
+    aggs += [F.count(F.lit(1)).alias("rows__")]
+    aggs += [F.count(F.when(F.col(c).isNull(), 1)).alias(f"nl__{c}") for c in dtypes]
+    rows = df.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
+    return {
+        "data/" + "/".join(r["__f"].split("/")[-3:]): {
+            **{c: [mt._enc_stat(r[f"mn__{c}"]), mt._enc_stat(r[f"mx__{c}"])] for c in cols},
+            "__rows": r["rows__"],
+            "__nulls": {c: r[f"nl__{c}"] for c in dtypes},
+        }
+        for r in rows
+    }
+
+
+def _nan_eq(v):
+    """``v`` with every NaN replaced by a marker, so == compares it."""
+    if isinstance(v, dict):
+        return {k: _nan_eq(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_nan_eq(x) for x in v]
+    return "NaN" if isinstance(v, float) and v != v else v
+
+
+LONG_TXT = "~" * 5000  # over parquet-mr's 4 KiB footer-stats limit
+
+
+def _all_types_frame(spark, ids):
+    """One row per id over every stats-eligible type (NaN, -0.0 and
+    nulls in the floating columns, non-ASCII strings, an all-null
+    column in some files, a string column that holds an over-long
+    value in some files — always its max) plus the ineligible boolean,
+    decimal, binary and nested columns."""
+    import datetime as dt
+    from decimal import Decimal
+
+    def row(i):
+        ts = dt.datetime(2021, 3, 1, 12, 0) + dt.timedelta(hours=7 * i, microseconds=i)
+        return (
+            i, i % 100 - 50, i * 3 - 200, i * 1000, i * 10**12,
+            None if i % 7 == 0 else float(i) / 4,
+            [float("nan"), -0.0, None][i % 3] if i % 5 == 0 else i * 1.5 - 30,
+            dt.date(2020, 1, 1) + dt.timedelta(days=13 * i),
+            ts, ts,
+            ["straße", "ünï", "日本語", None, "abc"][i % 5],
+            None if i < 20 else i,
+            i % 2 == 0, Decimal(i) / 8, bytes([i % 256, 200]),
+            LONG_TXT if i % 11 == 0 else None if i % 13 == 0 else f"a{i % 7}",
+            None if i % 4 == 0 else (i, None if i % 3 == 0 else "x"),
+        )
+
+    return spark.createDataFrame(
+        [row(i) for i in ids],
+        "id long, b byte, s short, n int, l long, f float, d double, dt date,"
+        " ts timestamp, ntz timestamp_ntz, txt string, sparse long,"
+        " flag boolean, dec decimal(10,3), bin binary, big string,"
+        " nest struct<a: long, b: string>",
+    )
+
+
+def test_footer_stats_equal_scan_reference(spark, tmp_path):
+    """The manifest's per-file stats, taken from the parquet footers
+    the commit wrote, equal the scan reference for every file and key
+    under a hostile session time zone — except the two things footers
+    do not hold: the nested column's null count, and both stats of a
+    string column in a file where it holds an over-long value."""
+    hostile = spark.newSession()
+    hostile.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+    target = str(tmp_path / "t")
+    mt.merge_into(_all_types_frame(hostile, range(1, 41)), target, ["id"], n_buckets=4)
+    mt.merge_into(_all_types_frame(hostile, range(30, 61)), target, ["id"])
+    long_files = short_files = 0
+    for v in (1, 2):
+        m = mt._read_manifest(hostile, target, v)
+        files = [f for fl in m["buckets"].values() for f in fl]
+        assert len(files) >= 4
+        want = _scan_stats(hostile, target, files)
+        for st in want.values():
+            del st["__nulls"]["nest"]
+            if st["big"][1] == LONG_TXT:
+                del st["big"], st["__nulls"]["big"]
+                long_files += 1
+            else:
+                short_files += 1
+        assert _nan_eq(m["stats"]) == _nan_eq(want), v
+        for st in m["stats"].values():
+            assert {"ts", "ntz", "dt", "txt", "f", "d"} <= set(st)
+            assert not {"flag", "dec", "bin", "nest"} & set(st)
+    assert long_files and short_files
+    assert hostile.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+
+
+def test_int96_timestamp_file_gets_no_stats(spark, tmp_path, monkeypatch):
+    """A file whose timestamp column is INT96 (Spark's default output
+    type, written by older commits) has no footer min/max for it: the
+    column gets no stats entry, the file is never pruned on it, and
+    read_where still equals the plain snapshot filter."""
+    import contextlib
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    target = str(tmp_path / "t")
+    monkeypatch.setattr(mt, "pinned_conf", lambda *a: contextlib.nullcontext())
+    mt.merge_into(_all_types_frame(spark, range(1, 21)), target, ["id"], n_buckets=4)
+    monkeypatch.undo()
+    mt.merge_into(_all_types_frame(spark, [21]), target, ["id"])  # one bucket
+    m = mt._read_manifest(spark, target, 2)
+    old = [f for f in m["stats"] if f.startswith("data/v1-")]
+    new = [f for f in m["stats"] if f.startswith("data/v2-")]
+    assert old and new
+    for f in old:
+        col = pq.ParquetFile(f"{target}/{f}").schema.column(8)
+        assert (col.name, col.physical_type) == ("ts", "INT96")
+        assert "ts" not in m["stats"][f]
+        assert "ntz" in m["stats"][f]
+    assert all("ts" in m["stats"][f] for f in new)
+    cut = dt.datetime(2021, 3, 5)
+    for op in (">=", "<"):
+        got = sorted(r["id"] for r in
+                     mt.read_where(spark, target, [("ts", op, cut)]).collect())
+        plain = sorted(
+            r["id"] for r in mt.read_snapshot(spark, target)
+            .filter(mt._conjunct_pred([("ts", op, cut)])).collect())
+        assert got == plain and got, op
+
+
+def test_relative_target_lists_where_hadoop_wrote(spark, tmp_path):
+    """A scheme-less relative target resolves against the Hadoop FS's
+    working dir, which is where Spark writes it; the footer pass opens
+    that same dir (not the Python process's cwd), so the commit keeps
+    every bucket file it wrote."""
+    fs, jvm = mt._fs(spark, str(tmp_path))
+    old = fs.getWorkingDirectory()
+    fs.setWorkingDirectory(mt._jpath(jvm, str(tmp_path)))
+    try:
+        mt.merge_versioned(
+            _batch(spark, [(i, float(i), "c", 1) for i in range(40)]),
+            "rel_t", ["id"], n_buckets=4,
+        )
+        m = mt._read_manifest(spark, "rel_t", 1)
+        got = sorted(r["id"] for r in mt.read_snapshot(spark, "rel_t").collect())
+    finally:
+        fs.setWorkingDirectory(old)
+    assert (tmp_path / "rel_t" / "manifest-v1.json").exists()
+    assert len(m["buckets"]) == 4
+    assert set(m["stats"]) == {f for fl in m["buckets"].values() for f in fl}
+    assert got == list(range(40))
+
+
+def test_merge_versioned_commit_runs_at_most_three_jobs(spark, tmp_path):
+    """A CDC merge onto an existing 64-bucket table runs its bucket set
+    (1 job) and the write (2 jobs) — no job reads the manifest, lists
+    the touched buckets' files (more paths than Spark lists on the
+    driver by default), infers a schema or scans the new files for
+    stats."""
+    target = str(tmp_path / "t")
+    mt.merge_versioned(
+        _batch(spark, [(i, float(i), "c", 1) for i in range(2000)]),
+        target, ["id"], n_buckets=64,
+    )
+    batch = _batch(spark, [(i * 7, -1.0, "u", 2) for i in range(300)])
+    sc = spark.sparkContext
+    jsc = sc._jsc
+
+    def jobs(group, fn):
+        jsc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn()
+        finally:
+            jsc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("mt-read-manifest", lambda: mt._read_manifest(spark, target, 1)) == 0
+    assert jobs("mt-merge", lambda: mt.merge_versioned(batch, target, ["id"])) <= 3
+    got = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+    assert set(got) == set(range(2000)) | {i * 7 for i in range(300)}
+    assert got[7] == -1.0 and got[8] == 8.0
+
+
+def test_footer_stats_combine_row_groups_nan_highest():
+    """Row-group bounds combine the way Spark orders doubles: NaN
+    ranks above every value, whichever row group holds it."""
+    from types import SimpleNamespace as NS
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    nan = float("nan")
+
+    def footer(*bounds):
+        col = NS(path="d", name="d", physical_type="DOUBLE", logical_type=None)
+        groups = [
+            NS(column=lambda i, lo=lo, hi=hi: NS(statistics=NS(
+                has_min_max=True, min=lo, max=hi, has_null_count=True,
+                null_count=0, num_values=2)))
+            for lo, hi in bounds
+        ]
+        return NS(num_columns=1, schema=NS(column=lambda i: col),
+                  num_row_groups=len(groups), row_group=lambda r: groups[r],
+                  num_rows=2 * len(groups))
+
+    schema = StructType([StructField("d", DoubleType())])
+    for bounds in ([(1.0, nan), (0.5, 5.0)], [(0.5, 5.0), (1.0, nan)]):
+        st = mt._footer_stats(footer(*bounds), schema)
+        assert st["d"][0] == 0.5 and st["d"][1] != st["d"][1], bounds
+        assert st["__rows"] == 4 and st["__nulls"] == {"d": 0}
+    st = mt._footer_stats(footer((nan, nan), (2.0, 3.0)), schema)
+    assert st["d"][0] == 2.0 and st["d"][1] != st["d"][1]
