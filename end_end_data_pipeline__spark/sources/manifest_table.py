@@ -8,19 +8,42 @@ core commit protocol.
 Layout::
 
     target/
-      data/v{N}-{token}/p_bucket={b}/part-*.parquet  -- immutable once written
+      data/v{N}-{token}/p_bucket={b}/part-*.parquet  -- base files
+      data/v{N}-{token}/part-*.parquet    -- one delta file
+                                             (all immutable once written)
       manifest-v{N}.json   -- {"version": N, "schema": <json>,
                                "buckets": {b: [files]},
                                "stats": {file: {col: [min, max]}},
                                "committed_at": <epoch s>,
                                "operation": <name>,
                                "constraints": {name: <sql>},
-                               "n_buckets": n, "key_cols": [cols]}
+                               "n_buckets": n, "key_cols": [cols],
+                               "deltas": [{"file": f, "buckets": [b]}]}
 
-Per-file column [min, max] stats ride in the manifest (files are
-immutable, so stats are too — carried forward untouched for files a
-commit keeps), giving ``read_where`` Delta-style data skipping on
-range/point predicates without opening a single pruned file; see
+Merge-on-read (log-structured, as Hudi/Iceberg v2 merge-on-read
+tables): the base files under ``buckets`` hold one row per live key;
+``deltas`` lists the pending delta files, oldest first.  A
+``merge_versioned`` onto an existing table writes its batch, collapsed
+to the latest change per key with tombstones kept, as ONE delta file
+sorted by bucket (the table's columns plus ``__op``,
+``__commit_version`` and ``p_bucket``), so its cost follows the batch,
+not the table.  Every read resolves each key to its newest row across
+the base and the pending deltas (a delta row beats the base, a later
+delta an earlier one; a winning ``d`` drops the key) before anything
+else runs; a version with no pending deltas reads its base files
+exactly as a plain scan.  A ``merge_versioned`` that would leave
+``_FOLD_AT`` (5, Hudi's inline-compaction default) pending deltas
+FOLDS instead: base, deltas and batch go through the bucket rewrite,
+and the new version lists no deltas.  Every other base-rewriting
+operation (``merge_into``, ``delete_where``/``update_where``,
+``compact``, ``rebucket``) folds every pending delta in the same
+commit, so every pending delta is always newer than every base file.
+
+Per-file column [min, max] stats of the base files ride in the
+manifest (files are immutable, so stats are too — carried forward
+untouched for files a commit keeps), giving ``read_where``
+Delta-style data skipping on range/point predicates without opening a
+single pruned file; see
 ``compact(cluster_by=...)`` for the layout that makes skipping
 selective on an upsert table.  The stats come from the parquet footers
 the commit's write produced (one pyarrow pass, no Spark job, no data
@@ -43,14 +66,16 @@ Hadoop FS qualifies) open.
 
 Commit protocol (optimistic, multi-writer safe):
 
-1. read the current manifest (highest N); compute the affected buckets;
-2. write the NEW state of those buckets under a WRITER-UNIQUE dir
+1. read the current manifest (highest N); compute the affected buckets
+   (a delta commit needs none);
+2. write the NEW state of those buckets (or the delta file) under a
+   WRITER-UNIQUE dir
    ``data/v{N+1}-{token}/`` — existing files are never touched or
    deleted, and two racers writing the same target version cannot
    clobber each other's part files (each attempt owns its own dir);
 3. write ``_tmp-manifest-v{N+1}`` carrying forward the unaffected
-   buckets' file lists and swapping in the new files, then ``rename``
-   it to ``manifest-v{N+1}.json``.
+   buckets' file lists and swapping in the new files (or appending
+   the delta), then ``rename`` it to ``manifest-v{N+1}.json``.
 
 The rename is the commit point: atomic on local/HDFS-like stores, and
 it FAILS if the destination exists — which doubles as optimistic
@@ -65,13 +90,14 @@ need a conditional-put catalog instead; that swap is isolated to
 ``_commit_manifest``.  ``dml_retry(merge_versioned, ...)`` is the
 bounded re-read/re-merge/re-commit loop a loser runs.  Every
 version-producing operation opens its base version through ``_open``
-and commits through ``_commit_state`` (data-rewriting) or
-``_commit_manifest(_manifest(...))`` (metadata-only).
+and commits through ``_commit_state`` (bucket-rewriting),
+``_commit_delta`` (a delta) or ``_commit_manifest(_manifest(...))``
+(metadata-only).
 
 Readers pin a manifest version → snapshot isolation and time travel
 for free (``read_snapshot(..., version=K)``).  ``vacuum`` drops data
-dirs unreferenced by the kept manifests.  The manifest carries the
-table schema, so an empty committed state (a merge that deleted every
+dirs unreferenced by the kept manifests' base files and deltas.  The
+manifest carries the table schema, so an empty committed state (a merge that deleted every
 key) reads back as an empty DataFrame, not an error, and point lookups
 hash keys with the TABLE's column types (Spark's ``xxhash64`` is
 type-sensitive: a long hashes differently from an int, so bucketing
@@ -89,7 +115,7 @@ import datetime as _dt
 import time
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     AtomicType,
@@ -97,6 +123,8 @@ from pyspark.sql.types import (
     BooleanType,
     DecimalType,
     IntegerType,
+    LongType,
+    StringType,
     StructField,
     StructType,
     TimestampNTZType,
@@ -108,6 +136,9 @@ from end_end_data_pipeline__spark.sources import cdc
 
 BUCKET_COL = "p_bucket"
 _MANIFEST_RE = re.compile(r"manifest-v(\d+)\.json$")
+_DELTA_OP = "__op"  # a delta row's change op; "d" is a tombstone
+_DELTA_V = "__commit_version"  # the version that committed a delta row
+_FOLD_AT = 5  # a merge that would leave this many pending deltas folds
 
 
 def _bucket_of(key_cols: list, n_buckets: int) -> Column:
@@ -221,15 +252,121 @@ def _snapshot(
     """Version ``v``'s state from its already-read ``manifest``."""
     files = [f for fl in manifest["buckets"].values() for f in fl]
     schema = _manifest_schema(manifest)
-    if not files:
+    # pinned to ITS version's schema (column order, and nulls for
+    # columns newer files carry that this version's pre-evolution
+    # files lack)
+    state = _read_state(spark, target, manifest, files)
+    if state is None:
         # a merge that deleted every key is a legitimate empty state
         if schema is None:
             raise FileNotFoundError(f"version {v} of {target!r} is empty")
         return spark.createDataFrame([], schema)
-    # pinned to ITS version's schema (column order, and nulls for
-    # columns newer files carry that this version's pre-evolution
-    # files lack)
-    return _read_files(spark, target, files, schema)
+    return state
+
+
+def _pending(manifest: dict | None) -> list[dict]:
+    """The manifest's pending deltas, oldest first."""
+    return (manifest or {}).get("deltas") or []
+
+
+def _delta_buckets(manifest: dict | None) -> set[str]:
+    """The buckets the pending deltas hold rows of."""
+    return {b for d in _pending(manifest) for b in d["buckets"]}
+
+
+def _delta_rows(
+    spark: SparkSession,
+    target: str,
+    manifest: dict | None,
+    schema: StructType,
+    buckets: list[str] | None = None,
+) -> DataFrame | None:
+    """The pending deltas' rows (``schema``'s columns, ``_DELTA_OP``,
+    ``_DELTA_V``, ``BUCKET_COL``) in ONE scan over the delta files that
+    hold any of ``buckets`` (None: every delta), filtered to those
+    buckets; None when no delta does.  Deltas written before a column
+    was added read back nulls for it."""
+    wanted = None if buckets is None else set(buckets)
+    paths = [
+        f"{target}/{d['file']}"
+        for d in _pending(manifest)
+        if wanted is None or wanted & set(d["buckets"])
+    ]
+    if not paths:
+        return None
+    rows = spark.read.schema(
+        StructType([
+            *schema.fields,
+            StructField(_DELTA_OP, StringType()),
+            StructField(_DELTA_V, LongType()),
+            StructField(BUCKET_COL, IntegerType()),
+        ])
+    ).parquet(*paths)
+    if wanted is not None:
+        rows = rows.filter(F.col(BUCKET_COL).isin(sorted(int(b) for b in wanted)))
+    return rows
+
+
+def _as_changes(
+    base: DataFrame | None, deltas: DataFrame | None, key_cols: list[str]
+) -> DataFrame:
+    """Committed rows as change rows ``(key..., op, _DELTA_V, after)``:
+    base rows are creates at version 0, older than any delta; delta
+    rows keep their op and the version that committed them."""
+    parts = []
+    for rows, op, v in (
+        (base, F.lit("c"), F.lit(0).cast("long")),
+        (deltas, F.col(_DELTA_OP), F.col(_DELTA_V)),
+    ):
+        if rows is not None:
+            cols = [c for c in rows.columns if c not in (_DELTA_OP, _DELTA_V, BUCKET_COL)]
+            parts.append(rows.select(
+                *key_cols, op.alias("op"), v.alias(_DELTA_V),
+                F.struct(*cols).alias("after"),
+            ))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _read_state(
+    spark: SparkSession,
+    target: str,
+    manifest: dict | None,
+    files: list[str],
+    buckets: list[str] | None = None,
+    schema: StructType | None = None,
+) -> DataFrame | None:
+    """The committed rows of the base ``files`` with the pending deltas
+    of ``buckets`` (None: all) applied — each key resolved to its
+    newest row, tombstoned keys dropped — read with ``schema``
+    (default: the manifest's); None when there is neither a file nor
+    a delta row to read.  With no delta to apply it is the plain scan
+    of ``files``."""
+    schema = schema or _manifest_schema(manifest)
+    deltas = _delta_rows(spark, target, manifest, schema, buckets)
+    base = _read_files(spark, target, files, schema) if files else None
+    if deltas is None:
+        return base
+    key_cols, cols = manifest["key_cols"], schema.fieldNames()
+    # pending deltas are few (under _FOLD_AT batch collapses, each one
+    # file written by one task): resolve them in one partition, with no
+    # shuffle — a delta holds one row per key, so the newest commit
+    # wins — and keep the base rows whose key no delta holds through an
+    # anti-join on the keys, so no base row is shuffled either
+    newest = Window.partitionBy(*key_cols).orderBy(F.col(_DELTA_V).desc())
+    live = (
+        deltas.coalesce(1)
+        .select(*cols, _DELTA_OP, F.row_number().over(newest).alias("__rn"))
+        .filter((F.col("__rn") == 1) & (F.col(_DELTA_OP) != "d"))
+        .select(*cols)
+    )
+    if base is None:
+        return live
+    held = deltas.select(*[F.col(k).alias(f"__held_{k}") for k in key_cols])
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"__held_{k}")) for k in key_cols],
+    )
+    return base.join(held, on, "left_anti").unionByName(live)
 
 
 def _read_files(
@@ -290,6 +427,7 @@ def read_keys(
     (same xxhash64 the merge uses), so a lookup reads only the manifest
     files of the touched buckets — O(touched/n_buckets) of the table,
     the lakehouse stand-in for the reference's primary-key index.
+    Pending deltas are read in one scan, filtered to those buckets.
     ``n_buckets`` must match the table's layout."""
     _, v, manifest = _open(spark, target, version)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
@@ -303,11 +441,12 @@ def read_keys(
         key_df = key_df.select(
             *[F.col(k).cast(table_types[k]).alias(k) for k in key_cols]
         )
-    wanted = _bucket_set(key_df, key_cols, n_buckets)
+    wanted = sorted(_bucket_set(key_df, key_cols, n_buckets))
     files = [
         f for b, fl in manifest["buckets"].items() if b in wanted for f in fl
     ]
-    if not files:
+    state = _read_state(spark, target, manifest, files, wanted)
+    if state is None:
         # none of the touched buckets exist → empty result, table schema
         # straight from the manifest (no file listing / footer reads)
         if schema is not None:
@@ -324,9 +463,7 @@ def read_keys(
             .limit(0)
             .join(key_df, key_cols, "inner")
         )
-    return _read_files(spark, target, files, schema).join(
-        F.broadcast(key_df), key_cols, "inner"
-    )
+    return state.join(F.broadcast(key_df), key_cols, "inner")
 
 
 def _bucket_set(frame: DataFrame, key_cols: list[str], n_buckets: int) -> set[str]:
@@ -377,9 +514,9 @@ def _manifest(
     **changed,
 ) -> dict:
     """The one manifest builder.  ``schema``, ``constraints``,
-    ``n_buckets`` and ``key_cols`` carry over from ``base`` (the
-    manifest the commit starts from; ``{}`` for a new table) unless
-    ``changed`` sets them."""
+    ``n_buckets``, ``key_cols`` and ``deltas`` carry over from ``base``
+    (the manifest the commit starts from; ``{}`` for a new table)
+    unless ``changed`` sets them."""
     return {
         "version": version,
         "schema": base.get("schema"),
@@ -390,6 +527,7 @@ def _manifest(
         "constraints": _constraints(base),
         "n_buckets": base.get("n_buckets"),
         "key_cols": base.get("key_cols"),
+        "deltas": _pending(base),
         **changed,
     }
 
@@ -637,7 +775,11 @@ def read_where(
     is blind to time/value ranges, file stats are blind to point keys;
     together they cover both the reference's indexed lookups and its
     date-partitioned scans.  Skipping selectivity follows the physical
-    layout — tightest after ``compact(cluster_by=[...])``."""
+    layout — tightest after ``compact(cluster_by=[...])``.  Stats cover
+    base files only: every pending delta is read, each key resolved
+    across the kept files and the deltas, and only then is the
+    predicate applied (a pruned file's rows cannot match, and a delta
+    row that does is newer than any of them)."""
     _, v, manifest = _open(spark, target, version)
     schema = _manifest_schema(manifest)
     kept = prune_files(manifest, conjuncts)
@@ -645,14 +787,15 @@ def read_where(
     def residual(df: DataFrame) -> DataFrame:
         return df.filter(_conjunct_pred(conjuncts))
 
-    if not kept:
+    state = _read_state(spark, target, manifest, kept)
+    if state is None:
         if schema is None:
             raise FileNotFoundError(
                 f"version {v} of {target!r} pre-dates manifest schemas — "
                 "cannot derive an empty result schema"
             )
         return residual(spark.createDataFrame([], schema))
-    return residual(_read_files(spark, target, kept, schema))
+    return residual(state)
 
 
 def merge_versioned(
@@ -664,18 +807,31 @@ def merge_versioned(
 ) -> int:
     """Latest-wins merge with an ATOMIC commit; returns the committed
     version.  ``batch`` carries decoded change rows (key..., op,
-    ``version_col``, after) as ``sources.cdc.decode`` produces them.
-    Only the affected buckets are read back, as synthetic 'c' changes
-    at version −1 so one window pass resolves everything, and existing
-    files are never modified — a crash at any point leaves the previous
-    version fully intact and visible.  ``n_buckets`` may be omitted on
-    an existing table (the committed layout is used); a mismatching
-    value is refused (see ``_resolve_n_buckets``)."""
+    ``version_col``, after) as ``sources.cdc.decode`` produces them;
+    within the batch the newest ``version_col`` per key wins (ties:
+    d > u > c).  Against committed state COMMIT ORDER decides: a later
+    commit's change wins over every committed row of its key whatever
+    its ``version_col`` — so an older change redelivered in a later
+    batch overwrites newer committed state.
+
+    On an existing table the batch commits as a delta (see the module
+    docstring): one file, no bucket rewritten.  A commit that would
+    leave ``_FOLD_AT`` pending deltas, and the first commit of a new
+    table, rewrite the affected buckets instead: the batch's buckets
+    and every pending delta's are read back as change rows (base rows
+    before every delta, the batch after both) and one window pass
+    resolves everything.  Existing files are never modified — a crash
+    at any point leaves the previous version fully intact and visible.
+    ``n_buckets`` may be omitted on an existing table (the committed
+    layout is used); a mismatching value is refused (see
+    ``_resolve_n_buckets``)."""
     spark = batch.sparkSession
     _, current_v, manifest = _open(spark, target, missing_ok=True)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     _check_key_cols(manifest, key_cols, target)
-    after_fields = None  # batch's after-struct fields (evolution target)
+    # the batch's after-struct fields: the table's columns after this
+    # commit (schema evolution target)
+    after_fields = batch.schema["after"].dataType.fields
     schema = _manifest_schema(manifest)
     if schema is not None:
         # xxhash64 is type-sensitive: a batch whose key columns
@@ -695,7 +851,6 @@ def merge_versioned(
         # (existing rows read back null for them); dropping or
         # retyping existing columns is refused — a latest-wins
         # merge with partial rows would silently null data
-        after_fields = batch.schema["after"].dataType.fields
         batch_types = {f.name: f.dataType for f in after_fields}
         missing = sorted(set(table_types) - set(batch_types))
         if missing:
@@ -711,57 +866,165 @@ def merge_versioned(
                     f"batch but {table_types[name].simpleString()} "
                     f"in {target!r} — type changes need a rewrite"
                 )
-    affected, current = _touched(spark, target, manifest, batch, key_cols, n_buckets)
+    new_v = current_v + 1
+    if manifest is not None and len(_pending(manifest)) + 1 < _FOLD_AT:
+        return _commit_delta(
+            spark, target, manifest, new_v, batch, key_cols, version_col,
+            n_buckets,
+        )
+    affected, files = _touched(spark, manifest, batch, key_cols, n_buckets)
+    order = version_col
     all_changes = batch
-    if current is not None:
-        if after_fields is not None:
-            # mirror the BATCH's after-struct shape exactly (field
-            # order and any evolved new columns, null for rows that
-            # predate them) so the union is type-identical
-            struct_cols = [
+    if manifest is not None:
+        base = _read_files(spark, target, files, schema) if files else None
+        committed = _as_changes(
+            base, _delta_rows(spark, target, manifest, schema), key_cols
+        )
+        # order by (commit, version_col): the batch commits after every
+        # committed row.  The after-struct mirrors the BATCH's shape
+        # exactly (field order and any evolved new columns, null for
+        # rows that predate them) so the union is type-identical
+        order = "__order"
+        vtype = batch.schema[version_col].dataType
+        all_changes = batch.select(
+            *key_cols, "op",
+            F.struct(
+                F.lit(new_v).cast("long").alias("commit"),
+                F.col(version_col).alias("v"),
+            ).alias(order),
+            "after",
+        ).unionByName(committed.select(
+            *key_cols, "op",
+            F.struct(
+                F.col(_DELTA_V).alias("commit"), F.lit(None).cast(vtype).alias("v")
+            ).alias(order),
+            F.struct(*[
                 (
-                    F.col(f.name)
-                    if f.name in current.columns
+                    F.col("after")[f.name]
+                    if f.name in schema.fieldNames()
                     else F.lit(None).cast(f.dataType)
                 ).alias(f.name)
                 for f in after_fields
-            ]
-        else:
-            struct_cols = [F.col(c) for c in current.columns]
-        as_changes = current.select(
-            *[F.col(k) for k in key_cols],
-            F.lit("c").alias("op"),
-            F.lit(-1).cast("long").alias(version_col),
-            F.struct(*struct_cols).alias("after"),
-        )
-        all_changes = batch.unionByName(as_changes)
+            ]).alias("after"),
+        ))
     new_state = cdc.apply_latest_state(
-        all_changes, key_cols, version_col=version_col
+        all_changes, key_cols, version_col=order
     ).withColumn(BUCKET_COL, _bucket_of(key_cols, n_buckets))
     _check_constraints(
         new_state.drop(BUCKET_COL), _constraints(manifest), "merge_versioned state"
     )
     return _commit_state(
-        spark, target, manifest or {}, current_v + 1, new_state, affected,
+        spark, target, manifest or {}, new_v, new_state, affected,
         "merge_versioned", n_buckets=n_buckets, key_cols=key_cols,
+    )
+
+
+def _commit_delta(
+    spark: SparkSession,
+    target: str,
+    manifest: dict,
+    new_v: int,
+    batch: DataFrame,
+    key_cols: list[str],
+    version_col: str,
+    n_buckets: int,
+) -> int:
+    """Commit ``batch`` as one delta file: its latest change per key,
+    tombstones kept, as the table's columns plus ``_DELTA_OP``,
+    ``_DELTA_V`` (= ``new_v``) and the bucket id, sorted by bucket.
+    Two Spark jobs (the collapse's shuffle and the write); the delta's
+    bucket set rides the write as an observed metric, and the manifest
+    carries every base file and stat by reference.  Constraints are
+    checked on the delta's non-delete rows."""
+    fields = batch.schema["after"].dataType.fields
+    rows = cdc.latest_change_per_key(batch, key_cols, version_col).select(
+        *[
+            (F.col(f.name) if f.name in key_cols else F.col("after")[f.name])
+            .alias(f.name)
+            for f in fields
+        ],
+        F.col("op").alias(_DELTA_OP),
+        F.lit(new_v).cast("long").alias(_DELTA_V),
+        _bucket_of(key_cols, n_buckets).cast("int").alias(BUCKET_COL),
+    )
+    schema = StructType(rows.schema.fields[: len(fields)])
+    _check_constraints(
+        rows.filter(F.col(_DELTA_OP) != "d").select(*schema.fieldNames()),
+        _constraints(manifest), "merge_versioned delta",
+    )
+    data_dir = _data_dir(target, new_v)
+    obs = Observation()
+    _write_parquet(
+        spark,
+        rows.observe(obs, F.collect_set(BUCKET_COL).alias("b"))
+        .coalesce(1)
+        .sortWithinPartitions(BUCKET_COL)
+        .write.mode("overwrite"),
+        data_dir,
+    )
+    fs, jvm = _fs(spark, data_dir)
+    rel_dir = "/".join(data_dir.rstrip("/").split("/")[-2:])  # data/vN-token
+    buckets = sorted((str(b) for b in obs.get["b"]), key=int)
+    written = [
+        {"file": f"{rel_dir}/{name}", "buckets": buckets}
+        for st in fs.listStatus(_jpath(jvm, data_dir))
+        if (name := st.getPath().getName()).endswith(".parquet")
+        and not name.startswith(("_", "."))
+    ]
+    return _commit(
+        spark, target, data_dir,
+        _manifest(
+            manifest, new_v, manifest["buckets"], manifest.get("stats"),
+            "merge_versioned", schema=schema.jsonValue(),
+            deltas=[*_pending(manifest), *written],
+            n_buckets=n_buckets, key_cols=key_cols,
+        ),
     )
 
 
 def _touched(
     spark: SparkSession,
-    target: str,
     manifest: dict | None,
     frame: DataFrame,
     key_cols: list[str],
     n_buckets: int,
-) -> tuple[list[str], DataFrame | None]:
-    """The buckets ``frame``'s keys hash into, and the committed rows of
-    those buckets (None when there are none) — what a merge rewrites."""
-    affected = sorted(_bucket_set(frame, key_cols, n_buckets))
+) -> tuple[list[str], list[str]]:
+    """The buckets a rewrite driven by ``frame`` replaces — those its
+    keys hash into, plus every pending delta's, so the commit folds the
+    deltas — and their base files."""
+    affected = sorted(_bucket_set(frame, key_cols, n_buckets) | _delta_buckets(manifest))
     committed = manifest["buckets"] if manifest else {}
-    files = [f for b in affected for f in committed.get(b, [])]
-    schema = _manifest_schema(manifest)
-    return affected, (_read_files(spark, target, files, schema) if files else None)
+    return affected, [f for b in affected for f in committed.get(b, [])]
+
+
+def _data_dir(target: str, new_v: int) -> str:
+    """A writer-unique data dir for version ``new_v``: racing writers
+    targeting the same version can never overwrite each other's part
+    files (the loser's dir becomes an unreferenced orphan it deletes
+    in ``_commit``)."""
+    return f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
+
+
+def _write_parquet(spark: SparkSession, writer, data_dir: str) -> None:
+    """``writer.parquet(data_dir)`` with INT64 micros timestamps, not
+    Spark's INT96 default: INT96 footers carry no min/max.  Spark takes
+    the type from the session conf only (a writer option is
+    ignored)."""
+    with pinned_conf(spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"):
+        writer.parquet(data_dir)
+
+
+def _commit(spark: SparkSession, target: str, data_dir: str, manifest: dict) -> int:
+    """Rename-commit ``manifest``, whose new files are all under
+    ``data_dir``; a lost race deletes that dir (the writer's own
+    orphan) before re-raising."""
+    try:
+        _commit_manifest(spark, target, manifest)
+    except RuntimeError:
+        fs, jvm = _fs(spark, target)
+        fs.delete(_jpath(jvm, data_dir), True)
+        raise
+    return manifest["version"]
 
 
 def _commit_state(
@@ -775,26 +1038,22 @@ def _commit_state(
     max_records_per_file: int | None = None,
     **changed,
 ) -> int:
-    """The commit tail of every data-rewriting operation: write
-    ``new_state`` (bucket-id column included) to a writer-unique dir
-    (racing writers targeting the same version can never overwrite
-    each other's part files; the loser's dir becomes an unreferenced
-    orphan it deletes below), splice its buckets into ``base``'s —
+    """The commit tail of every bucket-rewriting operation: write
+    ``new_state`` (bucket-id column included) to a writer-unique dir,
+    splice its buckets into ``base``'s —
     ``affected`` buckets are replaced (dropped when they came out
     empty), the rest carried by reference; ``None`` replaces every
     bucket — take the new files' stats from their footers, and
-    atomically rename-commit version ``new_v``.  The manifest's
+    atomically rename-commit version ``new_v`` with no pending deltas
+    (``affected`` must cover every pending delta's buckets, and
+    ``new_state`` has them applied).  The manifest's
     ``schema`` is the new state's unless ``changed`` pins one; the
     other fields follow ``_manifest``."""
-    data_dir = f"{target}/data/v{new_v}-{uuid.uuid4().hex[:8]}"
+    data_dir = _data_dir(target, new_v)
     writer = new_state.write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    # INT64 micros, not Spark's INT96 default: INT96 footers carry no
-    # min/max.  Spark takes the type from the session conf only (a
-    # writer option is ignored)
-    with pinned_conf(spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"):
-        writer.partitionBy(BUCKET_COL).parquet(data_dir)
+    _write_parquet(spark, writer.partitionBy(BUCKET_COL), data_dir)
     data_schema = new_state.drop(BUCKET_COL).schema
     new_files, new_stats = _written_files(spark, data_dir, data_schema)
     if affected is None:
@@ -807,16 +1066,10 @@ def _commit_state(
     stats = _carry_stats(base.get("stats", {}), buckets, new_stats)
     if "schema" not in changed:
         changed["schema"] = data_schema.jsonValue()
-    try:
-        _commit_manifest(
-            spark, target,
-            _manifest(base, new_v, buckets, stats, operation, **changed),
-        )
-    except RuntimeError:
-        fs, jvm = _fs(spark, target)
-        fs.delete(_jpath(jvm, data_dir), True)  # own orphan, safe to drop
-        raise
-    return new_v
+    return _commit(
+        spark, target, data_dir,
+        _manifest(base, new_v, buckets, stats, operation, deltas=[], **changed),
+    )
 
 
 def _resolve_n_buckets(
@@ -962,8 +1215,9 @@ def merge_into(
     bucket hashing is type-sensitive); on a not-yet-created target the
     merge degenerates to insert-all and commits version 1.
 
-    Scale: identical cost envelope to ``merge_versioned`` — source
-    keys pick the affected buckets, ONE full-outer equi-join on the
+    Scale: identical cost envelope to a ``merge_versioned`` fold —
+    source keys (plus every pending delta's buckets, which the commit
+    folds) pick the affected buckets, ONE full-outer equi-join on the
     key columns pairs current and source rows (both sides hash-
     partitioned on the keys; no window, no cross product), and only
     the affected buckets rewrite through the same atomic commit tail.
@@ -1006,7 +1260,8 @@ def merge_into(
             "matched-clause outcome would be row-order-dependent; "
             "collapse the source to one row per key first"
         )
-    affected, current = _touched(spark, target, manifest, source, key_cols, n_buckets)
+    affected, files = _touched(spark, manifest, source, key_cols, n_buckets)
+    current = _read_state(spark, target, manifest, files, affected)
 
     s_side = source.select(
         *key_cols, F.struct(*non_keys).alias("s"), F.lit(True).alias("__s")
@@ -1112,13 +1367,18 @@ def compact(
     to the full column span (every merge unions old bucket rows back
     in); clustering is what restores skipping selectivity.
 
+    Pending deltas are folded: their buckets are rewritten too.
+
     Returns the new committed version, or None when nothing needed
     compacting (no empty commits)."""
     _, current_v, manifest = _open(spark, target)
     over = sorted(
-        b
-        for b, fl in manifest["buckets"].items()
-        if cluster_by or len(fl) > max_files_per_bucket
+        {
+            b
+            for b, fl in manifest["buckets"].items()
+            if cluster_by or len(fl) > max_files_per_bucket
+        }
+        | _delta_buckets(manifest)
     )
     if not over:
         return None
@@ -1141,8 +1401,14 @@ def _read_buckets(
 ) -> DataFrame:
     """The committed rows of ``buckets`` with the bucket id pinned back
     on as ``BUCKET_COL`` (a rewrite that keeps the keys keeps every row
-    in its bucket), read with the manifest's schema when it has one."""
+    in its bucket), read with the manifest's schema when it has one,
+    pending deltas applied."""
     schema = _manifest_schema(manifest)
+    if _pending(manifest):
+        files = [f for b in buckets for f in manifest["buckets"].get(b, [])]
+        return _read_state(spark, target, manifest, files, buckets).withColumn(
+            BUCKET_COL, _bucket_of(manifest["key_cols"], manifest["n_buckets"])
+        )
     parts = [
         _read_files(spark, target, manifest["buckets"][b], schema).withColumn(
             BUCKET_COL, F.lit(int(b))
@@ -1162,8 +1428,10 @@ def table_changes(
     """Change data feed between two committed versions — the Delta CDF
     surface, derived rather than logged: because bucket membership is
     immutable and per-manifest, only buckets whose FILE LISTS differ
-    between the two manifests can contain changes, so the diff reads
-    O(changed buckets) of each version, never the whole table.
+    between the two manifests (or that a delta pending on one side
+    only holds rows of) can contain changes, so the diff reads
+    O(changed buckets) of each version's merged state, never the whole
+    table.
 
     Returns the ``to_version`` schema plus ``_change_type`` ∈
     {insert, delete, update_preimage, update_postimage} (update rows
@@ -1180,18 +1448,25 @@ def table_changes(
         )
     m_from = _read_manifest(spark, target, from_version)
     schema = _manifest_schema(m_to)
+    # a bucket can differ only if its base files differ or a pending
+    # delta holding rows of it is pending on one side only
+    deltas = [{d["file"]: d["buckets"] for d in _pending(m)} for m in (m_from, m_to)]
     changed = sorted(
-        set(m_from["buckets"]) | set(m_to["buckets"]),
+        {
+            b
+            for b in set(m_from["buckets"]) | set(m_to["buckets"])
+            if m_from["buckets"].get(b) != m_to["buckets"].get(b)
+        }
+        | {
+            b
+            for f in set(deltas[0]) ^ set(deltas[1])
+            for b in deltas[0].get(f, deltas[1].get(f))
+        }
     )
-    changed = [
-        b
-        for b in changed
-        if m_from["buckets"].get(b) != m_to["buckets"].get(b)
-    ]
 
     def side(manifest) -> DataFrame | None:
         files = [f for b in changed for f in manifest["buckets"].get(b, [])]
-        return _read_files(spark, target, files, schema) if files else None
+        return _read_state(spark, target, manifest, files, changed, schema)
 
     old, new = side(m_from), side(m_to)
     ct = "_change_type"
@@ -1262,7 +1537,8 @@ def rebucket(
 def vacuum(spark: SparkSession, target: str, keep_last: int = 2) -> list[int]:
     """Drop data versions referenced ONLY by manifests older than the
     ``keep_last`` newest; returns removed manifest versions.  Readers
-    of kept versions are unaffected (their manifests and files stay)."""
+    of kept versions are unaffected (their manifests, base files and
+    delta files stay)."""
     versions = list_versions(spark, target)
     drop, keep = versions[:-keep_last], versions[-keep_last:]
     if not drop:
@@ -1271,9 +1547,9 @@ def vacuum(spark: SparkSession, target: str, keep_last: int = 2) -> list[int]:
     referenced: set[str] = set()
     for v in keep:
         m = _read_manifest(spark, target, v)
-        referenced |= {
-            f.split("/")[1] for fl in m["buckets"].values() for f in fl
-        }  # data/<vdir>/... → vdir
+        live = [f for fl in m["buckets"].values() for f in fl]
+        live += [d["file"] for d in _pending(m)]
+        referenced |= {f.split("/")[1] for f in live}  # data/<vdir>/... → vdir
     for v in drop:
         fs.delete(_jpath(jvm, f"{target}/manifest-v{v}.json"), False)
     newest = keep[-1]
@@ -1318,15 +1594,15 @@ def _dml_rewrite(
     rows (same skipping as ``read_where`` — a time-banded DELETE on a
     clustered table rewrites only the touched band), those buckets
     rewrite through ``transform`` with their row-level predicate, and
-    everything else is carried by reference.  A conjunction no file
-    can satisfy is a metadata no-op: the current version is returned
-    and NOTHING is committed."""
+    everything else is carried by reference.  Pending deltas are
+    folded: their buckets are rewritten too.  With none pending, a
+    conjunction no file can satisfy is a metadata no-op: the current
+    version is returned and NOTHING is committed."""
     _dml_schema(manifest, target)
     kept = set(prune_files(manifest, conjuncts))
     affected = sorted(
-        b
-        for b, fl in manifest["buckets"].items()
-        if any(f in kept for f in fl)
+        {b for b, fl in manifest["buckets"].items() if any(f in kept for f in fl)}
+        | _delta_buckets(manifest)
     )
     if not affected:
         return current_v

@@ -22,12 +22,17 @@ corruption and fails this script.  This is the failure mode that
 matters at 1000 executors, where executor churn is routine: wrong
 answers are unacceptable; loud retry-or-fail is the contract.
 
-Four subjects, taken in turn:
+Five subjects, taken in turn:
 
 * ``lineage`` — a pure-DataFrame catalog-shaped aggregation (no
   checkpoint): Spark must ALWAYS recover this one (shuffle files died
   with the executor → stage retry recomputes), so its expected outcome
   is ``identical`` in every trial.
+* ``merge_on_read`` — a manifest-table CDC run into a fresh table: a
+  20k-row seed commit, four delta commits and the fold, then the
+  snapshot.  Every commit is a Spark write with no checkpoint, so
+  either outcome is allowed: a task retry recovers it, and a commit
+  whose job fails leaves the table at its previous version.
 * ``checkpointed`` — ``ordered_prefix_sums`` over the same rows (pins
   partition contents via eager localCheckpoint): expected outcome is
   ``identical`` when the killed executor held no still-needed blocks,
@@ -48,11 +53,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import signal
 import subprocess
 import sys
+import tempfile
 import threading
 import time
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -63,7 +71,7 @@ MASTER = "local-cluster[2,4,3072]"
 # (stream_executor_loss, stream_soak) import executor_pids from this
 # module under their OWN argv conventions
 if __name__ == "__main__":
-    N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 8
+    N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     OUT = sys.argv[2] if len(sys.argv) > 2 else None
 
 
@@ -84,9 +92,10 @@ def df_hash(df) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-def subjects(spark):
+def subjects(spark, work: str):
     """(name -> thunk returning a DataFrame) — built fresh per trial so
-    no cached partitions survive from the previous one."""
+    no cached partitions survive from the previous one; tables the
+    thunks write go under ``work``."""
     from pyspark.sql import functions as F
 
     from end_end_data_pipeline__spark.operators import dedup
@@ -94,6 +103,7 @@ def subjects(spark):
         ordered_prefix_sums,
     )
     from end_end_data_pipeline__spark.sources import lake
+    from end_end_data_pipeline__spark.sources import manifest_table as mt
 
     def lineage():
         li = lake.load_table(spark, "lineitem", SF_DIR)
@@ -117,6 +127,23 @@ def subjects(spark):
             F.sum("__cum_q").alias("s"), F.count(F.lit(1)).alias("n")
         )
 
+    def merge_on_read():
+        target = os.path.join(work, uuid.uuid4().hex)
+
+        def batch(ids, ts, op):
+            amount = (F.col("id") * ts % 1000).cast("double").alias("amount")
+            return ids.select(
+                "id", F.lit(op).alias("op"), F.lit(ts).cast("long").alias("ts_ms"),
+                F.when(F.lit(op != "d"), F.struct("id", amount)).alias("after"),
+            )
+
+        mt.merge_versioned(batch(spark.range(20_000), 1, "c"), target, ["id"],
+                           n_buckets=64)
+        for ts in range(2, 7):  # four delta commits, then the fold
+            ids = spark.range(ts, 20_000 + 50 * ts, 53)
+            mt.merge_versioned(batch(ids, ts, "d" if ts % 3 == 0 else "u"), target, ["id"])
+        return mt.read_snapshot(spark, target)
+
     # the dedup operators hold LAZY executor-local localCheckpoints of
     # their shingle sets — exercise them end-to-end under executor loss.
     # Expected outcomes: identical (blocks survived / recomputed before
@@ -135,6 +162,7 @@ def subjects(spark):
 
     return {
         "lineage": lineage,
+        "merge_on_read": merge_on_read,
         "checkpointed": checkpointed,
         "lazy_ckpt_dedup": lazy_ckpt_dedup,
         "ngram_jaccard_pairs": ngram_jaccard_pairs,
@@ -155,7 +183,8 @@ def main() -> int:
     )
     me = os.getpid()
     app_id = spark.sparkContext.applicationId
-    subs = subjects(spark)
+    work = tempfile.mkdtemp(prefix="executor-loss-")
+    subs = subjects(spark, work)
 
     # each subject's clean run is timed WARM (its second run), as the
     # trials run: a cold first run is slower and would aim kills past
@@ -175,7 +204,7 @@ def main() -> int:
     for t in range(N_TRIALS):
         name = names[t % len(names)]
         # stagger each subject's kills evenly through ITS clean-run time
-        # (8 trials: at 1/4 and 3/4), so the late kill of a dedup subject
+        # (10 trials: at 1/4 and 3/4), so the late kill of a dedup subject
         # lands after its lazy localCheckpoint has materialized
         frac = (t // len(names) + 0.5) / per_subject
         delay = frac * clean_s[name]
@@ -239,6 +268,7 @@ def main() -> int:
     if OUT:
         Path(OUT).write_text(json.dumps(result, indent=2))
     spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
     return 0 if ok else 1
 
 

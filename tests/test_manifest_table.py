@@ -66,23 +66,33 @@ def test_merge_versioned_crash_is_atomic(spark, tmp_path, monkeypatch):
     def crashing(spark_, target_, manifest):
         raise RuntimeError("simulated crash before manifest rename")
 
-    monkeypatch.setattr(mt, "_commit_manifest", crashing)
-    with pytest.raises(RuntimeError, match="simulated"):
-        mt.merge_versioned(
-            _batch(spark, [(1, 99.0, "u", 2)]), target, ["id"], n_buckets=4
-        )
-    monkeypatch.undo()
-    # old state fully intact and readable — no refusal, no data loss
-    assert mt.list_versions(spark, target) == [1]
-    state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
-    assert state == {1: 10.0, 2: 20.0}
-    # and the retried merge commits cleanly on top
-    v = mt.merge_versioned(
-        _batch(spark, [(1, 99.0, "u", 2)]), target, ["id"], n_buckets=4
-    )
-    assert v == 2
-    state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
-    assert state == {1: 99.0, 2: 20.0}
+    def crash_then_retry(rows, pending_before):
+        """Crash the commit of ``rows``, check nothing changed, retry."""
+        versions = mt.list_versions(spark, target)
+        before = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+        latest = mt._read_manifest(spark, target, versions[-1])
+        assert len(latest["deltas"]) == pending_before
+        monkeypatch.setattr(mt, "_commit_manifest", crashing)
+        with pytest.raises(RuntimeError, match="simulated"):
+            mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=4)
+        monkeypatch.undo()
+        # old state fully intact and readable — no refusal, no data loss
+        assert mt.list_versions(spark, target) == versions
+        state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+        assert state == before
+        # and the retried merge commits cleanly on top
+        v = mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=4)
+        assert v == versions[-1] + 1
+        return {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+
+    # a delta commit (no delta pending yet)
+    assert crash_then_retry([(1, 99.0, "u", 2)], 0) == {1: 99.0, 2: 20.0}
+    assert len(mt._read_manifest(spark, target, 2)["deltas"]) == 1
+    for ts in (3, 4, 5):
+        mt.merge_versioned(_batch(spark, [(3, float(ts), "u", ts)]), target, ["id"])
+    # a fold (four deltas pending)
+    assert crash_then_retry([(2, None, "d", 6)], 4) == {1: 99.0, 3: 5.0}
+    assert mt._read_manifest(spark, target, 6)["deltas"] == []
     assert real is mt._commit_manifest
 
 
@@ -229,9 +239,10 @@ def test_merge_versioned_idempotent_replay(spark, tmp_path):
 
 
 def test_merge_versioned_rewrites_only_affected_buckets(spark, tmp_path):
-    """The merge is bucket-scoped: a batch touching one key replaces
-    only that key's bucket in the manifest — every other bucket keeps
-    its exact file list."""
+    """The merge is bucket-scoped: a delta commit rewrites no bucket at
+    all, and the fold of deltas that touch one key replaces only that
+    key's bucket in the manifest — every other bucket keeps its exact
+    file list."""
     target = str(tmp_path / "t")
     n_buckets = 8
     rows = [(i, float(i), "c", 100) for i in range(1, 33)]
@@ -239,34 +250,48 @@ def test_merge_versioned_rewrites_only_affected_buckets(spark, tmp_path):
     before = mt._read_manifest(spark, target, 1)["buckets"]
     assert len(before) > 1  # 32 keys spread over 8 buckets
 
-    batch2 = _batch(spark, [(1, 999.0, "u", 500)])
     touched = str(
-        batch2.selectExpr(f"pmod(xxhash64(id), {n_buckets}) b").first()["b"]
+        _batch(spark, [(1, 0.0, "u", 0)])
+        .selectExpr(f"pmod(xxhash64(id), {n_buckets}) b").first()["b"]
     )
-    mt.merge_versioned(batch2, target, ["id"])
-    after = mt._read_manifest(spark, target, 2)["buckets"]
+    for v in range(2, 7):  # four delta commits, then the fold
+        mt.merge_versioned(
+            _batch(spark, [(1, 990.0 + v, "u", 500 + v)]), target, ["id"]
+        )
+        m = mt._read_manifest(spark, target, v)
+        assert len(m["deltas"]) == (v - 1) % 5
+        if m["deltas"]:
+            assert m["buckets"] == before
+            assert m["deltas"][-1]["buckets"] == [touched]
+    after = mt._read_manifest(spark, target, 6)["buckets"]
     assert set(after) == set(before)
     assert after[touched] != before[touched]  # rewritten
     for b in before:
         if b != touched:
             assert after[b] == before[b], f"untouched bucket rewritten: {b}"
     state = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
-    assert state[1] == 999.0 and len(state) == 32
+    assert state[1] == 996.0 and len(state) == 32
 
 
 def test_merge_versioned_drops_fully_deleted_bucket(spark, tmp_path):
-    """A bucket whose only key is tombstoned drops out of the manifest,
-    and a later insert re-seeds the emptied table."""
+    """A bucket whose only key is tombstoned reads empty at once and
+    drops out of the manifest when the delete is folded; a later
+    insert re-seeds the emptied table, readable from its delta alone
+    (a key in a bucket with no base file)."""
     target = str(tmp_path / "t")
     mt.merge_versioned(_batch(spark, [(7, 7.0, "c", 100)]), target, ["id"],
                        n_buckets=4)
     assert len(mt._read_manifest(spark, target, 1)["buckets"]) == 1
 
     mt.merge_versioned(_batch(spark, [(7, None, "d", 200)]), target, ["id"])
-    assert mt._read_manifest(spark, target, 2)["buckets"] == {}
+    assert mt.read_snapshot(spark, target).count() == 0
+    assert mt.compact(spark, target) == 3  # folds the tombstone
+    assert mt._read_manifest(spark, target, 3)["buckets"] == {}
     mt.merge_versioned(_batch(spark, [(8, 8.0, "c", 300)]), target, ["id"])
-    assert len(mt._read_manifest(spark, target, 3)["buckets"]) == 1
+    m = mt._read_manifest(spark, target, 4)
+    assert m["buckets"] == {} and len(m["deltas"]) == 1
     assert {r["id"] for r in mt.read_snapshot(spark, target).collect()} == {8}
+    assert [r["id"] for r in mt.read_keys(spark, target, ["id"], [(8,)]).collect()] == [8]
 
 
 def test_merge_versioned_custom_version_col(spark, tmp_path):
@@ -427,14 +452,16 @@ def test_merge_refuses_key_type_drift(spark, tmp_path):
 def test_stream_versioned_crash_mid_batch_exactly_once(spark, tmp_path, monkeypatch):
     """Crash injection on BOTH sides of the streaming commit point:
 
-    1. crash BEFORE the manifest rename (batch 2) → no version exists;
-       the restart replays the batch and commits it;
+    1. crash BEFORE the manifest rename (batch 2, a delta commit) → no
+       version exists; the restart replays the batch and commits it;
     2. crash AFTER the rename but before the checkpoint advances
-       (batch 3) → the restart replays batch 3 and commits ONE MORE
-       version with identical content (latest-wins makes the replay a
-       no-op on content).
+       (batch 3, a delta commit) → the restart replays batch 3 and
+       commits ONE MORE version with identical content (latest-wins
+       makes the replay a no-op on content);
+    3. crash BEFORE the rename of a fold (batch 5, four deltas
+       pending) → the restart replays it and the fold commits.
 
-    Net: content converges to the batch-replay truth through two kill
+    Net: content converges to the batch-replay truth through three kill
     points — the exactly-once story is checkpoint replay + atomic
     manifest versions, end to end."""
     import pytest as _pytest
@@ -462,14 +489,25 @@ def test_stream_versioned_crash_mid_batch_exactly_once(spark, tmp_path, monkeypa
     envelopes([(2, 1, "SAVINGS", 999.0, "USD", 1_700_000_000_000_000, "u", 10)])
     envelopes([(3, 1, "SAVINGS", 0.0, "USD", 1_700_000_000_000_000, "d", 20),
                (4, 1, "SAVINGS", 444.0, "USD", 1_700_000_000_000_000, "u", 21)])
+    envelopes([(5, 1, "SAVINGS", 500.0, "USD", 1_700_000_000_000_000, "c", 30)])
+    envelopes([(1, 1, "SAVINGS", 111.0, "USD", 1_700_000_000_000_000, "u", 40)])
+    envelopes([(5, 1, "SAVINGS", 0.0, "USD", 1_700_000_000_000_000, "d", 50),
+               (7, 1, "SAVINGS", 700.0, "USD", 1_700_000_000_000_000, "c", 51)])
 
     real = mt.merge_versioned
     calls = {"n": 0, "mode": "pre"}
 
+    def pending():
+        latest = mt.list_versions(spark, target)[-1]
+        return len(mt._read_manifest(spark, target, latest)["deltas"])
+
     def crashing(batch, target_, key_cols, **kw):
         calls["n"] += 1
         if calls["mode"] == "pre" and calls["n"] == 2:
+            assert pending() == 0  # this commit would be a delta
             raise RuntimeError("simulated crash BEFORE commit")
+        if calls["mode"] == "fold" and pending() == 4:
+            raise RuntimeError("simulated crash BEFORE fold")
         v = real(batch, target_, key_cols, **kw)
         if calls["mode"] == "post" and calls["n"] == 4:
             raise RuntimeError("simulated crash AFTER commit")
@@ -493,16 +531,25 @@ def test_stream_versioned_crash_mid_batch_exactly_once(spark, tmp_path, monkeypa
     # batch 2 replayed (v2) and batch 3 committed (v3) before the crash
     assert mt.list_versions(spark, target) == [1, 2, 3]
 
+    snap = lambda v=None: {  # noqa: E731
+        r["id"]: r["balance"] for r in mt.read_snapshot(spark, target, v).collect()}
+    calls["mode"] = "fold"
+    with _pytest.raises(Exception, match="BEFORE fold"):
+        start().awaitTermination()
+    # batch 3 replay committed v4 with content identical to v3, batch 4
+    # v5; the fold of batch 5 never committed
+    assert mt.list_versions(spark, target) == [1, 2, 3, 4, 5]
+    assert snap(4) == snap(3) == {1: 100.0, 2: 999.0, 4: 444.0}
+    assert [len(mt._read_manifest(spark, target, v)["deltas"])
+            for v in range(1, 6)] == [0, 1, 2, 3, 4]
+
     calls["mode"] = "done"
     start().awaitTermination()
-    # batch 3 replay commits v4 with content identical to v3
-    assert mt.list_versions(spark, target) == [1, 2, 3, 4]
-    final = {r["id"]: r["balance"]
-             for r in mt.read_snapshot(spark, target).collect()}
-    assert final == {1: 100.0, 2: 999.0, 4: 444.0}
-    v3 = {r["id"]: r["balance"]
-          for r in mt.read_snapshot(spark, target, 3).collect()}
-    assert v3 == final  # replay was a content no-op
+    # batch 5 replayed as the fold (v6), batch 6 a delta on top (v7)
+    assert mt.list_versions(spark, target) == [1, 2, 3, 4, 5, 6, 7]
+    assert mt._read_manifest(spark, target, 6)["deltas"] == []
+    assert snap(6) == {1: 111.0, 2: 999.0, 4: 444.0, 5: 500.0}
+    assert snap() == {1: 111.0, 2: 999.0, 4: 444.0, 7: 700.0}
 
 
 def test_compact_rewrites_small_files_content_identical(spark, tmp_path):
@@ -698,13 +745,22 @@ def test_stats_carry_forward_for_untouched_buckets(spark, tmp_path):
         _batch(spark, [(i, float(i), "c", 1) for i in range(1, 33)]),
         target, ["id"], n_buckets=8,
     )
-    # touch one key → a few buckets rewritten, the rest carried
+    # touch one key: a delta commit carries every file and stat ...
     mt.merge_versioned(
         _batch(spark, [(7, 700.0, "u", 2)]), target, ["id"], n_buckets=8
     )
-    manifest = mt._read_manifest(spark, target, 2)
+    v1 = mt._read_manifest(spark, target, 1)
+    assert mt._read_manifest(spark, target, 2)["stats"] == v1["stats"]
+    # ... and folding it rewrites its bucket, the rest carried
+    assert mt.compact(spark, target, max_files_per_bucket=10**6) == 3
+    manifest = mt._read_manifest(spark, target, 3)
     live = {f for fl in manifest["buckets"].values() for f in fl}
     assert set(manifest["stats"]) == live
+    rewritten = [b for b, fl in manifest["buckets"].items() if fl != v1["buckets"][b]]
+    assert len(rewritten) == 1 and set(manifest["buckets"]) == set(v1["buckets"])
+    carried = live & set(v1["stats"])
+    assert carried == live - set(manifest["buckets"][rewritten[0]])
+    assert all(manifest["stats"][f] == v1["stats"][f] for f in carried)
     # the rewritten bucket's new file reflects the updated max
     hits = mt.prune_files(manifest, [("amount", ">=", 700.0)])
     assert len(hits) >= 1
@@ -1474,29 +1530,41 @@ def test_dml_datetime_predicates_match_read_where(spark, tmp_path):
 
 MANIFEST_KEYS = {
     "version", "schema", "buckets", "stats", "committed_at", "operation",
-    "constraints", "n_buckets", "key_cols",
+    "constraints", "n_buckets", "key_cols", "deltas",
 }
 
 
 def test_manifest_contract_across_every_commit(spark, tmp_path):
     """Every version-producing operation commits the same manifest
-    shape: exactly the nine keys, ``stats`` covering exactly the live
-    files, and ``schema`` / ``constraints`` / ``key_cols`` carried over
-    wherever the operation does not change them."""
+    shape: exactly the ten keys, ``stats`` covering exactly the live
+    base files, ``schema`` / ``constraints`` / ``key_cols`` carried
+    over wherever the operation does not change them, and ``deltas``
+    grown by a delta commit, carried by a metadata-only commit and
+    folded (emptied) by every base-rewriting one."""
     target = str(tmp_path / "t")
     rows = [(i, float(i), "c", 1) for i in range(1, 17)]
-    assert mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=4) == 1
-    src = spark.createDataFrame([(2, 22.0), (40, 40.0)], "id long, amount double")
-    assert mt.merge_into(src, target, ["id"]) == 2
-    assert mt.set_check_constraint(spark, target, "nonneg", "amount >= 0") == 3
-    assert mt.delete_where(spark, target, [("amount", ">", 30.0)]) == 4
-    assert mt.update_where(spark, target, [("id", "<=", 3)],
-                           {"amount": "amount + 100"}) == 5
-    assert mt.compact(spark, target, cluster_by=["amount"]) == 6
-    assert mt.rebucket(spark, target, ["id"], 2) == 7
-    assert mt.restore(spark, target, 5) == 8
 
-    ms = {v: mt._read_manifest(spark, target, v) for v in range(1, 9)}
+    def mv(rows):
+        return mt.merge_versioned(_batch(spark, rows), target, ["id"])
+
+    assert mt.merge_versioned(_batch(spark, rows), target, ["id"], n_buckets=4) == 1
+    assert mv([(5, 55.0, "u", 2), (50, 50.0, "c", 2)]) == 2
+    src = spark.createDataFrame([(2, 22.0), (40, 40.0)], "id long, amount double")
+    assert mt.merge_into(src, target, ["id"]) == 3
+    assert mv([(6, 66.0, "u", 3)]) == 4
+    assert mt.set_check_constraint(spark, target, "nonneg", "amount >= 0") == 5
+    assert mt.delete_where(spark, target, [("amount", ">", 30.0)]) == 6
+    assert mv([(30, 3.0, "c", 4)]) == 7
+    assert mt.update_where(spark, target, [("id", "<=", 3)],
+                           {"amount": "amount + 100"}) == 8
+    assert mv([(4, 44.0, "u", 5)]) == 9
+    assert mt.compact(spark, target, cluster_by=["amount"]) == 10
+    assert mv([(31, 31.0, "c", 6)]) == 11
+    assert mt.rebucket(spark, target, ["id"], 2) == 12
+    assert mt.restore(spark, target, 9) == 13
+
+    n = 13
+    ms = {v: mt._read_manifest(spark, target, v) for v in range(1, n + 1)}
     for v, m in ms.items():
         assert set(m) == MANIFEST_KEYS, (v, sorted(m))
         assert m["version"] == v
@@ -1505,27 +1573,33 @@ def test_manifest_contract_across_every_commit(spark, tmp_path):
         assert m["key_cols"] == ["id"], v
         assert m["schema"] == ms[1]["schema"], v
         assert isinstance(m["committed_at"], float), v
-    assert [ms[v]["operation"] for v in range(1, 9)] == [
-        "merge_versioned", "merge_into", "set_constraint:nonneg",
-        "delete_where", "update_where", "compact", "rebucket:2", "restore:5",
+    assert [ms[v]["operation"] for v in range(1, n + 1)] == [
+        "merge_versioned", "merge_versioned", "merge_into", "merge_versioned",
+        "set_constraint:nonneg", "delete_where", "merge_versioned",
+        "update_where", "merge_versioned", "compact", "merge_versioned",
+        "rebucket:2", "restore:9",
     ]
-    assert [ms[v]["committed_at"] for v in range(1, 9)] == sorted(
-        ms[v]["committed_at"] for v in range(1, 9))
+    assert [len(ms[v]["deltas"]) for v in range(1, n + 1)] == [
+        0, 1, 0, 1, 1, 0, 1, 0, 1, 0, 1, 0, 1]
+    assert [ms[v]["committed_at"] for v in range(1, n + 1)] == sorted(
+        ms[v]["committed_at"] for v in range(1, n + 1))
     nonneg = {"nonneg": "amount >= 0"}
-    assert [ms[v]["constraints"] for v in range(1, 9)] == [{}, {}] + [nonneg] * 6
-    assert [ms[v]["n_buckets"] for v in range(1, 9)] == [4] * 6 + [2, 4]
-    # a metadata-only commit re-references its source version's files
-    assert ms[3]["buckets"] == ms[2]["buckets"]
-    assert ms[3]["stats"] == ms[2]["stats"]
-    assert ms[8]["buckets"] == ms[5]["buckets"]
-    assert ms[8]["stats"] == ms[5]["stats"]
+    assert [ms[v]["constraints"] for v in range(1, n + 1)] == [{}] * 4 + [nonneg] * 9
+    assert [ms[v]["n_buckets"] for v in range(1, n + 1)] == [4] * 11 + [2, 4]
+    # a delta commit and a metadata-only commit re-reference the base
+    for v, src_v in ((2, 1), (5, 4), (13, 9)):
+        assert ms[v]["buckets"] == ms[src_v]["buckets"], v
+        assert ms[v]["stats"] == ms[src_v]["stats"], v
+    assert ms[5]["deltas"] == ms[4]["deltas"]
+    assert ms[13]["deltas"] == ms[9]["deltas"]
     # the data-rewriting maintenance commits keep the content
     snap = lambda v: sorted(  # noqa: E731
         tuple(r) for r in mt.read_snapshot(spark, target, v).collect())
-    assert snap(5) == snap(6) == snap(7) == snap(8)
-    assert snap(8) == sorted(
-        [(i, float(i) + 100.0) for i in (1, 3)] + [(2, 122.0)]
-        + [(i, float(i)) for i in range(4, 17)]
+    assert snap(9) == snap(10) == snap(13)
+    assert snap(11) == snap(12)
+    assert snap(13) == sorted(
+        [(1, 101.0), (2, 122.0), (3, 103.0), (4, 44.0), (30, 3.0)]
+        + [(i, float(i)) for i in range(7, 17)]
     )
 
 
@@ -1698,17 +1772,18 @@ def test_relative_target_lists_where_hadoop_wrote(spark, tmp_path):
 
 
 def test_merge_versioned_commit_runs_at_most_three_jobs(spark, tmp_path):
-    """A CDC merge onto an existing 64-bucket table runs its bucket set
-    (1 job) and the write (2 jobs) — no job reads the manifest, lists
-    the touched buckets' files (more paths than Spark lists on the
-    driver by default), infers a schema or scans the new files for
-    stats."""
+    """A CDC merge onto an existing 64-bucket table commits a delta in
+    at most 2 jobs (the batch collapse and the write) and writes
+    exactly one data file; the fold, four deltas later, runs its bucket
+    set (1 job) and the write (2 jobs) — no job reads the manifest,
+    lists the touched buckets' files (more paths than Spark lists on
+    the driver by default), infers a schema or scans the new files
+    for stats."""
     target = str(tmp_path / "t")
     mt.merge_versioned(
         _batch(spark, [(i, float(i), "c", 1) for i in range(2000)]),
         target, ["id"], n_buckets=64,
     )
-    batch = _batch(spark, [(i * 7, -1.0, "u", 2) for i in range(300)])
     sc = spark.sparkContext
     jsc = sc._jsc
 
@@ -1721,10 +1796,25 @@ def test_merge_versioned_commit_runs_at_most_three_jobs(spark, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assert jobs("mt-read-manifest", lambda: mt._read_manifest(spark, target, 1)) == 0
-    assert jobs("mt-merge", lambda: mt.merge_versioned(batch, target, ["id"])) <= 3
+    delta = _batch(spark, [(i * 7, -1.0, "u", 2) for i in range(300)])
+    assert jobs("mt-delta", lambda: mt.merge_versioned(delta, target, ["id"])) <= 2
+    m = mt._read_manifest(spark, target, 2)
+    assert m["buckets"] == mt._read_manifest(spark, target, 1)["buckets"]
+    (entry,) = m["deltas"]
+    vdir = os.path.join(target, os.path.dirname(entry["file"]))
+    assert [f for f in os.listdir(vdir) if f.endswith(".parquet")] == [
+        os.path.basename(entry["file"])]
+    assert len(entry["buckets"]) == 64
+    for v in (3, 4, 5):
+        mt.merge_versioned(_batch(spark, [(v, -float(v), "u", v)]), target, ["id"])
+    fold = _batch(spark, [(i * 11, -2.0, "u", 6) for i in range(300)])
+    assert jobs("mt-fold", lambda: mt.merge_versioned(fold, target, ["id"])) <= 3
+    assert mt._read_manifest(spark, target, 6)["deltas"] == []
     got = {r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
-    assert set(got) == set(range(2000)) | {i * 7 for i in range(300)}
-    assert got[7] == -1.0 and got[8] == 8.0
+    assert set(got) == (set(range(2000)) | {i * 7 for i in range(300)}
+                        | {i * 11 for i in range(300)})
+    assert got[7] == -1.0 and got[8] == 8.0 and got[3] == -3.0
+    assert got[11] == got[77] == -2.0
 
 
 def test_footer_stats_combine_row_groups_nan_highest():
@@ -1755,3 +1845,162 @@ def test_footer_stats_combine_row_groups_nan_highest():
         assert st["__rows"] == 4 and st["__nulls"] == {"d": 0}
     st = mt._footer_stats(footer((nan, nan), (2.0, 3.0)), schema)
     assert st["d"][0] == 2.0 and st["d"][1] != st["d"][1]
+
+
+# ------------------------------------------------------- merge-on-read
+
+
+def test_vacuum_between_delta_commits_keeps_latest_readable(spark, tmp_path):
+    """vacuum counts the kept manifests' delta files as live: vacuuming
+    down to the newest version between delta commits leaves it (and
+    every later delta commit and the fold) reading the model state."""
+    target = str(tmp_path / "t")
+    model = {i: float(i) for i in range(1, 9)}
+    mt.merge_versioned(
+        _batch(spark, [(i, a, "c", 1) for i, a in model.items()]), target, ["id"],
+        n_buckets=4,
+    )
+    snap = lambda: {  # noqa: E731
+        r["id"]: r["amount"] for r in mt.read_snapshot(spark, target).collect()}
+    pending = []
+    for ts in range(2, 8):  # four delta commits, the fold, a delta commit
+        k = ts % 4 + 1
+        if ts % 3:
+            model[k] = 10.0 * ts
+            mt.merge_versioned(_batch(spark, [(k, 10.0 * ts, "u", ts)]), target, ["id"])
+        else:
+            model.pop(k, None)
+            mt.merge_versioned(_batch(spark, [(k, None, "d", ts)]), target, ["id"])
+        m = mt._read_manifest(spark, target, ts)
+        pending.append(len(m["deltas"]))
+        assert mt.vacuum(spark, target, keep_last=1) == [ts - 1]
+        kept = set(os.listdir(os.path.join(target, "data")))
+        assert {d["file"].split("/")[1] for d in m["deltas"]} <= kept
+        assert snap() == model, ts
+    assert pending == [1, 2, 3, 4, 0, 1]
+
+
+def _evolving_batch(spark, rows, with_note):
+    """rows: (id, amount, note, op, ts_ms) → decode-shaped change frame,
+    with ``note`` in the after-image only when ``with_note``."""
+    df = spark.createDataFrame(
+        rows, "id long, amount double, note string, op string, ts_ms long")
+    cols = ["id", "amount", "note"] if with_note else ["id", "amount"]
+    return df.select(
+        "id", "op", "ts_ms",
+        F.when(F.col("op") != "d", F.struct(*cols)).alias("after"),
+    )
+
+
+def test_merge_on_read_matches_latest_state_model(spark, tmp_path):
+    """Random merges (inserts, updates, deletes, in-batch and replayed
+    redeliveries, one add-column batch) interleaved with every other
+    writer, crossing merge_versioned folds and folds by the other
+    operations.  At every version, read_snapshot, read_keys (with a key
+    whose bucket has no base file until a fold), read_where and
+    table_changes(v-1, v) equal a Python latest-state model: within a
+    batch the newest ts_ms wins (ties d > u > c), and a later commit
+    wins over committed state."""
+    import random
+
+    rng = random.Random(20261019)
+    target = str(tmp_path / "t")
+    nb = 8
+    bucket = {r["id"]: r["b"] for r in spark.range(1, 300).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(nb)).alias("b")).collect()}
+    lonely = min(k for k, b in bucket.items() if b == nb - 1)
+    pool = [k for k, b in bucket.items() if b != nb - 1][:40]
+    rank = {"c": 1, "u": 2, "d": 3}
+    models = {}  # version -> ({id: (amount, note)}, has_note)
+    state, has_note, ts, batches = {}, False, 0, []
+
+    def apply(events):
+        win = {}
+        for e in events:
+            if e[0] not in win or (e[4], rank[e[3]]) > (win[e[0]][4], rank[win[e[0]][3]]):
+                win[e[0]] = e
+        for k, (_, amount, note, op, _) in win.items():
+            if op == "d":
+                state.pop(k, None)
+            else:
+                state[k] = (amount, note if has_note else None)
+
+    def random_events(keys):
+        nonlocal ts
+        out = []
+        for k in keys:
+            ts += 1
+            op = "d" if rng.random() < 0.25 else ("u" if k in state else "c")
+            amount = None if op == "d" else float(rng.randint(0, 500))
+            out.append((k, amount, f"n{ts}" if has_note else None, op, ts))
+            if rng.random() < 0.2:  # in-batch redelivery of the same event
+                out.append(out[-1])
+        return out
+
+    def mv(events, note=None):
+        nonlocal has_note
+        has_note = has_note if note is None else note
+        apply(events)
+        batches.append(events)
+        return mt.merge_versioned(
+            _evolving_batch(spark, events, has_note), target, ["id"], n_buckets=nb)
+
+    def rows_of(df):
+        return {r["id"]: (r["amount"], r.asDict().get("note")) for r in df.collect()}
+
+    def check(v):
+        models[v] = (dict(state), has_note)
+        assert mt.list_versions(spark, target)[-1] == v
+        assert rows_of(mt.read_snapshot(spark, target, v)) == state, v
+        probe = sorted(rng.sample(pool, 4) + [lonely, 299])
+        got = rows_of(mt.read_keys(spark, target, ["id"], [(k,) for k in probe], version=v))
+        assert got == {k: state[k] for k in probe if k in state}, v
+        cut = float(rng.randint(100, 400))
+        got = rows_of(mt.read_where(spark, target, [("amount", ">=", cut)], version=v))
+        assert got == {k: r for k, r in state.items() if r[0] >= cut}, v
+        if v - 1 in models:
+            old = models[v - 1][0]
+            want = {(k, "insert") + state[k] for k in set(state) - set(old)}
+            want |= {(k, "delete") + old[k] for k in set(old) - set(state)}
+            for k in set(old) & set(state):
+                if old[k] != state[k]:
+                    want |= {(k, "update_preimage") + old[k],
+                             (k, "update_postimage") + state[k]}
+            feed = mt.table_changes(spark, target, ["id"], v - 1, v).collect()
+            got = {(r["id"], r["_change_type"], r["amount"], r.asDict().get("note"))
+                   for r in feed}
+            assert got == want and len(feed) == len(want), v
+
+    check(mv(random_events(pool[:24])))
+    check(mv(random_events([lonely] + rng.sample(pool, 6))))  # lonely: delta only
+    for _ in range(3):
+        check(mv(random_events(rng.sample(pool, 8))))
+    assert len(mt._read_manifest(spark, target, 5)["deltas"]) == 4
+    check(mv(random_events(rng.sample(pool, 8))))  # the merge_versioned fold
+    assert mt._read_manifest(spark, target, 6)["deltas"] == []
+    check(mv(random_events(rng.sample(pool, 6) + [lonely]), note=True))  # add-column
+    check(mv(batches[-1]))  # the same batch redelivered: a content no-op
+    check(mv(batches[-5]))  # an older batch redelivered: its changes win again
+    v = mt.delete_where(spark, target, [("amount", ">=", 450.0)])
+    for k in [k for k, r in state.items() if r[0] >= 450.0]:
+        del state[k]
+    check(v)
+    check(mv(random_events(rng.sample(pool, 6))))
+    v = mt.update_where(spark, target, [("id", "<=", 60)], {"amount": "amount + 1"})
+    state.update({k: (r[0] + 1, r[1]) for k, r in state.items() if k <= 60})
+    check(v)
+    check(mv(random_events(rng.sample(pool, 6))))
+    src = [(k, float(rng.randint(0, 500)), "mi") for k in rng.sample(pool, 5)]
+    v = mt.merge_into(spark.createDataFrame(src, "id long, amount double, note string"),
+                      target, ["id"])
+    state.update({k: (a, n) for k, a, n in src})
+    check(v)
+    check(mv(random_events(rng.sample(pool, 6))))
+    check(mt.compact(spark, target))
+    check(mv(random_events(rng.sample(pool, 6))))
+    mt.vacuum(spark, target, keep_last=3)
+    back = mt.list_versions(spark, target)[-2]
+    v = mt.restore(spark, target, back)
+    state, has_note = dict(models[back][0]), models[back][1]
+    check(v)
+    check(mv(random_events(rng.sample(pool, 6) + [lonely])))
