@@ -118,6 +118,12 @@ def decode(parsed: DataFrame, key_cols: list[str]) -> DataFrame:
     return out
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (an embedded
+    backtick doubled), so SQL-text expressions take any column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def latest_change_per_key(
     changes: DataFrame, key_cols: list[str], version_col: str = "ts_ms"
 ) -> DataFrame:
@@ -125,20 +131,15 @@ def latest_change_per_key(
     (``version_col``, then op-rank for same-version ties: d > u > c),
     DELETES KEPT — sinks that need the delete set (the JDBC upsert)
     and sinks that drop it (:func:`apply_latest_state`) both derive
-    from this, so the tie-break semantics live in exactly one place."""
-    op_rank = (
-        F.when(F.col("op") == "d", 3)
-        .when(F.col("op") == "u", 2)
-        .otherwise(1)
+    from this, so the tie-break semantics live in exactly one place.
+    The window is one SQL expression: built from ``Column`` objects it
+    costs a py4j round trip per node on every micro-batch."""
+    rn = F.expr(
+        f"row_number() OVER (PARTITION BY {', '.join(map(quote_ident, key_cols))}"
+        f" ORDER BY {quote_ident(version_col)} DESC,"
+        " CASE op WHEN 'd' THEN 3 WHEN 'u' THEN 2 ELSE 1 END DESC)"
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(), op_rank.desc()
-    )
-    return (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return changes.withColumn("__rn", rn).filter("__rn = 1").drop("__rn")
 
 
 def apply_latest_state(

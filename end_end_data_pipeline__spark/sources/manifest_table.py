@@ -56,13 +56,22 @@ chunk whose min plus max exceed parquet-mr's 4 KiB stats limit gets
 neither [min, max] nor a null count.  Such files are kept, never
 pruned, on those columns.
 
-A commit's Spark work is its data work: the manifest is read on the
-driver, every read of committed files takes the manifest's schema
-(no inference job) and lists them on the driver (no listing job), and
-the affected bucket set is one job.  Supported stores are the local
-filesystem and HDFS-like ones — what both the Hadoop FS (manifests,
-commit) and ``pyarrow.fs`` (new-file listing, footers, at the URI the
-Hadoop FS qualifies) open.
+A commit's Spark work is its data work: every read of committed files
+takes the manifest's schema (no inference job) and lists them on the
+driver (no listing job), the affected bucket set of a rewrite is one
+job, and a delta commit is one job, its write.  Its driver work is as
+small as its data: manifests are listed, read and written through
+``pyarrow.fs``, opened at the URI the Hadoop FS qualifies the target
+to, so no manifest payload crosses py4j — a py4j reply of 16 KB or
+more stalls about 45 ms (an 8 KB one takes 1 ms), which a 37 KB
+manifest paid on every ``_open``, and the gateway commands of a
+listing grew with the version count.  Only the commit point stays on
+the Hadoop FS: the ``exists`` check and the ``rename``.  The delta's
+plan is one window expression and one SQL projection, not a py4j
+round trip per ``Column`` node.  Supported stores are the local
+filesystem and HDFS-like ones — what both the Hadoop FS (commit
+rename) and ``pyarrow.fs`` (manifests, new-file listing, footers)
+open.
 
 Commit protocol (optimistic, multi-writer safe):
 
@@ -115,7 +124,10 @@ import datetime as _dt
 import time
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from py4j.java_gateway import JavaClass
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     AtomicType,
@@ -141,44 +153,49 @@ _DELTA_V = "__commit_version"  # the version that committed a delta row
 _FOLD_AT = 5  # a merge that would leave this many pending deltas folds
 
 
-def _bucket_of(key_cols: list, n_buckets: int) -> Column:
-    """A row's bucket id — the immutable key→bucket mapping."""
-    return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets))
+def _bucket_sql(key_cols: list[str], n_buckets: int) -> str:
+    """A row's bucket id — the immutable key→bucket mapping — as SQL."""
+    keys = ", ".join(map(cdc.quote_ident, key_cols))
+    return f"pmod(xxhash64({keys}), {n_buckets})"
+
+
+def _bucket_of(key_cols: list[str], n_buckets: int) -> Column:
+    """``_bucket_sql`` as a Column."""
+    return F.expr(_bucket_sql(key_cols, n_buckets))
 
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+    return _jpath(jvm, path).getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
 def _jpath(jvm, path: str):
-    return jvm.org.apache.hadoop.fs.Path(path)
+    # the class by name: ``jvm.org.apache...`` is a round trip per dot
+    return JavaClass("org.apache.hadoop.fs.Path", jvm._gateway_client)(path)
+
+
+def _store(spark: SparkSession, path: str):
+    """``(pyarrow filesystem, path in it)`` for ``path`` opened at the
+    URI the Hadoop FS qualifies it to (``fs.defaultFS`` and the JVM's
+    working dir decide a scheme-less path), so pyarrow lists, reads
+    and writes exactly where Spark and the commit rename do."""
+    hfs, jvm = _fs(spark, path)
+    uri = hfs.makeQualified(_jpath(jvm, path)).toUri().toASCIIString()
+    return pafs.FileSystem.from_uri(uri)
 
 
 def list_versions(spark: SparkSession, target: str) -> list[int]:
-    fs, jvm = _fs(spark, target)
-    root = _jpath(jvm, target)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        m = _MANIFEST_RE.match(st.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    fs, root = _store(spark, target)
+    infos = fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
+    return sorted(
+        int(m.group(1)) for i in infos if (m := _MANIFEST_RE.match(i.base_name))
+    )
 
 
 def _read_manifest(spark: SparkSession, target: str, version: int) -> dict:
-    # read on the driver through the Hadoop FS, no Spark job: a Java
-    # String crosses py4j intact (only a byte[] filled in place on the
-    # JVM side does not — readFully into a gateway array reads zeros)
-    fs, jvm = _fs(spark, target)
-    stream = fs.open(_jpath(jvm, f"{target}/manifest-v{version}.json"))
-    try:
-        return json.loads(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
+    fs, root = _store(spark, target)
+    with fs.open_input_stream(f"{root}/manifest-v{version}.json") as stream:
+        return json.loads(stream.read())
 
 
 def _manifest_schema(manifest: dict | None) -> StructType | None:
@@ -303,7 +320,8 @@ def _delta_rows(
         ])
     ).parquet(*paths)
     if wanted is not None:
-        rows = rows.filter(F.col(BUCKET_COL).isin(sorted(int(b) for b in wanted)))
+        ids = ", ".join(str(b) for b in sorted(int(b) for b in wanted))
+        rows = rows.filter(f"{BUCKET_COL} IN ({ids})")
     return rows
 
 
@@ -313,16 +331,17 @@ def _as_changes(
     """Committed rows as change rows ``(key..., op, _DELTA_V, after)``:
     base rows are creates at version 0, older than any delta; delta
     rows keep their op and the version that committed them."""
+    q = cdc.quote_ident
     parts = []
     for rows, op, v in (
-        (base, F.lit("c"), F.lit(0).cast("long")),
-        (deltas, F.col(_DELTA_OP), F.col(_DELTA_V)),
+        (base, "'c'", "CAST(0 AS BIGINT)"),
+        (deltas, _DELTA_OP, _DELTA_V),
     ):
         if rows is not None:
             cols = [c for c in rows.columns if c not in (_DELTA_OP, _DELTA_V, BUCKET_COL)]
-            parts.append(rows.select(
-                *key_cols, op.alias("op"), v.alias(_DELTA_V),
-                F.struct(*cols).alias("after"),
+            parts.append(rows.selectExpr(
+                *map(q, key_cols), f"{op} AS op", f"{v} AS {_DELTA_V}",
+                f"struct({', '.join(map(q, cols))}) AS after",
             ))
     return reduce(DataFrame.unionByName, parts)
 
@@ -351,21 +370,24 @@ def _read_state(
     # file written by one task): resolve them in one partition, with no
     # shuffle — a delta holds one row per key, so the newest commit
     # wins — and keep the base rows whose key no delta holds through an
-    # anti-join on the keys, so no base row is shuffled either
-    newest = Window.partitionBy(*key_cols).orderBy(F.col(_DELTA_V).desc())
+    # anti-join on the keys, so no base row is shuffled either (SQL
+    # text: a py4j round trip per Column node would cost more than the
+    # read of a few delta rows)
+    q = cdc.quote_ident
+    keys = ", ".join(map(q, key_cols))
     live = (
         deltas.coalesce(1)
-        .select(*cols, _DELTA_OP, F.row_number().over(newest).alias("__rn"))
-        .filter((F.col("__rn") == 1) & (F.col(_DELTA_OP) != "d"))
-        .select(*cols)
+        .selectExpr(
+            *map(q, cols), _DELTA_OP,
+            f"row_number() OVER (PARTITION BY {keys} ORDER BY {_DELTA_V} DESC) AS __rn",
+        )
+        .filter(f"__rn = 1 AND {_DELTA_OP} != 'd'")
+        .selectExpr(*map(q, cols))
     )
     if base is None:
         return live
-    held = deltas.select(*[F.col(k).alias(f"__held_{k}") for k in key_cols])
-    on = reduce(
-        lambda a, b: a & b,
-        [F.col(k).eqNullSafe(F.col(f"__held_{k}")) for k in key_cols],
-    )
+    held = deltas.selectExpr(*[f"{q(k)} AS {q('__held_' + k)}" for k in key_cols])
+    on = F.expr(" AND ".join(f"{q(k)} <=> {q('__held_' + k)}" for k in key_cols))
     return base.join(held, on, "left_anti").unionByName(live)
 
 
@@ -432,15 +454,22 @@ def read_keys(
     _, v, manifest = _open(spark, target, version)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     schema = _manifest_schema(manifest)
-    key_df = spark.createDataFrame(keys, key_cols)
+    # one slice: the default slices a dozen keys over defaultParallelism
+    # partitions, a task each in the bucket-set job and the broadcast
+    key_df = spark.createDataFrame(
+        spark.sparkContext.parallelize(keys, 1),
+        spark._inferSchemaFromList(keys, names=key_cols),
+    )
     if schema is not None:
         # pin the probe keys to the TABLE's column types before hashing
         # — xxhash64(int) != xxhash64(long), so inferred-literal types
         # would silently prune to the wrong buckets
         table_types = {f.name: f.dataType for f in schema.fields}
-        key_df = key_df.select(
-            *[F.col(k).cast(table_types[k]).alias(k) for k in key_cols]
-        )
+        q = cdc.quote_ident
+        key_df = key_df.selectExpr(*[
+            f"CAST({q(k)} AS {table_types[k].simpleString()}) AS {q(k)}"
+            for k in key_cols
+        ])
     wanted = sorted(_bucket_set(key_df, key_cols, n_buckets))
     files = [
         f for b, fl in manifest["buckets"].items() if b in wanted for f in fl
@@ -483,15 +512,15 @@ def _commit_manifest(
     """Write-then-rename commit.  The rename refuses (returns false) if
     the destination manifest already exists — a racing writer committed
     first; surface that instead of clobbering."""
-    fs, jvm = _fs(spark, target)
     v = manifest["version"]
+    # the payload goes through pyarrow (a py4j transfer of 16 KB or
+    # more stalls ~45 ms); the commit point stays on the Hadoop FS
+    store, root = _store(spark, target)
+    with store.open_output_stream(f"{root}/_tmp-manifest-v{v}") as out:
+        out.write(json.dumps(manifest).encode("utf-8"))
+    fs, jvm = _fs(spark, target)
     tmp = _jpath(jvm, f"{target}/_tmp-manifest-v{v}")
     final = _jpath(jvm, f"{target}/manifest-v{v}.json")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
     # pre-check + rename-result check: HDFS rename refuses an existing
     # destination; some local filesystems overwrite instead, so the
     # explicit exists() guard keeps the optimistic-concurrency contract
@@ -570,15 +599,9 @@ def _written_files(
     its files (relative to the table root; only non-empty buckets get
     a ``p_bucket=`` dir), and each file's stats from the parquet
     footer the write produced — no Spark job, no data read.  The dir
-    is opened at the URI the Hadoop FS that wrote it resolves it to
-    (``fs.defaultFS`` and the JVM's working dir decide a scheme-less
-    path), so the listing cannot disagree with the write."""
-    import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
-
-    hfs, jvm = _fs(spark, data_dir)
-    uri = hfs.makeQualified(_jpath(jvm, data_dir)).toUri().toASCIIString()
-    fs, root = pafs.FileSystem.from_uri(uri)
+    is opened where the Hadoop FS that wrote it resolves it
+    (``_store``), so the listing cannot disagree with the write."""
+    fs, root = _store(spark, data_dir)
     rel_dir = "/".join(data_dir.rstrip("/").split("/")[-2:])  # data/vN-token
     files: dict[str, list[str]] = {}
     stats: dict[str, dict] = {}
@@ -890,7 +913,7 @@ def merge_versioned(
             *key_cols, "op",
             F.struct(
                 F.lit(new_v).cast("long").alias("commit"),
-                F.col(version_col).alias("v"),
+                F.col(cdc.quote_ident(version_col)).alias("v"),
             ).alias(order),
             "after",
         ).unionByName(committed.select(
@@ -932,44 +955,47 @@ def _commit_delta(
     """Commit ``batch`` as one delta file: its latest change per key,
     tombstones kept, as the table's columns plus ``_DELTA_OP``,
     ``_DELTA_V`` (= ``new_v``) and the bucket id, sorted by bucket.
-    Two Spark jobs (the collapse's shuffle and the write); the delta's
-    bucket set rides the write as an observed metric, and the manifest
-    carries every base file and stat by reference.  Constraints are
-    checked on the delta's non-delete rows."""
+    One Spark job, the write: the batch is coalesced to one partition,
+    which the collapse's window needs no shuffle for, and the delta's
+    bucket set rides the write as an observed metric.  The plan is one
+    window expression and one SQL projection, and the manifest carries
+    every base file and stat by reference.  Constraints, when the
+    table has any, are checked on the delta's non-delete rows."""
+    q = cdc.quote_ident
     fields = batch.schema["after"].dataType.fields
-    rows = cdc.latest_change_per_key(batch, key_cols, version_col).select(
+    latest = cdc.latest_change_per_key(batch.coalesce(1), key_cols, version_col)
+    rows = latest.selectExpr(
         *[
-            (F.col(f.name) if f.name in key_cols else F.col("after")[f.name])
-            .alias(f.name)
+            q(f.name) if f.name in key_cols else f"after.{q(f.name)} AS {q(f.name)}"
             for f in fields
         ],
-        F.col("op").alias(_DELTA_OP),
-        F.lit(new_v).cast("long").alias(_DELTA_V),
-        _bucket_of(key_cols, n_buckets).cast("int").alias(BUCKET_COL),
+        f"op AS {_DELTA_OP}",
+        f"CAST({new_v} AS BIGINT) AS {_DELTA_V}",
+        f"CAST({_bucket_sql(key_cols, n_buckets)} AS INT) AS {BUCKET_COL}",
     )
     schema = StructType(rows.schema.fields[: len(fields)])
-    _check_constraints(
-        rows.filter(F.col(_DELTA_OP) != "d").select(*schema.fieldNames()),
-        _constraints(manifest), "merge_versioned delta",
-    )
+    constraints = _constraints(manifest)
+    if constraints:
+        _check_constraints(
+            rows.filter(f"{_DELTA_OP} != 'd'").selectExpr(*map(q, schema.fieldNames())),
+            constraints, "merge_versioned delta",
+        )
     data_dir = _data_dir(target, new_v)
     obs = Observation()
     _write_parquet(
         spark,
-        rows.observe(obs, F.collect_set(BUCKET_COL).alias("b"))
-        .coalesce(1)
+        rows.observe(obs, F.expr(f"collect_set({BUCKET_COL})").alias("b"))
         .sortWithinPartitions(BUCKET_COL)
         .write.mode("overwrite"),
         data_dir,
     )
-    fs, jvm = _fs(spark, data_dir)
     rel_dir = "/".join(data_dir.rstrip("/").split("/")[-2:])  # data/vN-token
     buckets = sorted((str(b) for b in obs.get["b"]), key=int)
+    fs, root = _store(spark, data_dir)
     written = [
-        {"file": f"{rel_dir}/{name}", "buckets": buckets}
-        for st in fs.listStatus(_jpath(jvm, data_dir))
-        if (name := st.getPath().getName()).endswith(".parquet")
-        and not name.startswith(("_", "."))
+        {"file": f"{rel_dir}/{i.base_name}", "buckets": buckets}
+        for i in fs.get_file_info(pafs.FileSelector(root))
+        if i.base_name.endswith(".parquet") and not i.base_name.startswith(("_", "."))
     ]
     return _commit(
         spark, target, data_dir,

@@ -1750,9 +1750,10 @@ def test_int96_timestamp_file_gets_no_stats(spark, tmp_path, monkeypatch):
 
 def test_relative_target_lists_where_hadoop_wrote(spark, tmp_path):
     """A scheme-less relative target resolves against the Hadoop FS's
-    working dir, which is where Spark writes it; the footer pass opens
-    that same dir (not the Python process's cwd), so the commit keeps
-    every bucket file it wrote."""
+    working dir, which is where Spark writes it; the footer pass, the
+    manifest listing, read and write and the delta listing all open
+    that same dir (not the Python process's cwd), so every commit keeps
+    the files it wrote and the next one finds it."""
     fs, jvm = mt._fs(spark, str(tmp_path))
     old = fs.getWorkingDirectory()
     fs.setWorkingDirectory(mt._jpath(jvm, str(tmp_path)))
@@ -1762,19 +1763,91 @@ def test_relative_target_lists_where_hadoop_wrote(spark, tmp_path):
             "rel_t", ["id"], n_buckets=4,
         )
         m = mt._read_manifest(spark, "rel_t", 1)
+        mt.merge_versioned(
+            _batch(spark, [(3, None, "d", 2), (50, 5.0, "c", 2)]), "rel_t", ["id"]
+        )
+        versions = mt.list_versions(spark, "rel_t")
+        m2 = mt._read_manifest(spark, "rel_t", 2)
         got = sorted(r["id"] for r in mt.read_snapshot(spark, "rel_t").collect())
     finally:
         fs.setWorkingDirectory(old)
     assert (tmp_path / "rel_t" / "manifest-v1.json").exists()
     assert len(m["buckets"]) == 4
     assert set(m["stats"]) == {f for fl in m["buckets"].values() for f in fl}
-    assert got == list(range(40))
+    assert versions == [1, 2]
+    assert m2["buckets"] == m["buckets"]
+    (entry,) = m2["deltas"]
+    assert (tmp_path / "rel_t" / entry["file"]).exists()
+    assert not list((tmp_path / "rel_t").glob("_tmp-manifest-*"))
+    assert got == [i for i in range(40) if i != 3] + [50]
+
+
+def test_list_versions_gateway_calls_do_not_grow_with_versions(
+    spark, tmp_path, monkeypatch
+):
+    """Manifests are listed through pyarrow: a 40-version table costs
+    list_versions the same py4j commands as a 2-version one (only the
+    path's qualification crosses the gateway)."""
+    target = tmp_path / "t"
+    mt.merge_versioned(_batch(spark, [(1, 1.0, "c", 1)]), str(target), ["id"], n_buckets=2)
+    mt.merge_versioned(_batch(spark, [(2, 2.0, "c", 2)]), str(target), ["id"])
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def calls():
+        sent = []
+
+        def counting(*a, **k):
+            sent.append(1)
+            return real(*a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            mt.list_versions(spark, str(target))
+        return len(sent)
+
+    two = calls()
+    body = (target / "manifest-v2.json").read_text()
+    for v in range(3, 41):
+        (target / f"manifest-v{v}.json").write_text(body)
+    assert mt.list_versions(spark, str(target)) == list(range(1, 41))
+    assert calls() == two
+    assert 0 < two <= 10
+
+
+def test_large_manifest_round_trips_unchanged(spark, tmp_path):
+    """A manifest far over the size that stalls a py4j reply is
+    written and read back equal (a non-ASCII file name included), and
+    a second commit of the same version still loses the race."""
+    import json
+
+    target = str(tmp_path / "t")
+    os.makedirs(target)
+    files = [f"data/v1-abcd1234/p_bucket={b}/part-{i:05d}-é.parquet"
+             for b in range(64) for i in range(8)]
+    manifest = {
+        "version": 1, "schema": None, "operation": "merge_versioned",
+        "buckets": {str(b): [f for f in files if f"={b}/" in f] for b in range(64)},
+        "stats": {f: {"amount": [0.5, 99.25], "__rows": 400, "__nulls": {"amount": 0}}
+                  for f in files},
+        "deltas": [],
+    }
+    assert len(json.dumps(manifest)) > 64 * 1024
+    mt._commit_manifest(spark, target, manifest)
+    assert mt._read_manifest(spark, target, 1) == manifest
+    assert mt.list_versions(spark, target) == [1]
+    with pytest.raises(RuntimeError, match="lost the race"):
+        mt._commit_manifest(spark, target, {**manifest, "operation": "other"})
+    assert mt._read_manifest(spark, target, 1) == manifest
+    assert not [f for f in os.listdir(target) if f.startswith("_tmp")]
 
 
 def test_merge_versioned_commit_runs_at_most_three_jobs(spark, tmp_path):
     """A CDC merge onto an existing 64-bucket table commits a delta in
-    at most 2 jobs (the batch collapse and the write) and writes
-    exactly one data file; the fold, four deltas later, runs its bucket
+    exactly 1 job (the write: the one-partition batch needs no shuffle
+    for its collapse) and writes exactly one data file; the fold, four
+    deltas later, runs its bucket
     set (1 job) and the write (2 jobs) — no job reads the manifest,
     lists the touched buckets' files (more paths than Spark lists on
     the driver by default), infers a schema or scans the new files
@@ -1797,7 +1870,7 @@ def test_merge_versioned_commit_runs_at_most_three_jobs(spark, tmp_path):
 
     assert jobs("mt-read-manifest", lambda: mt._read_manifest(spark, target, 1)) == 0
     delta = _batch(spark, [(i * 7, -1.0, "u", 2) for i in range(300)])
-    assert jobs("mt-delta", lambda: mt.merge_versioned(delta, target, ["id"])) <= 2
+    assert jobs("mt-delta", lambda: mt.merge_versioned(delta, target, ["id"])) == 1
     m = mt._read_manifest(spark, target, 2)
     assert m["buckets"] == mt._read_manifest(spark, target, 1)["buckets"]
     (entry,) = m["deltas"]
@@ -2004,3 +2077,70 @@ def test_merge_on_read_matches_latest_state_model(spark, tmp_path):
     state, has_note = dict(models[back][0]), models[back][1]
     check(v)
     check(mv(random_events(rng.sample(pool, 6) + [lonely])))
+
+
+def test_sql_text_expressions_quote_column_names(spark, tmp_path):
+    """Key and version columns whose names need backticks (a space, a
+    reserved word, an embedded backtick) give the model's answer
+    through latest_change_per_key, every merge_versioned path (new
+    table, delta, fold) and read_keys; so does a value column with a
+    backtick in its name."""
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, LongType, StringType, StructField, StructType)
+
+    keys, ver = ["acct id", "order"], "ver`sion"
+    image = StructType([StructField("acct id", LongType()),
+                        StructField("order", IntegerType()),
+                        StructField("amount", DoubleType()),
+                        StructField("x`y", StringType())])
+    schema = StructType([StructField("acct id", LongType()),
+                         StructField("order", IntegerType()),
+                         StructField("op", StringType()),
+                         StructField(ver, LongType()),
+                         StructField("after", image)])
+    rank = {"c": 1, "u": 2, "d": 3}
+
+    def frame(events):
+        return spark.createDataFrame(
+            [(a, o, op, v, None if op == "d" else (a, o, amt, f"{amt}`"))
+             for a, o, op, v, amt in events], schema)
+
+    def winners(events):
+        win = {}
+        for e in events:
+            k = e[:2]
+            if k not in win or (e[3], rank[e[2]]) > (win[k][3], rank[win[k][2]]):
+                win[k] = e
+        return win
+
+    first = [(a, a % 3, "c", 10 - a, float(a)) for a in range(12)]
+    first += [(2, 2, "u", 8, 20.0), (2, 2, "d", 8, None),  # same version: d wins
+              (5, 2, "u", 1, 50.0), (7, 1, "u", 9, 70.0)]  # 5: older, loses
+    got = {(r["acct id"], r["order"]): (r["op"], r[ver])
+           for r in cdc.latest_change_per_key(frame(first), keys, ver).collect()}
+    assert got == {k: (e[2], e[3]) for k, e in winners(first).items()}
+
+    target = str(tmp_path / "t")
+    state: dict = {}
+    batches = [first] + [
+        [((n * 5 + i) % 15, (n * 5 + i) % 15 % 3, "d" if i == 4 else "u", n, float(n * 100 + i))
+         for i in range(5)]
+        for n in range(1, 6)
+    ]
+    for n, events in enumerate(batches, start=1):
+        for k, e in winners(events).items():
+            if e[2] == "d":
+                state.pop(k, None)
+            else:
+                state[k] = e[4]
+        assert mt.merge_versioned(frame(events), target, keys, ver, n_buckets=4) == n
+        snap = {(r["acct id"], r["order"]): r["amount"]
+                for r in mt.read_snapshot(spark, target).collect()
+                if r["x`y"] == f"{r['amount']}`"}
+        assert snap == state, n
+        probe = [(a, a % 3) for a in range(0, 16, 3)]
+        got = {(r["acct id"], r["order"]): r["amount"]
+               for r in mt.read_keys(spark, target, keys, probe).collect()}
+        assert got == {k: state[k] for k in probe if k in state}, n
+    deltas = [len(mt._read_manifest(spark, target, v)["deltas"]) for v in range(1, 7)]
+    assert deltas == [0, 1, 2, 3, 4, 0]
