@@ -4,7 +4,17 @@
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1}
+     "queries": {"q": sec, ...}, "sf": 0.1, "codegen_compiles": N, ...}
+
+``codegen_compiles`` / ``codegen_compile_sec`` count the Janino
+compiles of the timed loop alone (driver JVM; all of it in local
+mode): near 0 means the sf0.001 warm-up held.
+
+    python3 bench.py --only NAME [NAME ...] [--reps 3] [--sf DIR]
+
+times the named catalog (or bench-extra) queries instead, each after
+its own sf0.001 warm-up, printing one line per query:
+``{"name": ..., "secs": [...], "min": ...}``.
 
 Execution is measured with the noop sink — the full physical plan runs
 JVM-side (scan → shuffle → agg) with zero collect/serialization cost,
@@ -13,6 +23,7 @@ so the number reflects engine throughput, not driver transfer.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -20,7 +31,9 @@ import sys
 import time
 
 from end_end_data_pipeline__spark.plans.catalog import load_all
-from end_end_data_pipeline__spark.session import get_spark
+from end_end_data_pipeline__spark.session import codegen_compiles, get_spark
+
+SF_WARM = "/root/testdata/sf0.001"
 
 
 # Bench-only extras measured OUTSIDE the catalog: the engine-default
@@ -42,12 +55,35 @@ def _minhash_engine_default(spark, sfd):
     )
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--only", nargs="+", metavar="NAME")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    args = ap.parse_args()
+    sf_dir = args.sf
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
     spark = get_spark("bench")
+    catalog = load_all()
+    extra_fns = {"dedup_minhash_lsh_engine": _minhash_engine_default}
+
+    def run_query(name: str, sfd: str) -> float:
+        fn = extra_fns.get(name) or catalog[name].fn
+        t0 = time.perf_counter()
+        fn(spark, sfd).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+
+    if args.only:
+        for name in args.only:
+            run_query(name, SF_WARM)
+            secs = [run_query(name, sf_dir) for _ in range(args.reps)]
+            print(json.dumps({"name": name, "secs": secs, "min": min(secs)}),
+                  flush=True)
+        spark.stop()
+        return 0
 
     # Fixed-work context probe (VERDICT r09 task 6): a pinned synthetic
     # job that touches NO engine code and NO files — 4B xxhash64 rows
@@ -73,7 +109,7 @@ def main() -> None:
         return round(sorted(reps)[1], 3)
 
     context_probe_sec = _context_probe()
-    queries = {n: q for n, q in load_all().items() if q.bench}
+    queries = {n: q for n, q in catalog.items() if q.bench}
 
     # Fixed measurement order (the BENCH_r01 sequence) so per-query
     # ratchet numbers stay comparable round-to-round: catalog priority
@@ -100,28 +136,19 @@ def main() -> None:
     # (q9, the versioned merge, PII redaction) report as extra columns
     # and do NOT move headline_total_sec
     pinned = [n for n in ordered if n in rank]
-    extras = [n for n in ordered if n not in rank]
-
-    extra_fns = {"dedup_minhash_lsh_engine": _minhash_engine_default}
-    extras = [*extras, *extra_fns]
-
-    def run_query(name: str, sfd: str):
-        fn = extra_fns.get(name) or queries[name].fn
-        return fn(spark, sfd)
+    extras = [*(n for n in ordered if n not in rank), *extra_fns]
 
     # JVM/codegen warmup on the smallest fixture (not timed): run every
     # bench query once so codegen/broadcast warmup cost lands here, not
-    # in whichever query happens to run first.
+    # in whichever query happens to run first.  The session's codegen
+    # cache holds every class this generates, so the timed loop reuses
+    # them; codegen_compiles shows what it still compiled.
     for name in [*ordered, *extra_fns]:
-        run_query(name, "/root/testdata/sf0.001").write.format(
-            "noop"
-        ).mode("overwrite").save()
+        run_query(name, SF_WARM)
 
-    timings: dict[str, float] = {}
-    for name in [*ordered, *extra_fns]:
-        t0 = time.perf_counter()
-        run_query(name, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - t0, 3)
+    n0, sec0 = codegen_compiles(spark)
+    timings = {name: run_query(name, sf_dir) for name in [*ordered, *extra_fns]}
+    n1, sec1 = codegen_compiles(spark)
 
     out = {
         "metric": "headline_total_sec",
@@ -132,9 +159,12 @@ def main() -> None:
         "context_probe_sec": context_probe_sec,
         "context_probe_end_sec": _context_probe(),
         "sf": sf,
+        "codegen_compiles": n1 - n0,
+        "codegen_compile_sec": round(sec1 - sec0, 3),
     }
     print(json.dumps(out))
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":

@@ -1269,13 +1269,17 @@ def merge_into(
     else:
         out_fields = source.schema.fields
     non_keys = [f.name for f in out_fields if f.name not in key_cols]
+    # every name is quoted: a bare string is parsed as an attribute path
+    q = cdc.quote_ident
+    keys = [F.col(q(k)) for k in key_cols]
+    vals = [F.col(q(c)) for c in non_keys]
 
     # a target row matching MULTIPLE source rows makes the clause
     # outcome depend on join row order — refuse, like Delta's
     # DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW (collapse the
     # source first, e.g. cdc.apply_latest_state)
     if (
-        source.groupBy(*key_cols)
+        source.groupBy(*keys)
         .count()
         .filter(F.col("count") > 1)
         .limit(1)
@@ -1290,15 +1294,15 @@ def merge_into(
     current = _read_state(spark, target, manifest, files, affected)
 
     s_side = source.select(
-        *key_cols, F.struct(*non_keys).alias("s"), F.lit(True).alias("__s")
+        *keys, F.struct(*vals).alias("s"), F.lit(True).alias("__s")
     )
     if current is None:
-        merged = s_side.select(*key_cols, "s", F.lit("ins").alias("__act"))
+        merged = s_side.select(*keys, "s", F.lit("ins").alias("__act"))
         if not when_not_matched_insert:
             merged = merged.filter(F.lit(False))
     else:
         t_side = current.select(
-            *key_cols, F.struct(*non_keys).alias("t"), F.lit(True).alias("__t")
+            *keys, F.struct(*vals).alias("t"), F.lit(True).alias("__t")
         )
         joined = t_side.join(s_side, key_cols, "full_outer")
         action = (
@@ -1342,22 +1346,22 @@ def merge_into(
             )
         types = {f.name: f.dataType for f in out_fields}
         row = [
-            F.when(F.col("__act") == "keep", F.col(f"t.{c}"))
-            .when(F.col("__act") == "ins", F.col(f"s.{c}"))
-            .when(F.col("__act") == "src", F.col(f"s.{c}"))
-            .otherwise(F.expr(upd_map.get(c, f"t.{c}")))
+            F.when(F.col("__act") == "keep", F.col(f"t.{q(c)}"))
+            .when(F.col("__act") == "ins", F.col(f"s.{q(c)}"))
+            .when(F.col("__act") == "src", F.col(f"s.{q(c)}"))
+            .otherwise(F.expr(upd_map.get(c, f"t.{q(c)}")))
             .cast(types[c])
             .alias(c)
             for c in non_keys
         ]
-        merged = merged.select(*key_cols, *row, F.col("__act"))
+        merged = merged.select(*keys, *row, F.col("__act"))
     if current is None:
-        merged = merged.select(*key_cols, "s.*")
+        merged = merged.select(*keys, "s.*")
     else:
         merged = merged.drop("__act")
     # restore the table's declared column order
     new_state = merged.select(
-        *[F.col(f.name) for f in out_fields]
+        *[F.col(q(f.name)) for f in out_fields]
     ).withColumn(BUCKET_COL, _bucket_of(key_cols, n_buckets))
     _check_constraints(
         new_state.drop(BUCKET_COL), _constraints(manifest), "merge_into state"
@@ -1512,13 +1516,10 @@ def table_changes(
         return new.withColumn(ct, F.lit("insert"))
     if new is None:
         return old.withColumn(ct, F.lit("delete"))
-    cols = new.columns
-    o = old.select(
-        *key_cols, F.struct(*cols).alias("o"), F.lit(True).alias("__o")
-    )
-    nw = new.select(
-        *key_cols, F.struct(*cols).alias("n"), F.lit(True).alias("__n")
-    )
+    keys = [F.col(cdc.quote_ident(k)) for k in key_cols]
+    cols = [F.col(cdc.quote_ident(c)) for c in new.columns]
+    o = old.select(*keys, F.struct(*cols).alias("o"), F.lit(True).alias("__o"))
+    nw = new.select(*keys, F.struct(*cols).alias("n"), F.lit(True).alias("__n"))
     j = o.join(nw, key_cols, "full_outer")
     inserts = j.filter(F.col("__o").isNull()).select("n.*").withColumn(
         ct, F.lit("insert")

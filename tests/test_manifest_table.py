@@ -2144,3 +2144,64 @@ def test_sql_text_expressions_quote_column_names(spark, tmp_path):
         assert got == {k: state[k] for k in probe if k in state}, n
     deltas = [len(mt._read_manifest(spark, target, v)["deltas"]) for v in range(1, 7)]
     assert deltas == [0, 1, 2, 3, 4, 0]
+
+
+def test_merge_into_and_table_changes_quote_column_names(spark, tmp_path):
+    """merge_into (new table, then update/delete/insert clauses) and
+    table_changes take key and value columns whose names need
+    backticks, and match a dict model."""
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, LongType, StringType, StructField, StructType)
+
+    keys = ["acct id", "order"]
+    schema = StructType([StructField("acct id", LongType()),
+                         StructField("order", IntegerType()),
+                         StructField("amount", DoubleType()),
+                         StructField("x`y", StringType())])
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(a, a % 3, amt, f"{a}`") for a, amt in rows], schema)
+
+    def snapshot(version):
+        return {(r["acct id"], r["order"]): (r["amount"], r["x`y"])
+                for r in mt.read_snapshot(spark, target, version).collect()}
+
+    target = str(tmp_path / "t")
+    v1 = {(a, a % 3): (float(a), f"{a}`") for a in range(10)}
+    assert mt.merge_into(frame([(a, float(a)) for a in range(10)]), target,
+                         keys, n_buckets=4) == 1
+    assert snapshot(1) == v1
+
+    # 0-2 updated, 3 deleted (negative amount), 10-11 inserted, rest kept
+    src = [(0, 5.0), (1, 5.0), (2, 5.0), (3, -1.0), (10, 10.0), (11, 11.0)]
+    assert mt.merge_into(
+        frame(src), target, keys,
+        when_matched_update={"amount": "t.amount + s.amount",
+                             "x`y": "concat(t.`x``y`, s.`x``y`)"},
+        when_matched_delete="s.amount < 0",
+    ) == 2
+    v2 = dict(v1)
+    for a, amt in src:
+        k = (a, a % 3)
+        if k not in v1:
+            v2[k] = (amt, f"{a}`")
+        elif amt < 0:
+            del v2[k]
+        else:
+            v2[k] = (v1[k][0] + amt, f"{a}`{a}`")
+    assert snapshot(2) == v2
+
+    want = set()
+    for k in v1.keys() | v2.keys():
+        if k not in v2:
+            want.add((k, v1[k], "delete"))
+        elif k not in v1:
+            want.add((k, v2[k], "insert"))
+        elif v1[k] != v2[k]:
+            want |= {(k, v1[k], "update_preimage"),
+                     (k, v2[k], "update_postimage")}
+    got = [((r["acct id"], r["order"]), (r["amount"], r["x`y"]),
+            r["_change_type"])
+           for r in mt.table_changes(spark, target, keys, 1, 2).collect()]
+    assert sorted(got) == sorted(want)

@@ -8,7 +8,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from end_end_data_pipeline__spark.session import session_parallelism
+from end_end_data_pipeline__spark.session import (
+    codegen_compiles, session_parallelism)
 from end_end_data_pipeline__spark.sources import lake
 from tests.conftest import SF_SMOKE
 
@@ -52,6 +53,25 @@ def test_changelog_checkpointing_is_the_session_default(spark):
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled"
     ) == "true"
+
+
+def test_codegen_cache_outlives_more_than_100_classes(spark):
+    """A generated class compiles once per JVM, not once per visit:
+    after 120 other classes (Spark's default cache holds 100) the first
+    query runs again without a compile."""
+
+    def run(i):
+        spark.range(8).selectExpr(f"id * {i} + {i} AS x").write.format(
+            "noop").mode("overwrite").save()
+
+    run(1)
+    before = codegen_compiles(spark)[0]
+    for i in range(2, 62):  # 2 classes each
+        run(i)
+    after = codegen_compiles(spark)[0]
+    assert after - before > 100
+    run(1)
+    assert codegen_compiles(spark)[0] == after
 
 
 def test_phash_repartition_width_is_conf_driven(spark):
