@@ -66,10 +66,11 @@ to, so no manifest payload crosses py4j — a py4j reply of 16 KB or
 more stalls about 45 ms (an 8 KB one takes 1 ms), which a 37 KB
 manifest paid on every ``_open``, and the gateway commands of a
 listing grew with the version count.  Only the commit point stays on
-the Hadoop FS: the ``exists`` check and the ``rename``.  The delta's
-plan is one window expression and one SQL projection, not a py4j
-round trip per ``Column`` node.  Supported stores are the local
-filesystem and HDFS-like ones — what both the Hadoop FS (commit
+the Hadoop FS: the ``exists`` check and the ``rename``.  The plans of
+a delta commit and of a fold are SQL text (window expressions and
+projections), not a py4j round trip per ``Column`` node, so their
+driver work barely grows with the column count.  Supported stores are
+the local filesystem and HDFS-like ones — what both the Hadoop FS (commit
 rename) and ``pyarrow.fs`` (manifests, new-file listing, footers)
 open.
 
@@ -105,11 +106,13 @@ and commits through ``_commit_state`` (bucket-rewriting),
 
 Readers pin a manifest version → snapshot isolation and time travel
 for free (``read_snapshot(..., version=K)``).  ``vacuum`` drops data
-dirs unreferenced by the kept manifests' base files and deltas.  The
-manifest carries the table schema, so an empty committed state (a merge that deleted every
-key) reads back as an empty DataFrame, not an error, and point lookups
-hash keys with the TABLE's column types (Spark's ``xxhash64`` is
-type-sensitive: a long hashes differently from an int, so bucketing
+dirs unreferenced by the kept manifests' base files and deltas.  Every
+manifest carries the table's schema, key columns and bucket count, and
+every reader takes them from it (a manifest lacking one is refused,
+never inferred around): an empty committed state (a merge that deleted
+every key) reads back as an empty DataFrame, not an error, and point
+lookups hash keys with the TABLE's column types (Spark's ``xxhash64``
+is type-sensitive: a long hashes differently from an int, so bucketing
 inferred-type Python literals directly could silently prune to the
 wrong buckets).
 """
@@ -164,6 +167,32 @@ def _bucket_of(key_cols: list[str], n_buckets: int) -> Column:
     return F.expr(_bucket_sql(key_cols, n_buckets))
 
 
+def _delta_frame(
+    batch: DataFrame,
+    schema: StructType,
+    key_cols: list[str],
+    version_col: str,
+    new_v: int,
+    n_buckets: int,
+) -> DataFrame:
+    """A decoded change ``batch`` as the rows of a delta committed at
+    ``new_v``: its latest change per key, tombstones kept, as
+    ``schema``'s flat columns (the keys from the change row — a
+    delete's after-image is null — the rest from the after-image),
+    ``_DELTA_OP``, ``_DELTA_V`` and the bucket id.  One window
+    expression and one SQL projection."""
+    q = cdc.quote_ident
+    return cdc.latest_change_per_key(batch, key_cols, version_col).selectExpr(
+        *[
+            q(f.name) if f.name in key_cols else f"after.{q(f.name)} AS {q(f.name)}"
+            for f in schema.fields
+        ],
+        f"op AS {_DELTA_OP}",
+        f"CAST({new_v} AS BIGINT) AS {_DELTA_V}",
+        f"CAST({_bucket_sql(key_cols, n_buckets)} AS INT) AS {BUCKET_COL}",
+    )
+
+
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     return _jpath(jvm, path).getFileSystem(spark._jsc.hadoopConfiguration()), jvm
@@ -198,11 +227,22 @@ def _read_manifest(spark: SparkSession, target: str, version: int) -> dict:
         return json.loads(stream.read())
 
 
-def _manifest_schema(manifest: dict | None) -> StructType | None:
-    """The table schema persisted at commit time (None for pre-schema
-    manifests and for a table not created yet)."""
-    sj = (manifest or {}).get("schema")
-    return StructType.fromJson(sj) if sj else None
+def _manifest_schema(manifest: dict) -> StructType:
+    """The table schema persisted at commit time."""
+    return StructType.fromJson(manifest["schema"])
+
+
+def _checked(manifest: dict, target: str, v: int) -> dict:
+    """``manifest`` (version ``v``), refused unless it carries the
+    table's schema and layout: every commit records them, and every
+    read takes them from here instead of inferring."""
+    missing = [k for k in ("schema", "key_cols", "n_buckets") if manifest.get(k) is None]
+    if missing:
+        raise ValueError(
+            f"manifest v{v} of {target!r} lacks {missing} — not a "
+            "manifest-table commit this engine can read"
+        )
+    return manifest
 
 
 def _open(
@@ -218,7 +258,8 @@ def _open(
     instead picks the newest version committed at-or-before that
     wall-clock time (versions from before commit times were recorded
     never match).  ``missing_ok`` lets a writer create the table:
-    ``([], 0, None)`` when nothing is committed yet."""
+    ``([], 0, None)`` when nothing is committed yet.  A manifest
+    without the table's schema and layout is refused (``_checked``)."""
     versions = list_versions(spark, target)
     if not versions:
         if missing_ok:
@@ -240,11 +281,12 @@ def _open(
             raise FileNotFoundError(
                 f"no version of {target!r} committed at or before {as_of}"
             )
-        return versions, eligible[-1], manifests[eligible[-1]]
+        v = eligible[-1]
+        return versions, v, _checked(manifests[v], target, v)
     v = version if version is not None else versions[-1]
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions}")
-    return versions, v, _read_manifest(spark, target, v)
+    return versions, v, _checked(_read_manifest(spark, target, v), target, v)
 
 
 def read_snapshot(
@@ -259,25 +301,26 @@ def read_snapshot(
     ``as_of`` (datetime or epoch seconds) instead picks the newest
     version committed at-or-before that wall-clock time — TIMESTAMP AS
     OF time travel."""
-    _, v, manifest = _open(spark, target, version, as_of)
-    return _snapshot(spark, target, v, manifest)
+    _, _, manifest = _open(spark, target, version, as_of)
+    return _snapshot(spark, target, manifest)
 
 
-def _snapshot(
-    spark: SparkSession, target: str, v: int, manifest: dict
-) -> DataFrame:
-    """Version ``v``'s state from its already-read ``manifest``."""
+def _snapshot(spark: SparkSession, target: str, manifest: dict) -> DataFrame:
+    """The state of an already-read ``manifest``'s version."""
     files = [f for fl in manifest["buckets"].values() for f in fl]
-    schema = _manifest_schema(manifest)
     # pinned to ITS version's schema (column order, and nulls for
     # columns newer files carry that this version's pre-evolution
     # files lack)
     state = _read_state(spark, target, manifest, files)
+    # a merge that deleted every key is a legitimate empty state
+    return _or_empty(spark, state, manifest)
+
+
+def _or_empty(spark: SparkSession, state: DataFrame | None, manifest: dict) -> DataFrame:
+    """``state``, or an empty frame of the manifest's schema when there
+    was nothing to read."""
     if state is None:
-        # a merge that deleted every key is a legitimate empty state
-        if schema is None:
-            raise FileNotFoundError(f"version {v} of {target!r} is empty")
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], _manifest_schema(manifest))
     return state
 
 
@@ -325,31 +368,10 @@ def _delta_rows(
     return rows
 
 
-def _as_changes(
-    base: DataFrame | None, deltas: DataFrame | None, key_cols: list[str]
-) -> DataFrame:
-    """Committed rows as change rows ``(key..., op, _DELTA_V, after)``:
-    base rows are creates at version 0, older than any delta; delta
-    rows keep their op and the version that committed them."""
-    q = cdc.quote_ident
-    parts = []
-    for rows, op, v in (
-        (base, "'c'", "CAST(0 AS BIGINT)"),
-        (deltas, _DELTA_OP, _DELTA_V),
-    ):
-        if rows is not None:
-            cols = [c for c in rows.columns if c not in (_DELTA_OP, _DELTA_V, BUCKET_COL)]
-            parts.append(rows.selectExpr(
-                *map(q, key_cols), f"{op} AS op", f"{v} AS {_DELTA_V}",
-                f"struct({', '.join(map(q, cols))}) AS after",
-            ))
-    return reduce(DataFrame.unionByName, parts)
-
-
 def _read_state(
     spark: SparkSession,
     target: str,
-    manifest: dict | None,
+    manifest: dict,
     files: list[str],
     buckets: list[str] | None = None,
     schema: StructType | None = None,
@@ -365,7 +387,7 @@ def _read_state(
     base = _read_files(spark, target, files, schema) if files else None
     if deltas is None:
         return base
-    key_cols, cols = manifest["key_cols"], schema.fieldNames()
+    key_cols = manifest["key_cols"]
     # pending deltas are few (under _FOLD_AT batch collapses, each one
     # file written by one task): resolve them in one partition, with no
     # shuffle — a delta holds one row per key, so the newest commit
@@ -373,56 +395,49 @@ def _read_state(
     # anti-join on the keys, so no base row is shuffled either (SQL
     # text: a py4j round trip per Column node would cost more than the
     # read of a few delta rows)
-    q = cdc.quote_ident
-    keys = ", ".join(map(q, key_cols))
-    live = (
-        deltas.coalesce(1)
-        .selectExpr(
-            *map(q, cols), _DELTA_OP,
-            f"row_number() OVER (PARTITION BY {keys} ORDER BY {_DELTA_V} DESC) AS __rn",
-        )
-        .filter(f"__rn = 1 AND {_DELTA_OP} != 'd'")
-        .selectExpr(*map(q, cols))
-    )
+    live = _newest(deltas.coalesce(1), key_cols)
     if base is None:
         return live
+    q = cdc.quote_ident
     held = deltas.selectExpr(*[f"{q(k)} AS {q('__held_' + k)}" for k in key_cols])
     on = F.expr(" AND ".join(f"{q(k)} <=> {q('__held_' + k)}" for k in key_cols))
     return base.join(held, on, "left_anti").unionByName(live)
 
 
+def _newest(rows: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Each key's row of the newest commit (``_DELTA_V``) in
+    delta-shaped ``rows`` (the table's columns, ``_DELTA_OP``,
+    ``_DELTA_V``, ``BUCKET_COL``; one row per key per commit),
+    tombstoned keys dropped, as the table's columns.  The SQL names
+    only the keys: its driver work does not grow with the columns."""
+    keys = ", ".join(map(cdc.quote_ident, key_cols))
+    return (
+        rows.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {keys} ORDER BY {_DELTA_V} DESC) AS __rn"
+        )
+        .filter(f"__rn = 1 AND {_DELTA_OP} != 'd'")
+        .drop(_DELTA_OP, _DELTA_V, BUCKET_COL, "__rn")
+    )
+
+
 def _read_files(
-    spark: SparkSession,
-    target: str,
-    rel_files: list[str],
-    schema: StructType | None = None,
+    spark: SparkSession, target: str, rel_files: list[str], schema: StructType
 ) -> DataFrame:
     """Read manifest-relative files spanning multiple ``data/v{N}``
-    dirs.  Each version dir is its own partition-discovery base (one
-    shared basePath would make Spark see conflicting ``v1``/``v2``
-    levels); the bucket partition column is dropped — manifests, not
-    directory layout, are the source of truth for bucket membership.
-    A ``schema`` (the committed one) is handed to the reader, so no job
-    infers it from the footers, and files written before a column was
-    added read back with nulls for it.  Without one (pre-schema
-    manifests) the reader infers, and ``allowMissingColumns`` fills
-    the columns older version dirs lack."""
+    dirs with the committed ``schema``: no job infers it from the
+    footers, and files written before a column was added read back
+    with nulls for it.  Each version dir is its own partition-discovery
+    base (one shared basePath would make Spark see conflicting
+    ``v1``/``v2`` levels); the bucket partition column is dropped —
+    manifests, not directory layout, are the source of truth for bucket
+    membership."""
     by_vdir: dict[str, list[str]] = {}
     for f in rel_files:
         vdir = "/".join(f.split("/")[:2])  # data/vN
         by_vdir.setdefault(vdir, []).append(f"{target}/{f}")
-    file_schema = (
-        None
-        if schema is None
-        else StructType([*schema.fields, StructField(BUCKET_COL, IntegerType())])
+    reader = spark.read.schema(
+        StructType([*schema.fields, StructField(BUCKET_COL, IntegerType())])
     )
-
-    def read(vdir: str, fl: list[str]) -> DataFrame:
-        reader = spark.read.option("basePath", f"{target}/{vdir}")
-        if file_schema is not None:
-            reader = reader.schema(file_schema)
-        return reader.parquet(*fl).drop(BUCKET_COL)
-
     # the manifest names every file, so Spark's listing is one status
     # call per file: cheaper on the driver than the listing job (a task
     # per path) it launches past 32 paths
@@ -430,11 +445,12 @@ def _read_files(
         spark, "spark.sql.sources.parallelPartitionDiscovery.threshold",
         str(len(rel_files)),
     ):
-        parts = [read(vdir, fl) for vdir, fl in sorted(by_vdir.items())]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+        # one reader: each part sets its own basePath before its read
+        parts = [
+            reader.option("basePath", f"{target}/{vdir}").parquet(*fl).drop(BUCKET_COL)
+            for vdir, fl in sorted(by_vdir.items())
+        ]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def read_keys(
@@ -451,25 +467,23 @@ def read_keys(
     the lakehouse stand-in for the reference's primary-key index.
     Pending deltas are read in one scan, filtered to those buckets.
     ``n_buckets`` must match the table's layout."""
-    _, v, manifest = _open(spark, target, version)
+    _, _, manifest = _open(spark, target, version)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
-    schema = _manifest_schema(manifest)
     # one slice: the default slices a dozen keys over defaultParallelism
     # partitions, a task each in the bucket-set job and the broadcast
     key_df = spark.createDataFrame(
         spark.sparkContext.parallelize(keys, 1),
         spark._inferSchemaFromList(keys, names=key_cols),
     )
-    if schema is not None:
-        # pin the probe keys to the TABLE's column types before hashing
-        # — xxhash64(int) != xxhash64(long), so inferred-literal types
-        # would silently prune to the wrong buckets
-        table_types = {f.name: f.dataType for f in schema.fields}
-        q = cdc.quote_ident
-        key_df = key_df.selectExpr(*[
-            f"CAST({q(k)} AS {table_types[k].simpleString()}) AS {q(k)}"
-            for k in key_cols
-        ])
+    # pin the probe keys to the TABLE's column types before hashing —
+    # xxhash64(int) != xxhash64(long), so inferred-literal types would
+    # silently prune to the wrong buckets
+    table_types = {f.name: f.dataType for f in _manifest_schema(manifest).fields}
+    q = cdc.quote_ident
+    key_df = key_df.selectExpr(*[
+        f"CAST({q(k)} AS {table_types[k].simpleString()}) AS {q(k)}"
+        for k in key_cols
+    ])
     wanted = sorted(_bucket_set(key_df, key_cols, n_buckets))
     files = [
         f for b, fl in manifest["buckets"].items() if b in wanted for f in fl
@@ -478,20 +492,7 @@ def read_keys(
     if state is None:
         # none of the touched buckets exist → empty result, table schema
         # straight from the manifest (no file listing / footer reads)
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        all_files = [f for fl in manifest["buckets"].values() for f in fl]
-        if not all_files:
-            raise FileNotFoundError(
-                f"version {v} of {target!r} is empty and pre-dates "
-                "manifest schemas — cannot derive a result schema"
-            )
-        # pre-schema fallback: one file is enough for the schema
-        return (
-            _read_files(spark, target, all_files[:1])
-            .limit(0)
-            .join(key_df, key_cols, "inner")
-        )
+        return spark.createDataFrame([], _manifest_schema(manifest))
     return state.join(F.broadcast(key_df), key_cols, "inner")
 
 
@@ -803,22 +804,9 @@ def read_where(
     across the kept files and the deltas, and only then is the
     predicate applied (a pruned file's rows cannot match, and a delta
     row that does is newer than any of them)."""
-    _, v, manifest = _open(spark, target, version)
-    schema = _manifest_schema(manifest)
-    kept = prune_files(manifest, conjuncts)
-
-    def residual(df: DataFrame) -> DataFrame:
-        return df.filter(_conjunct_pred(conjuncts))
-
-    state = _read_state(spark, target, manifest, kept)
-    if state is None:
-        if schema is None:
-            raise FileNotFoundError(
-                f"version {v} of {target!r} pre-dates manifest schemas — "
-                "cannot derive an empty result schema"
-            )
-        return residual(spark.createDataFrame([], schema))
-    return residual(state)
+    _, _, manifest = _open(spark, target, version)
+    state = _read_state(spark, target, manifest, prune_files(manifest, conjuncts))
+    return _or_empty(spark, state, manifest).filter(_conjunct_pred(conjuncts))
 
 
 def merge_versioned(
@@ -840,11 +828,13 @@ def merge_versioned(
     On an existing table the batch commits as a delta (see the module
     docstring): one file, no bucket rewritten.  A commit that would
     leave ``_FOLD_AT`` pending deltas, and the first commit of a new
-    table, rewrite the affected buckets instead: the batch's buckets
-    and every pending delta's are read back as change rows (base rows
-    before every delta, the batch after both) and one window pass
-    resolves everything.  Existing files are never modified — a crash
-    at any point leaves the previous version fully intact and visible.
+    table, rewrite the affected buckets instead (a fold): the batch,
+    collapsed as for a delta, joins the pending deltas as the newest
+    one and the base rows of the batch's and the deltas' buckets as the
+    oldest (commit 0), all flat rows of the delta-file shape in the
+    batch's columns, and one window keeps each key's newest commit.
+    Existing files are never modified — a crash at any point leaves
+    the previous version fully intact and visible.
     ``n_buckets`` may be omitted on an existing table (the committed
     layout is used); a mismatching value is refused (see
     ``_resolve_n_buckets``)."""
@@ -854,13 +844,12 @@ def merge_versioned(
     _check_key_cols(manifest, key_cols, target)
     # the batch's after-struct fields: the table's columns after this
     # commit (schema evolution target)
-    after_fields = batch.schema["after"].dataType.fields
-    schema = _manifest_schema(manifest)
-    if schema is not None:
+    schema = StructType(batch.schema["after"].dataType.fields)
+    if manifest is not None:
+        table_types = {f.name: f.dataType for f in _manifest_schema(manifest).fields}
         # xxhash64 is type-sensitive: a batch whose key columns
         # drifted (int vs long) would bucket to different ids than
         # the committed layout — refuse loudly, never merge wrong
-        table_types = {f.name: f.dataType for f in schema.fields}
         for k in key_cols:
             bt = batch.schema[k].dataType
             if bt != table_types[k]:
@@ -874,7 +863,7 @@ def merge_versioned(
         # (existing rows read back null for them); dropping or
         # retyping existing columns is refused — a latest-wins
         # merge with partial rows would silently null data
-        batch_types = {f.name: f.dataType for f in after_fields}
+        batch_types = {f.name: f.dataType for f in schema.fields}
         missing = sorted(set(table_types) - set(batch_types))
         if missing:
             raise ValueError(
@@ -890,49 +879,33 @@ def merge_versioned(
                     f"in {target!r} — type changes need a rewrite"
                 )
     new_v = current_v + 1
+    # the batch as a delta's rows.  Onto an existing table it is a
+    # micro-batch, collapsed in one task with no shuffle; a new table's
+    # first batch collapses in parallel
+    changes = _delta_frame(
+        batch.coalesce(1) if manifest else batch, schema, key_cols,
+        version_col, new_v, n_buckets,
+    )
     if manifest is not None and len(_pending(manifest)) + 1 < _FOLD_AT:
-        return _commit_delta(
-            spark, target, manifest, new_v, batch, key_cols, version_col,
-            n_buckets,
-        )
+        return _commit_delta(spark, target, manifest, new_v, changes, len(schema))
     affected, files = _touched(spark, manifest, batch, key_cols, n_buckets)
-    order = version_col
-    all_changes = batch
+    # the fold: the batch joins the pending deltas as the newest delta
+    # and the base rows as the oldest (commit 0), and the newest commit
+    # of each key wins, as on every read (one shuffle)
     if manifest is not None:
-        base = _read_files(spark, target, files, schema) if files else None
-        committed = _as_changes(
-            base, _delta_rows(spark, target, manifest, schema), key_cols
-        )
-        # order by (commit, version_col): the batch commits after every
-        # committed row.  The after-struct mirrors the BATCH's shape
-        # exactly (field order and any evolved new columns, null for
-        # rows that predate them) so the union is type-identical
-        order = "__order"
-        vtype = batch.schema[version_col].dataType
-        all_changes = batch.select(
-            *key_cols, "op",
-            F.struct(
-                F.lit(new_v).cast("long").alias("commit"),
-                F.col(cdc.quote_ident(version_col)).alias("v"),
-            ).alias(order),
-            "after",
-        ).unionByName(committed.select(
-            *key_cols, "op",
-            F.struct(
-                F.col(_DELTA_V).alias("commit"), F.lit(None).cast(vtype).alias("v")
-            ).alias(order),
-            F.struct(*[
-                (
-                    F.col("after")[f.name]
-                    if f.name in schema.fieldNames()
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in after_fields
-            ]).alias("after"),
-        ))
-    new_state = cdc.apply_latest_state(
-        all_changes, key_cols, version_col=order
-    ).withColumn(BUCKET_COL, _bucket_of(key_cols, n_buckets))
+        pending = _delta_rows(spark, target, manifest, schema)
+        if pending is not None:
+            changes = changes.unionByName(pending)
+        if files:
+            changes = changes.unionByName(
+                _read_files(spark, target, files, schema).selectExpr(
+                    "*", f"'c' AS {_DELTA_OP}", f"CAST(0 AS BIGINT) AS {_DELTA_V}",
+                    f"CAST(NULL AS INT) AS {BUCKET_COL}",
+                )
+            )
+    new_state = _newest(changes, key_cols).withColumn(
+        BUCKET_COL, _bucket_of(key_cols, n_buckets)
+    )
     _check_constraints(
         new_state.drop(BUCKET_COL), _constraints(manifest), "merge_versioned state"
     )
@@ -947,33 +920,18 @@ def _commit_delta(
     target: str,
     manifest: dict,
     new_v: int,
-    batch: DataFrame,
-    key_cols: list[str],
-    version_col: str,
-    n_buckets: int,
+    rows: DataFrame,
+    n_cols: int,
 ) -> int:
-    """Commit ``batch`` as one delta file: its latest change per key,
-    tombstones kept, as the table's columns plus ``_DELTA_OP``,
-    ``_DELTA_V`` (= ``new_v``) and the bucket id, sorted by bucket.
-    One Spark job, the write: the batch is coalesced to one partition,
-    which the collapse's window needs no shuffle for, and the delta's
-    bucket set rides the write as an observed metric.  The plan is one
-    window expression and one SQL projection, and the manifest carries
-    every base file and stat by reference.  Constraints, when the
-    table has any, are checked on the delta's non-delete rows."""
+    """Commit ``rows`` (a ``_delta_frame`` of a one-partition batch,
+    whose first ``n_cols`` columns are the table's) as one delta file,
+    sorted by bucket.  One Spark job, the write: the collapse's window
+    needs no shuffle on one partition, and the delta's bucket set rides
+    the write as an observed metric.  The manifest carries every base
+    file and stat by reference.  Constraints, when the table has any,
+    are checked on the delta's non-delete rows."""
     q = cdc.quote_ident
-    fields = batch.schema["after"].dataType.fields
-    latest = cdc.latest_change_per_key(batch.coalesce(1), key_cols, version_col)
-    rows = latest.selectExpr(
-        *[
-            q(f.name) if f.name in key_cols else f"after.{q(f.name)} AS {q(f.name)}"
-            for f in fields
-        ],
-        f"op AS {_DELTA_OP}",
-        f"CAST({new_v} AS BIGINT) AS {_DELTA_V}",
-        f"CAST({_bucket_sql(key_cols, n_buckets)} AS INT) AS {BUCKET_COL}",
-    )
-    schema = StructType(rows.schema.fields[: len(fields)])
+    schema = StructType(rows.schema.fields[:n_cols])
     constraints = _constraints(manifest)
     if constraints:
         _check_constraints(
@@ -1003,7 +961,6 @@ def _commit_delta(
             manifest, new_v, manifest["buckets"], manifest.get("stats"),
             "merge_versioned", schema=schema.jsonValue(),
             deltas=[*_pending(manifest), *written],
-            n_buckets=n_buckets, key_cols=key_cols,
         ),
     )
 
@@ -1110,17 +1067,17 @@ def _resolve_n_buckets(
     callers may omit it (None → the table's), and a mismatching
     explicit value is refused.  New tables default to 64.  Use
     :func:`rebucket` to change the layout."""
-    recorded = manifest.get("n_buckets") if manifest else None
-    if recorded is not None:
-        if n_buckets is not None and n_buckets != recorded:
-            raise ValueError(
-                f"n_buckets={n_buckets} does not match the committed "
-                f"layout of {target!r} (n_buckets={recorded}) — keys "
-                "would hash to different buckets, leaving stale "
-                "duplicates; use rebucket() to change the layout"
-            )
-        return int(recorded)
-    return n_buckets if n_buckets is not None else 64
+    if manifest is None:
+        return n_buckets if n_buckets is not None else 64
+    recorded = manifest["n_buckets"]
+    if n_buckets is not None and n_buckets != recorded:
+        raise ValueError(
+            f"n_buckets={n_buckets} does not match the committed "
+            f"layout of {target!r} (n_buckets={recorded}) — keys "
+            "would hash to different buckets, leaving stale "
+            "duplicates; use rebucket() to change the layout"
+        )
+    return int(recorded)
 
 
 def _check_key_cols(
@@ -1130,12 +1087,11 @@ def _check_key_cols(
     layout (it is what gets hashed): merging with different keys would
     leave the same logical row alive under two bucket ids.  The key
     set is recorded at commit time; a mismatching explicit key is
-    refused (tables committed before key recording pass silently)."""
-    recorded = manifest.get("key_cols") if manifest else None
-    if recorded is not None and list(recorded) != list(key_cols):
+    refused."""
+    if manifest is not None and manifest["key_cols"] != list(key_cols):
         raise ValueError(
             f"key_cols {key_cols} do not match the committed key "
-            f"{list(recorded)} of {target!r} — rows would hash to "
+            f"{manifest['key_cols']} of {target!r} — rows would hash to "
             "different buckets; rebucket() to change the key layout"
         )
 
@@ -1173,7 +1129,7 @@ def set_check_constraint(
     _, current_v, manifest = _open(spark, target)
     constraints = {**_constraints(manifest), name: expr}
     _check_constraints(
-        _snapshot(spark, target, current_v, manifest),
+        _snapshot(spark, target, manifest),
         {name: expr},
         f"existing state of {target!r}",
     )
@@ -1255,9 +1211,9 @@ def merge_into(
     _, current_v, manifest = _open(spark, target, missing_ok=True)
     n_buckets = _resolve_n_buckets(manifest, n_buckets, target)
     _check_key_cols(manifest, key_cols, target)
-    schema = _manifest_schema(manifest)
-    if schema is not None:
-        table_types = {f.name: f.dataType for f in schema.fields}
+    if manifest is not None:
+        out_fields = _manifest_schema(manifest).fields
+        table_types = {f.name: f.dataType for f in out_fields}
         src_types = {f.name: f.dataType for f in source.schema.fields}
         if src_types != table_types:
             raise TypeError(
@@ -1265,7 +1221,6 @@ def merge_into(
                 f"table schema {sorted(table_types)} of {target!r} "
                 "(names and types; bucket hashing is type-sensitive)"
             )
-        out_fields = schema.fields
     else:
         out_fields = source.schema.fields
     non_keys = [f.name for f in out_fields if f.name not in key_cols]
@@ -1291,7 +1246,7 @@ def merge_into(
             "collapse the source to one row per key first"
         )
     affected, files = _touched(spark, manifest, source, key_cols, n_buckets)
-    current = _read_state(spark, target, manifest, files, affected)
+    current = _read_state(spark, target, manifest, files, affected) if manifest else None
 
     s_side = source.select(
         *keys, F.struct(*vals).alias("s"), F.lit(True).alias("__s")
@@ -1422,30 +1377,20 @@ def compact(
         df = df.sortWithinPartitions(BUCKET_COL, *cluster_by)
     return _commit_state(
         spark, target, manifest, current_v + 1, df, over, "compact",
-        max_records_per_file, schema=manifest.get("schema"),
+        max_records_per_file, schema=manifest["schema"],
     )
 
 
 def _read_buckets(
     spark: SparkSession, target: str, manifest: dict, buckets: list[str]
 ) -> DataFrame:
-    """The committed rows of ``buckets`` with the bucket id pinned back
-    on as ``BUCKET_COL`` (a rewrite that keeps the keys keeps every row
-    in its bucket), read with the manifest's schema when it has one,
-    pending deltas applied."""
-    schema = _manifest_schema(manifest)
-    if _pending(manifest):
-        files = [f for b in buckets for f in manifest["buckets"].get(b, [])]
-        return _read_state(spark, target, manifest, files, buckets).withColumn(
-            BUCKET_COL, _bucket_of(manifest["key_cols"], manifest["n_buckets"])
-        )
-    parts = [
-        _read_files(spark, target, manifest["buckets"][b], schema).withColumn(
-            BUCKET_COL, F.lit(int(b))
-        )
-        for b in buckets
-    ]
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    """The committed rows of ``buckets``, pending deltas applied, with
+    the bucket id pinned back on as ``BUCKET_COL`` (a rewrite that
+    keeps the keys keeps every row in its bucket)."""
+    files = [f for b in buckets for f in manifest["buckets"].get(b, [])]
+    return _read_state(spark, target, manifest, files, buckets).withColumn(
+        BUCKET_COL, _bucket_of(manifest["key_cols"], manifest["n_buckets"])
+    )
 
 
 def table_changes(
@@ -1476,7 +1421,7 @@ def table_changes(
             f"change feed needs from_version < to_version, got "
             f"{from_version} >= {to_v}"
         )
-    m_from = _read_manifest(spark, target, from_version)
+    m_from = _checked(_read_manifest(spark, target, from_version), target, from_version)
     schema = _manifest_schema(m_to)
     # a bucket can differ only if its base files differ or a pending
     # delta holding rows of it is pending on one side only
@@ -1500,18 +1445,8 @@ def table_changes(
 
     old, new = side(m_from), side(m_to)
     ct = "_change_type"
-    if schema is None and (old is None or new is None):
-        raise FileNotFoundError(
-            f"{target!r} pre-dates manifest schemas — cannot type an "
-            "empty change feed"
-        )
-    empty = (
-        spark.createDataFrame([], schema).withColumn(ct, F.lit(""))
-        if schema is not None
-        else None
-    )
     if old is None and new is None:
-        return empty
+        return spark.createDataFrame([], schema).withColumn(ct, F.lit(""))
     if old is None:
         return new.withColumn(ct, F.lit("insert"))
     if new is None:
@@ -1550,13 +1485,13 @@ def rebucket(
     change the bucket count; merges and lookups refuse a mismatching
     explicit count (``_resolve_n_buckets``)."""
     _, current_v, manifest = _open(spark, target)
-    state = _snapshot(spark, target, current_v, manifest).withColumn(
+    state = _snapshot(spark, target, manifest).withColumn(
         BUCKET_COL, _bucket_of(key_cols, new_n_buckets)
     )
     return _commit_state(
         spark, target, manifest, current_v + 1,
         state.repartition(new_n_buckets, F.col(BUCKET_COL)), None,
-        f"rebucket:{new_n_buckets}", schema=manifest.get("schema"),
+        f"rebucket:{new_n_buckets}", schema=manifest["schema"],
         n_buckets=new_n_buckets, key_cols=key_cols,
     )
 
@@ -1596,16 +1531,6 @@ def vacuum(spark: SparkSession, target: str, keep_last: int = 2) -> list[int]:
     return drop
 
 
-def _dml_schema(manifest: dict, target: str) -> StructType:
-    schema = _manifest_schema(manifest)
-    if schema is None:
-        raise ValueError(
-            f"{target!r} pre-dates manifest schemas — DML needs the "
-            "committed schema to pin the rewrite"
-        )
-    return schema
-
-
 def _dml_rewrite(
     spark: SparkSession,
     target: str,
@@ -1625,7 +1550,6 @@ def _dml_rewrite(
     folded: their buckets are rewritten too.  With none pending, a
     conjunction no file can satisfy is a metadata no-op: the current
     version is returned and NOTHING is committed."""
-    _dml_schema(manifest, target)
     kept = set(prune_files(manifest, conjuncts))
     affected = sorted(
         {b for b, fl in manifest["buckets"].items() if any(f in kept for f in fl)}
@@ -1677,8 +1601,8 @@ def update_where(
     not in the schema are refused.  Returns the new version (current
     version for a stats-proven no-op)."""
     _, current_v, manifest = _open(spark, target)
-    types = {f.name: f.dataType for f in _dml_schema(manifest, target).fields}
-    recorded_keys = set(manifest.get("key_cols") or ())
+    types = {f.name: f.dataType for f in _manifest_schema(manifest).fields}
+    recorded_keys = set(manifest["key_cols"])
     for c in set_exprs:
         if c not in types:
             raise ValueError(f"unknown column {c!r} in {target!r}")

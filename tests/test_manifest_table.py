@@ -6,6 +6,7 @@ concurrency, and the checkpointed CDC stream into it (ST6/ST8)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -104,8 +105,9 @@ def test_merge_versioned_detects_concurrent_commit(spark, tmp_path, monkeypatch)
     target = str(tmp_path / "t")
     mt.merge_versioned(_batch(spark, [(1, 1.0, "c", 1)]), target, ["id"], n_buckets=2)
     monkeypatch.setattr(mt, "list_versions", lambda s, t: [1])  # stale read
+    racer = {**mt._read_manifest(spark, target, 1), "version": 2}
     with open(os.path.join(target, "manifest-v2.json"), "w") as f:
-        f.write('{"version": 2, "buckets": {}}')  # racing writer wins
+        json.dump(racer, f)  # racing writer wins
     with pytest.raises(RuntimeError, match="race"):
         mt.merge_versioned(
             _batch(spark, [(1, 2.0, "u", 2)]), target, ["id"], n_buckets=2
@@ -1820,8 +1822,6 @@ def test_large_manifest_round_trips_unchanged(spark, tmp_path):
     """A manifest far over the size that stalls a py4j reply is
     written and read back equal (a non-ASCII file name included), and
     a second commit of the same version still loses the race."""
-    import json
-
     target = str(tmp_path / "t")
     os.makedirs(target)
     files = [f"data/v1-abcd1234/p_bucket={b}/part-{i:05d}-é.parquet"
@@ -2205,3 +2205,110 @@ def test_merge_into_and_table_changes_quote_column_names(spark, tmp_path):
             r["_change_type"])
            for r in mt.table_changes(spark, target, keys, 1, 2).collect()]
     assert sorted(got) == sorted(want)
+
+
+def test_fold_gateway_calls_do_not_grow_with_columns(spark, tmp_path, monkeypatch):
+    """A merge_versioned fold's plan is SQL text: folding a 12-column
+    table costs the driver about as many py4j commands as folding a
+    2-column one (one command per Column node would grow with the
+    columns).  Only the folding thread's commands count: py4j's own
+    thread releases garbage-collected Java objects whenever the GC
+    runs."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    real, me = client.send_command, threading.current_thread()
+
+    def fold_commands(n_cols):
+        cols = [f"c{i}" for i in range(n_cols - 1)]
+        ddl = "id long, op string, ts_ms long, " + ", ".join(f"{c} double" for c in cols)
+
+        def batch(ids, ts):
+            df = spark.createDataFrame(
+                [(i, "u", ts, *[float(i + j) for j in range(len(cols))]) for i in ids], ddl)
+            return df.select("id", "op", "ts_ms", F.struct("id", *cols).alias("after"))
+
+        target = str(tmp_path / f"w{n_cols}")
+        mt.merge_versioned(batch(range(20), 1), target, ["id"], n_buckets=8)
+        for v in (2, 3, 4, 5):
+            mt.merge_versioned(batch([v, v + 20], v), target, ["id"])
+        fold = batch(range(10, 30), 6)
+        sent = []
+
+        def counting(*a, **k):
+            sent.append(threading.current_thread() is me)
+            return real(*a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            mt.merge_versioned(fold, target, ["id"])
+        assert mt._read_manifest(spark, target, 6)["deltas"] == []
+        got = {r["id"]: r["c0"] for r in mt.read_snapshot(spark, target).collect()}
+        assert got == {i: float(i) for i in range(30)}
+        return sum(sent)
+
+    two, twelve = fold_commands(2), fold_commands(12)
+    assert twelve <= 1.25 * two, (two, twelve)
+
+
+def test_manifest_without_schema_or_layout_is_refused(spark, tmp_path):
+    """Every commit records the schema, key columns and bucket count,
+    and readers take them from the manifest: a manifest that lacks any
+    of them is refused with a ValueError by every read and by a merge,
+    never read by inferring a schema."""
+    import time
+
+    target = str(tmp_path / "t")
+    mt.merge_versioned(_batch(spark, [(1, 1.0, "c", 1)]), target, ["id"], n_buckets=2)
+    m1 = mt._read_manifest(spark, target, 1)
+    for missing in (["schema"], ["key_cols"], ["n_buckets"],
+                    ["schema", "key_cols", "n_buckets"]):
+        bare = {k: v for k, v in m1.items() if k not in missing}
+        with open(os.path.join(target, "manifest-v2.json"), "w") as f:
+            json.dump({**bare, "version": 2, "committed_at": time.time()}, f)
+        def refused():
+            return pytest.raises(ValueError, match="lacks")
+
+        with refused():
+            mt.read_snapshot(spark, target)
+        with refused():
+            mt.read_snapshot(spark, target, as_of=time.time() + 1)
+        with refused():
+            mt.read_keys(spark, target, ["id"], [(1,)])
+        with refused():
+            mt.read_where(spark, target, [("amount", ">=", 0.0)])
+        with refused():
+            mt.merge_versioned(_batch(spark, [(1, 2.0, "u", 2)]), target, ["id"])
+        with refused():
+            mt.table_changes(spark, target, ["id"], 1)
+        assert mt.read_snapshot(spark, target, 1).collect()[0]["amount"] == 1.0
+    assert mt.list_versions(spark, target) == [1, 2]
+
+
+def test_table_column_named_op_survives_deltas_and_fold(spark, tmp_path):
+    """A table column may be named ``op`` like the change row's op:
+    delta files and the fold carry the change op as ``__op``, so a new
+    table, delta commits, the fold and the reads all keep the column."""
+    target = str(tmp_path / "t")
+
+    def batch(v, rows):  # rows: (id, change op, the table's "op" value)
+        df = spark.createDataFrame(
+            [(i, o, v, x) for i, o, x in rows], "id long, op string, ts_ms long, x string")
+        return df.select("id", "op", "ts_ms", F.when(
+            F.col("op") != "d", F.struct("id", F.col("x").alias("op"))).alias("after"))
+
+    def snapshot():
+        return {r["id"]: r["op"] for r in mt.read_snapshot(spark, target).collect()}
+
+    mt.merge_versioned(batch(1, [(i, "c", "a") for i in range(4)]), target, ["id"], n_buckets=2)
+    want = {i: "a" for i in range(4)}
+    for v in (2, 3, 4, 5):
+        mt.merge_versioned(batch(v, [(v - 2, "u", f"v{v}")]), target, ["id"])
+        want[v - 2] = f"v{v}"
+    assert len(mt._read_manifest(spark, target, 5)["deltas"]) == 4
+    assert snapshot() == want
+    mt.merge_versioned(batch(6, [(0, "u", "f"), (1, "d", None)]), target, ["id"])
+    assert mt._read_manifest(spark, target, 6)["deltas"] == []
+    want[0] = "f"
+    del want[1]
+    assert snapshot() == want
